@@ -109,7 +109,12 @@ def doc_triples(docs: DataFrame, mentions: DataFrame | None = None) -> DataFrame
     Pass a pre-pinned `mentions` frame (doc_mentions output, e.g.
     localCheckpointed) when the caller also references mentions elsewhere —
     Catalyst gives zero exchange reuse across self-join branches, so an
-    unpinned mention frame scans the corpus once per reference."""
+    unpinned mention frame scans the corpus once per reference.
+
+    Precondition on `mentions`: at most one row per (doc_id, term, label),
+    as doc_mentions produces. Each doc's mentions collapse to a SET before
+    counting, so a frame carrying repeated rows counts each doc once per
+    triple, not once per row: n_docs stays a document count."""
     m = mentions if mentions is not None else doc_mentions(docs)
     spark = docs.sparkSession
     pat = spark.createDataFrame(

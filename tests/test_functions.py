@@ -1026,3 +1026,39 @@ def test_token_entropy_known_answers(spark):
     assert out[2].sum_clnc == 3 * q3
     assert out[2].entropy_nats == round(math.log(4) - 3 * q3 / 4e5, 4)
     assert (out[2].n_tokens, out[2].n_distinct) == (4, 2)
+
+
+@pytest.mark.parametrize("vocab", [12, 200])  # dense bitmask path, general path
+def test_set_jaccard_pairs_reads_toks_as_sets(spark, vocab):
+    """Duplicated and unordered tokens must not change n, n_inter or which
+    docs share a set: the result equals Python set-Jaccard >= 1/2."""
+    import random
+
+    from medical_doc_knowledge_graph_system_spark.functions.dedup import set_jaccard_pairs
+
+    rnd = random.Random(vocab)
+    words = [f"w{i}" for i in range(vocab)]
+    bases = [rnd.sample(words, 8) for _ in range(4)]
+    rows = []
+    for doc_id in range(24):
+        toks = list(bases[doc_id % 4])
+        toks[rnd.randrange(8)] = rnd.choice(words)
+        toks += rnd.choices(toks, k=rnd.randrange(1, 5))  # repeats
+        rnd.shuffle(toks)
+        rows.append((doc_id, toks))
+    df = spark.createDataFrame(rows, "doc_id long, toks array<string>")
+    got = {
+        (r.doc_a, r.doc_b): (r.n_inter, r.n_a, r.n_b, r.jaccard)
+        for r in set_jaccard_pairs(df, t_num=1, t_den=2).collect()
+    }
+    sets = {d: set(t) for d, t in rows}
+    want = {}
+    for a in sets:
+        for b in sets:
+            o = len(sets[a] & sets[b])
+            if a < b and 2 * o >= len(sets[a]) + len(sets[b]) - o:
+                want[(a, b)] = (o, len(sets[a]), len(sets[b]))
+    assert want and set(got) == set(want)
+    for k, (o, na, nb) in want.items():
+        assert got[k][:3] == (o, na, nb)
+        assert got[k][3] == pytest.approx(o / (na + nb - o), abs=1e-4)

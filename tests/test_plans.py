@@ -795,3 +795,26 @@ def test_sim_pq_stays_jvm_side_and_broadcasts_codebook(spark):
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
     assert p.count("BroadcastHashJoin") >= 2
     assert p.count("Scan parquet") == 2
+
+
+def test_minhash_signatures_one_explode_one_shuffle(docs):
+    """Signatures hash every shingle occurrence inside the doc_id aggregate:
+    one shingle explode, no join back to a distinct-shingle hash dimension,
+    and a single hash shuffle on doc_id (ensure_parallelism's round-robin
+    repartition of the narrow scan is the only other exchange)."""
+    import re
+
+    from medical_doc_knowledge_graph_system_spark.functions.dedup import (
+        minhash_signatures,
+    )
+    from medical_doc_knowledge_graph_system_spark.plans.checks import (
+        physical_plan_string,
+    )
+
+    p = physical_plan_string(minhash_signatures(docs))
+    assert len(re.findall(r"\bGenerate\b", p)) == 1, p
+    assert "Join" not in p, p
+    exchanges = re.findall(r"Exchange (\w+)\(([^,)]*)", p)
+    hashed = [key for kind, key in exchanges if kind == "hashpartitioning"]
+    assert len(hashed) == 1 and hashed[0].startswith("doc_id#"), p
+    assert {kind for kind, _ in exchanges} <= {"hashpartitioning", "RoundRobinPartitioning"}, p
