@@ -146,16 +146,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["kg_remap_salted"] = kg_remap_salted
 
-    # C3 at the gate: DISTRIBUTED connected components (iterative min-label
-    # propagation — the >200k-edge production path, previously pytest-only)
-    # over the term triple graph; nodes are all mentioned terms so sparsely
-    # connected terms surface as their own components. comp = lexicographic
-    # min term of the component, matching the union-find oracle convention.
-    def kg_components(s, d):
-        from medical_doc_knowledge_graph_system_spark.operators.resolve import (
-            _cc_iterative,
-        )
-
+    def _kg_term_graph(s, d):
+        """(nodes(name), edges(a, b)): the term triple graph, a < b, no
+        self-loops; nodes are all mentioned terms, so sparsely connected
+        terms surface as their own components. Neither frame is made
+        distinct: both CC operators collapse repeated names and edges
+        themselves, and a distinct here would cost a shuffle each."""
         docs = _t(s, d, "documents")
         # one corpus scan total: the mention frame feeds the triple
         # self-join (2 refs) AND the node set (1 ref) — pin it
@@ -167,10 +163,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.greatest("subj", "obj").alias("b"),
             )
             .where(F.col("a") != F.col("b"))
-            .distinct()
         )
-        nodes = m.select(F.col("term").alias("name")).distinct()
-        return _cc_iterative(nodes, edges)
+        nodes = m.select(F.col("term").alias("name"))
+        return nodes, edges
+
+    # C3 at the gate: DISTRIBUTED connected components (iterative min-label
+    # propagation — the >200k-edge production path, previously pytest-only)
+    # over the term triple graph. comp = lexicographic min term of the
+    # component, matching the union-find oracle convention.
+    def kg_components(s, d):
+        from medical_doc_knowledge_graph_system_spark.operators.resolve import (
+            _cc_iterative,
+        )
+
+        return _cc_iterative(*_kg_term_graph(s, d))
 
     q["kg_components"] = kg_components
 
@@ -184,19 +190,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _cc_large_small_star,
         )
 
-        docs = _t(s, d, "documents")
-        m = webkg.doc_mentions(docs).localCheckpoint()
-        edges = (
-            webkg.doc_triples(docs, mentions=m)
-            .select(
-                F.least("subj", "obj").alias("a"),
-                F.greatest("subj", "obj").alias("b"),
-            )
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        nodes = m.select(F.col("term").alias("name")).distinct()
-        return _cc_large_small_star(nodes, edges)
+        return _cc_large_small_star(*_kg_term_graph(s, d))
 
     q["kg_components_star"] = kg_components_star
 

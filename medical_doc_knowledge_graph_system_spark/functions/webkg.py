@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import literal_frame
+
 # term -> label over the synthetic documents vocabulary
 WEB_GAZETTEER: dict[str, str] = {
     "join": "Operator",
@@ -80,8 +82,8 @@ def doc_mentions(docs: DataFrame) -> DataFrame:
     anywhere.
     """
     spark = docs.sparkSession
-    gaz = spark.createDataFrame(
-        sorted(WEB_GAZETTEER.items()), schema="term string, label string"
+    gaz = literal_frame(
+        spark, sorted(WEB_GAZETTEER.items()), "term string, label string"
     )
     from ..operators.skew import ensure_parallelism
 
@@ -117,8 +119,8 @@ def doc_triples(docs: DataFrame, mentions: DataFrame | None = None) -> DataFrame
     triple, not once per row: n_docs stays a document count."""
     m = mentions if mentions is not None else doc_mentions(docs)
     spark = docs.sparkSession
-    pat = spark.createDataFrame(
-        WEB_REL_PATTERNS, schema="src_label string, pred string, dst_label string"
+    pat = literal_frame(
+        spark, WEB_REL_PATTERNS, "src_label string, pred string, dst_label string"
     )
     # r6 (guide §2.3 "aggregate before you shuffle"): the per-doc pattern
     # self-join fanned out |docs| x |mentions/doc|^2 rows into the count.

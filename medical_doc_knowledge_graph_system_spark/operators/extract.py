@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 
 from ..corelib.extract import extract_chunk
 from ..corelib.gazetteer import REL_PATTERNS
+from ..session import literal_frame
 
 MENTION_SCHEMA = T.StructType(
     [
@@ -76,8 +77,8 @@ def derive_triples(mentions: DataFrame) -> DataFrame:
     identical to corelib.extract.extract_triples per chunk.
     """
     spark = mentions.sparkSession
-    patterns = spark.createDataFrame(
-        REL_PATTERNS, schema="src_label string, pred string, dst_label string"
+    patterns = literal_frame(
+        spark, REL_PATTERNS, "src_label string, pred string, dst_label string"
     )
     s = mentions.select(
         "chunk_id",

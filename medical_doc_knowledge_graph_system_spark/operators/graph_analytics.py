@@ -9,9 +9,8 @@ as first-class operators:
 
 - ``pagerank``: power iteration expressed as join + aggregate per round,
   lineage kept flat with ``localCheckpoint`` (the GraphFrames/Pregel
-  shape). Degree skew is absorbed the same way as resolve._cc_iterative:
-  contributions are summed with a salted two-phase aggregate so a head
-  entity's neighbor list never funnels through one reducer.
+  shape). Contributions are summed with a salted two-phase aggregate so a
+  head entity's neighbor list never funnels through one reducer.
 - ``triangle_stats``: per-node triangle counts + local clustering
   coefficient via degree-ordered edge orientation (the MR "count triangles
   by wedge-closing on the oriented graph" algorithm). Orientation bounds

@@ -23,7 +23,7 @@ vertex set is *distinct names*, orders of magnitude smaller than mentions.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -34,6 +34,7 @@ from ..corelib.similarity import (
     semantic_match,
     simhash_band_keys,
 )
+from ..session import literal_frame
 
 
 # Exactly the characters Python str.strip() removes (str.isspace() == True),
@@ -74,8 +75,8 @@ def _semantic_ok(a: pd.Series, b: pd.Series) -> pd.Series:
 
 def alias_dim(spark) -> DataFrame:
     """The alias dictionary as a (alias_key, alias_canonical) dimension."""
-    return spark.createDataFrame(
-        sorted(ALIASES.items()), schema="alias_key string, alias_canonical string"
+    return literal_frame(
+        spark, sorted(ALIASES.items()), "alias_key string, alias_canonical string"
     )
 
 
@@ -116,7 +117,6 @@ def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     max_iter: int = 25,
-    num_partitions: int = 8,
     driver_threshold: int = 200_000,
 ) -> DataFrame:
     """nodes(name), edges(a,b) -> (name, comp).
@@ -125,9 +125,10 @@ def connected_components(
     LSH-blocked merge candidates — usually orders of magnitude smaller than
     the corpus. If edges fit under driver_threshold, solve exactly on the
     driver with the same union-find the oracle uses (zero drift, one job);
-    otherwise run distributed min-label propagation (GraphFrames-style
-    iterative join). Both paths produce identical components; the distributed
-    path is exercised directly in tests.
+    otherwise run distributed min-label propagation (_cc_iterative's
+    one-shuffle rounds). Both paths produce identical components, ignore
+    edges with an endpoint outside `nodes` and give one row per distinct
+    node name; the distributed path is exercised directly in tests.
     """
     n_edges = edges.limit(driver_threshold + 1).count()
     if n_edges <= driver_threshold:
@@ -142,6 +143,8 @@ def connected_components(
             return x
 
         for a, b in edge_rows:
+            if a not in parent or b not in parent:
+                continue  # endpoint outside `nodes`: ignored, as _cc_iterative
             ra, rb = find(a), find(b)
             if ra != rb:
                 parent[ra] = rb
@@ -157,76 +160,86 @@ def connected_components(
         return spark.createDataFrame(
             sorted(comp.items()), schema=f"name {t}, comp {t}"
         )
-    return _cc_iterative(nodes, edges, max_iter, num_partitions)
+    return _cc_iterative(nodes, edges, max_iter)
 
 
-def _cc_iterative(
-    nodes: DataFrame, edges: DataFrame, max_iter: int = 25, num_partitions: int = 8
-) -> DataFrame:
-    """Distributed CC by min-label propagation over DataFrame joins.
+def _cc_iterative(nodes: DataFrame, edges: DataFrame, max_iter: int = 25) -> DataFrame:
+    """Distributed CC by min-label propagation in Pregel-style rounds.
 
-    comp is the lexicographically smallest name in the component. Iterations
-    localCheckpoint to keep lineage flat (SURVEY §4.2.5); loop bound is a
-    safety net — merge components converge in O(diameter) steps. Each
-    iteration is 2 jobs: materialize new labels (with a per-row `changed`
-    flag folded in) + a convergence probe.
+    comp is the lexicographically smallest name in the component. Edges
+    with an endpoint outside `nodes` are ignored, and duplicate node names
+    give one output row each. The loop bound is a safety net: merge
+    components converge in O(diameter) rounds.
 
-    Algorithm choice: plain min-label propagation rather than
-    large-star/small-star. LS/SS wins on graphs with large-diameter
-    components (O(log n) rounds); entity-merge components are alias/variant
-    clusters with diameter ≲ 4, where min-propagation converges in the same
-    handful of rounds with half the joins per round. If a future corpus
-    produces chain-shaped components, swap this loop for LS/SS — the
-    interface (nodes, edges) -> (name, comp) is the only contract.
+    The vertex state (name, comp, nbrs, active) is pinned once: `edges`
+    mirrored in a single explode and collected per name, plus one self row
+    per node. A round is one shuffle and one job barrier: the neighbour
+    lists of the vertices whose label changed last round are exploded into
+    (nbr, comp) messages, unioned with the self rows, and one groupBy(name)
+    keeps min(comp), the self row's nbrs and the old comp. A label only
+    falls, so a vertex that did not change has already sent its current
+    label. Groups without a self row (messages to a name outside `nodes`)
+    are dropped. The number of changed labels is read from an Observation on
+    the round's eager localCheckpoint, so convergence costs no probe job.
+
+    No salt and no joins: min is algebraic, so map-side partial aggregation
+    caps a hub's reducer input at one row per map task (the argument
+    _cc_large_small_star also relies on). No repartition before the pins:
+    on Spark 4.1 a localCheckpoint drops hash partitioning, so a
+    repartition there only adds an exchange
+    (tests/test_plans.py::test_local_checkpoint_drops_hash_partitioning).
+
+    Algorithm choice: min-label propagation rather than large-star /
+    small-star. Entity-merge components are alias/variant clusters with
+    diameter ≲ 4, where this converges in a handful of one-shuffle rounds.
+    Chain-shaped components need _cc_large_small_star (O(log n) rounds);
+    the interface (nodes, edges) -> (name, comp) is the only contract.
     """
-    # pin the edge list BEFORE mirroring it: the union references `edges`
-    # twice and Catalyst reuses nothing across union branches, so an
-    # unpinned edge lineage (LSH self-join + verify UDF) would run twice
-    # just to build edges_bi. The pinned frame is the blocked candidate
-    # edge set — vocabulary-sized, tiny relative to the corpus.
-    e0 = edges.select("a", "b").localCheckpoint()
-    edges_bi = (
-        e0.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        .union(e0.select(F.col("b").alias("x"), F.col("a").alias("y")))
-        .repartition(num_partitions, "y")
-        .localCheckpoint()
+    t = dict(nodes.dtypes)["name"]
+    mirrored = edges.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("a").alias("name"), F.col("b").alias("nbr")),
+                F.struct(F.col("b").alias("name"), F.col("a").alias("nbr")),
+            )
+        )
     )
-    lbl = (
-        nodes.select("name", F.col("name").alias("comp"))
-        .repartition(num_partitions, "name")
+    state = (
+        mirrored.select("name", "nbr", F.lit(False).alias("__self"))
+        .unionByName(
+            nodes.select("name", F.lit(None).cast(t).alias("nbr"), F.lit(True).alias("__self"))
+        )
+        .groupBy("name")
+        .agg(F.collect_set("nbr").alias("nbrs"), F.max("__self").alias("__self"))
+        .where("__self")
+        .select("name", F.col("name").alias("comp"), "nbrs", F.lit(True).alias("active"))
         .localCheckpoint()
     )
     for _round in range(max_iter):
-        # salted two-phase min: a head entity (Zipf skew) has huge degree, so
-        # a plain groupBy("x") would funnel its whole neighbor list through
-        # one reducer (north_rule: salted entity-hash keys in union-find).
-        joined = edges_bi.join(lbl, edges_bi.y == lbl.name).withColumn(
-            "__salt", F.pmod(F.xxhash64("y"), F.lit(16))
+        msgs = state.where("active").select(
+            F.explode("nbrs").alias("name"),
+            "comp",
+            F.lit(None).cast(f"array<{t}>").alias("nbrs"),
+            F.lit(None).cast(t).alias("__old"),
         )
-        nbr = (
-            joined.groupBy("x", "__salt")
-            .agg(F.min("comp").alias("__pc"))
-            .groupBy("x")
-            .agg(F.min("__pc").alias("nbr_comp"))
-        )
-        new_lbl = (
-            lbl.join(nbr, lbl.name == nbr.x, "left")
-            .select(
-                "name",
-                F.least(F.col("comp"), F.coalesce("nbr_comp", "comp")).alias("comp"),
-                (F.coalesce("nbr_comp", "comp") < F.col("comp")).alias("changed"),
+        selfs = state.select("name", "comp", "nbrs", F.col("comp").alias("__old"))
+        obs = Observation()
+        state = (
+            msgs.unionByName(selfs)
+            .groupBy("name")
+            .agg(
+                F.min("comp").alias("comp"),
+                F.first("nbrs", ignorenulls=True).alias("nbrs"),
+                F.min("__old").alias("__old"),
             )
+            .where(F.col("nbrs").isNotNull())
+            .withColumn("active", F.col("comp") < F.col("__old"))
+            .observe(obs, F.count_if("active").alias("changed"))
+            .select("name", "comp", "nbrs", "active")
             .localCheckpoint()
         )
-        lbl = new_lbl.drop("changed")
-        # r6 (VERDICT #4): probe convergence every SECOND round — the probe
-        # is a full job barrier, propagation is idempotent at the fixpoint
-        # (an extra round leaves labels unchanged), so batching probes
-        # halves the per-round job count without changing the result.
-        if _round % 2 == 1 or _round == max_iter - 1:
-            changed = new_lbl.where("changed").limit(1).count()
-            if changed == 0:
-                break
+        if obs.get["changed"] == 0:
+            break
     else:
         # Returning partially-propagated labels would silently split
         # components (name_map drift vs the oracle's union-find) — fail loud.
@@ -235,11 +248,11 @@ def _cc_iterative(
             "a component has diameter > max_iter — raise max_iter or use "
             "_cc_large_small_star (O(log n) rounds on any diameter)"
         )
-    return lbl
+    return state.select("name", "comp")
 
 
 def _cc_large_small_star(
-    nodes: DataFrame, edges: DataFrame, max_iter: int = 50, num_partitions: int = 8
+    nodes: DataFrame, edges: DataFrame, max_iter: int = 50
 ) -> DataFrame:
     """Two-phase large-star / small-star CC — the O(log n)-round companion
     to _cc_iterative for LARGE-DIAMETER components (a chain of length d
@@ -294,7 +307,6 @@ def _cc_large_small_star(
         edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .repartition(num_partitions, "u")
         .localCheckpoint()
     )
     for i in range(max_iter):
@@ -320,6 +332,7 @@ def _cc_large_small_star(
     # fixpoint is a star forest: every non-center points at its component
     # min; centers (and isolated nodes) label themselves
     centers = E.groupBy("u").agg(F.min("v").alias("comp"))
+    nodes = nodes.select("name").distinct()  # one row per distinct name
     return nodes.join(centers, nodes.name == centers.u, "left").select(
         "name", F.coalesce("comp", "name").alias("comp")
     )

@@ -8,7 +8,19 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def _default_driver_mem() -> str:
+    """48g, or half the host's physical memory when that is smaller. In
+    local mode the driver JVM holds every executor, and G1 grows the heap
+    towards its cap rather than collecting: with a cap above physical
+    memory the OS kills the driver before the GC runs (a 4-core, 16 GB
+    host reached 15 GB RSS halfway through the test suite)."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(48 * 1024, phys_mb // 2)}m"
 
 
 def get_spark(
@@ -29,7 +41,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # accept HashPartitioning on a subset of the join keys for
@@ -44,3 +56,27 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def literal_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A small static table (code-level dictionary) as a JVM-only plan:
+    Range(1) + inline(array(struct(lit, ...), ...)).
+
+    `createDataFrame(list)` plans as `Scan ExistingRDD` over a Python RDD,
+    so every scan of it starts a Python worker job. This frame has no
+    Python in its plan. Use it for static dictionaries of a few hundred
+    rows at most: every value is a literal in the plan, so data-sized
+    results belong in `createDataFrame`."""
+    if not rows:
+        raise ValueError("literal_frame needs at least one row")
+    schema = T.StructType.fromDDL(ddl)
+    structs = [
+        F.struct(
+            *[
+                F.lit(v).cast(f.dataType).alias(f.name)
+                for v, f in zip(row, schema.fields, strict=True)
+            ]
+        )
+        for row in rows
+    ]
+    return spark.range(0, 1, 1, numPartitions=1).select(F.inline(F.array(*structs)))

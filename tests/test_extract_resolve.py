@@ -102,6 +102,29 @@ def test_gazetteer_labels_closed():
     assert set(GAZETTEER.values()) <= set(ENTITY_LABELS)
 
 
+def _min_label_oracle(names, pairs):
+    """Union-find ground truth for the CC contract: comp = the smallest
+    member; edges with an endpoint outside `names` are ignored."""
+    parent = {n: n for n in names}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a not in parent or b not in parent:
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+    comp_members = {}
+    for n in names:
+        comp_members.setdefault(find(n), []).append(n)
+    return {n: min(ms) for ms in comp_members.values() for n in ms}
+
+
 def test_distributed_cc_matches_driver_path(spark):
     """The iterative min-label-propagation CC must equal the driver
     union-find on the same graph (both paths of operators.resolve
@@ -178,24 +201,6 @@ def test_large_small_star_cc_matches_min_label_and_handles_chains(spark):
         _cc_large_small_star,
     )
 
-    def min_label_oracle(names, pairs):
-        parent = {n: n for n in names}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in pairs:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[ra] = rb
-        comp_members = {}
-        for n in names:
-            comp_members.setdefault(find(n), []).append(n)
-        return {n: min(ms) for ms in comp_members.values() for n in ms}
-
     rng = random.Random(5)
     names = [f"n{i:02d}" for i in range(30)]
     pairs = [
@@ -206,7 +211,7 @@ def test_large_small_star_cc_matches_min_label_and_handles_chains(spark):
     edges = spark.createDataFrame(pairs, "a string, b string")
     star = {r.name: r.comp for r in _cc_large_small_star(nodes, edges).collect()}
     it = {r.name: r.comp for r in _cc_iterative(nodes, edges).collect()}
-    assert star == it == min_label_oracle(names, pairs)
+    assert star == it == _min_label_oracle(names, pairs)
 
     # 60-node chain: diameter 59 — min-label propagation at its default
     # bound fail-louds; large-star/small-star converges in O(log n) rounds
@@ -218,3 +223,73 @@ def test_large_small_star_cc_matches_min_label_and_handles_chains(spark):
         _cc_iterative(cn, ce)
     star_chain = {r.name: r.comp for r in _cc_large_small_star(cn, ce).collect()}
     assert star_chain == {n: "c00" for n in chain_names}
+
+
+def _cc_both_paths(nodes, edges):
+    """(_cc_iterative rows, connected_components driver-path rows), each
+    sorted — both paths must honour the same contract."""
+    from medical_doc_knowledge_graph_system_spark.operators.resolve import (
+        _cc_iterative,
+        connected_components,
+    )
+
+    return (
+        sorted(tuple(r) for r in _cc_iterative(nodes, edges).collect()),
+        sorted(tuple(r) for r in connected_components(nodes, edges).collect()),
+    )
+
+
+def test_cc_ignores_edges_outside_nodes(spark):
+    """An edge whose endpoint is not a node contributes nothing: no row for
+    the stray endpoint, and its label does not leak into the component."""
+    nodes = spark.createDataFrame([("b",), ("c",), ("d",)], "name string")
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "z"), ("y", "z")], "a string, b string"
+    )
+    it, drv = _cc_both_paths(nodes, edges)
+    assert it == drv == [("b", "b"), ("c", "b"), ("d", "d")]
+
+
+def test_cc_duplicate_node_names_give_one_row_each(spark):
+    nodes = spark.createDataFrame(
+        [("a",), ("b",), ("a",), ("c",), ("c",), ("c",)], "name string"
+    )
+    edges = spark.createDataFrame([("b", "c")], "a string, b string")
+    it, drv = _cc_both_paths(nodes, edges)
+    assert it == drv == [("a", "a"), ("b", "b"), ("c", "b")]
+
+
+def test_cc_self_loops_duplicate_edges_isolated_and_bigint_names(spark):
+    """Self-loops and repeated (or mirrored) edges change nothing, isolated
+    nodes label themselves, and bigint ids keep their type end to end."""
+    ids = list(range(10, 0, -1))
+    pairs = [(9, 3), (3, 9), (9, 3), (3, 5), (5, 5), (7, 8), (8, 8), (10, 10)]
+    nodes = spark.createDataFrame([(i,) for i in ids], "name bigint")
+    edges = spark.createDataFrame(pairs, "a bigint, b bigint")
+    from medical_doc_knowledge_graph_system_spark.operators.resolve import (
+        _cc_iterative,
+    )
+
+    assert _cc_iterative(nodes, edges).dtypes == [("name", "bigint"), ("comp", "bigint")]
+    it, drv = _cc_both_paths(nodes, edges)
+    assert it == drv == sorted(_min_label_oracle(ids, pairs).items())
+    assert dict(it)[9] == 3 and dict(it)[8] == 7 and dict(it)[10] == 10
+
+
+def test_cc_hub_star_and_chains_match_union_find(spark):
+    """A 5,000-leaf hub (the skewed reducer key) with a chain hanging off
+    one leaf, plus a separate chain: the component minimum has to travel
+    the chain, through the hub and out to every leaf."""
+    leaves = [f"l{i:04d}" for i in range(5000)]
+    chain1 = [f"c{i}" for i in range(8)]
+    chain2 = [f"d{i}" for i in range(10)]
+    pairs = [("h", leaf) for leaf in leaves]
+    pairs += list(zip(chain1, chain1[1:])) + [(chain1[-1], leaves[-1])]
+    pairs += list(zip(chain2, chain2[1:]))
+    names = ["h"] + leaves + chain1 + chain2
+    nodes = spark.createDataFrame([(n,) for n in names], "name string")
+    edges = spark.createDataFrame(pairs, "a string, b string")
+    it, drv = _cc_both_paths(nodes, edges)
+    want = sorted(_min_label_oracle(names, pairs).items())
+    assert it == drv == want
+    assert {c for _, c in want} == {"c0", "d0"}

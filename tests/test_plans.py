@@ -4,9 +4,12 @@ pruning works — the plans we designed for, not just plans that pass."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
+from medical_doc_knowledge_graph_system_spark.corelib.gazetteer import ALIASES, REL_PATTERNS
 from medical_doc_knowledge_graph_system_spark.functions import webkg
 from medical_doc_knowledge_graph_system_spark.functions.textfns import with_token_stats
 from medical_doc_knowledge_graph_system_spark.plans.checks import (
@@ -818,3 +821,136 @@ def test_minhash_signatures_one_explode_one_shuffle(docs):
     hashed = [key for kind, key in exchanges if kind == "hashpartitioning"]
     assert len(hashed) == 1 and hashed[0].startswith("doc_id#"), p
     assert {kind for kind, _ in exchanges} <= {"hashpartitioning", "RoundRobinPartitioning"}, p
+
+
+def _cc_round_plans(spark, monkeypatch, nodes, edges):
+    """Run _cc_iterative under its own job group, recording the physical
+    plan of every localCheckpoint pin. Returns (plans, job count); plans[0]
+    is the vertex-state pin, the rest are one per round."""
+    from medical_doc_knowledge_graph_system_spark.operators.resolve import (
+        _cc_iterative,
+    )
+    from medical_doc_knowledge_graph_system_spark.plans.checks import (
+        physical_plan_string,
+    )
+
+    plans = []
+    df_cls = type(nodes)
+    pin = df_cls.localCheckpoint
+
+    def recording_pin(self, *args, **kwargs):
+        plans.append(physical_plan_string(self))
+        return pin(self, *args, **kwargs)
+
+    monkeypatch.setattr(df_cls, "localCheckpoint", recording_pin)
+    sc = spark.sparkContext
+    group = f"cc_rounds_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "cc rounds")
+    try:
+        _cc_iterative(nodes, edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    return plans, len(jobs)
+
+
+def _cc_test_graph(spark):
+    nodes = spark.range(0, 40).select(F.format_string("n%02d", "id").alias("name"))
+    edges = spark.range(0, 30).select(
+        F.format_string("n%02d", "id").alias("a"),
+        F.format_string("n%02d", (F.col("id") * 7 + 3) % 40).alias("b"),
+    )
+    return nodes, edges
+
+
+def test_cc_round_is_one_shuffle_no_join(spark, monkeypatch):
+    """Each min-label round is explode(nbrs) messages ∪ self rows and ONE
+    groupBy(name): a single Exchange with the partial min below it (the
+    map-side aggregate that caps a hub's reducer input), and no join."""
+    import re
+
+    plans, _ = _cc_round_plans(spark, monkeypatch, *_cc_test_graph(spark))
+    rounds = plans[1:]
+    assert rounds
+    for p in rounds:
+        assert len(re.findall(r"\bExchange\b", p)) == 1, p
+        assert "Join" not in p, p
+        assert p.index("Exchange") < p.index("partial_min"), p
+
+
+def test_cc_converging_run_issues_no_probe_job(spark, monkeypatch):
+    """Convergence is read from an Observation on each round's eager pin:
+    the job group holds at most 2 jobs per pin (AQE runs the shuffle map
+    stage and the pin's result stage as separate jobs), so no round pays
+    a separate count probe."""
+    plans, jobs = _cc_round_plans(spark, monkeypatch, *_cc_test_graph(spark))
+    assert len(plans) >= 3, len(plans)
+    assert jobs <= 2 * len(plans), (jobs, len(plans))
+
+
+def test_local_checkpoint_drops_hash_partitioning(spark):
+    """Why the CC loops do not repartition before a pin: on this Spark a
+    localCheckpoint does not keep the hash partitioning, so the groupBy
+    after it still plans an Exchange. If a Spark upgrade makes this fail,
+    pre-pin repartitions can pay off again."""
+    from medical_doc_knowledge_graph_system_spark.plans.checks import (
+        physical_plan_string,
+    )
+
+    df = spark.range(0, 100).select((F.col("id") % 7).alias("k"), "id")
+    pinned = df.repartition(8, "k").localCheckpoint()
+    p = physical_plan_string(pinned.groupBy("k").agg(F.count("id")))
+    assert "Exchange hashpartitioning" in p, p
+
+
+_LITERAL_DIMS = {
+    "webkg_gazetteer": (sorted(webkg.WEB_GAZETTEER.items()), "term string, label string"),
+    "webkg_patterns": (webkg.WEB_REL_PATTERNS, "src_label string, pred string, dst_label string"),
+    "extract_patterns": (REL_PATTERNS, "src_label string, pred string, dst_label string"),
+    "alias_dim": (sorted(ALIASES.items()), "alias_key string, alias_canonical string"),
+}
+
+
+@pytest.mark.parametrize("dim", list(_LITERAL_DIMS))
+def test_literal_frame_matches_ddl_and_rows(spark, dim):
+    """Each static dictionary built by literal_frame has the DDL's column
+    names and types and exactly the rows createDataFrame would hold."""
+    from medical_doc_knowledge_graph_system_spark.operators.resolve import alias_dim
+    from medical_doc_knowledge_graph_system_spark.session import literal_frame
+
+    rows, ddl = _LITERAL_DIMS[dim]
+    got = alias_dim(spark) if dim == "alias_dim" else literal_frame(spark, rows, ddl)
+    want = spark.createDataFrame(rows, ddl)
+    assert got.dtypes == want.dtypes
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert "ExistingRDD" not in plan_string(got)
+
+
+def test_literal_frame_rejects_empty_rows(spark):
+    from medical_doc_knowledge_graph_system_spark.session import literal_frame
+
+    with pytest.raises(ValueError):
+        literal_frame(spark, [], "term string, label string")
+
+
+def test_literal_dimensions_broadcast_without_python_scan(spark, docs):
+    """doc_mentions, doc_triples and derive_triples still broadcast-hash
+    join their static dictionary, and no dimension is a Python-RDD scan
+    (the inputs here are parquet- or Range-rooted, so any ExistingRDD
+    would be a dimension)."""
+    from medical_doc_knowledge_graph_system_spark.operators.extract import derive_triples
+    from medical_doc_knowledge_graph_system_spark.plans.checks import (
+        physical_plan_string,
+    )
+
+    mentions = spark.range(4).select(
+        F.lit("c1").alias("chunk_id"),
+        F.lit("u").alias("url"),
+        F.format_string("e%d", "id").alias("name"),
+        F.when(F.col("id") % 2 == 0, "Patient").otherwise("Condition").alias("label"),
+        F.lit(0.9).alias("confidence"),
+    )
+    for df in (webkg.doc_mentions(docs), webkg.doc_triples(docs), derive_triples(mentions)):
+        p = physical_plan_string(df)
+        assert "BroadcastHashJoin" in p, p
+        assert "ExistingRDD" not in p, p
