@@ -106,7 +106,7 @@ def mention_counts(docs: DataFrame) -> DataFrame:
 
 def doc_triples(docs: DataFrame, mentions: DataFrame | None = None) -> DataFrame:
     """Aggregated (subj, pred, obj, n_docs): pattern-join relation extraction
-    (broadcast pattern dim + per-doc self-join, the C5/derive_triples shape).
+    (broadcast pattern dim + per-doc self-join, the C5 shape).
 
     Pass a pre-pinned `mentions` frame (doc_mentions output, e.g.
     localCheckpointed) when the caller also references mentions elsewhere —

@@ -1,31 +1,35 @@
-"""Distributed extraction stage.
+"""Distributed extraction stage: one Arrow pass per chunk.
 
-Mention detection runs the shared corelib.extract scan inside an
-Arrow-batched mapInPandas (the reference's per-chunk LLM call,
+chunk_features runs the shared corelib.extract.extract_chunk (the oracle's
+own function) and, for the hash embedding backend, the batch embedder
+inside ONE Arrow-batched mapInPandas over (chunk_id, url, text). Per chunk
+it yields the embedding, the chunk's mentions and the chunk's triples as
+arrays of structs (the reference's per-chunk LLM call,
 app/ingestion/extractor.py:138-180, replaced by a deterministic gazetteer
 engine per SURVEY §2.I).
 
-Relation extraction is NOT a Python loop: it is a relational composition —
-  mentions ⋈ broadcast(REL_PATTERNS) ⋈ mentions  on (chunk_id, labels)
-which Catalyst plans as a broadcast join + a co-partitioned self-join.
-Equivalent to corelib.extract.extract_triples because a mention name
-determines its confidence (surface form -> confidence is a function), so
-max-over-pairs(min(c_s, c_o)) == min(max c_s, max c_o); pytest asserts
-set-equality against the oracle.
+Relation extraction runs in the same pass because triples are chunk-local:
+every triple pairs two mentions of one chunk, so deriving them where the
+mentions are found needs no self-join and no shuffle. Parity with the
+oracle is identity — the rows ARE extract_chunk's output.
+
+The pipeline pins the feature frame once; mention_rows, triple_rows and
+embedding_rows are JVM-only projections of that pin (inline / select).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from operator import itemgetter
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..corelib.extract import extract_chunk
-from ..corelib.gazetteer import REL_PATTERNS
-from ..session import literal_frame
+from .embed import _embed_matrix
 
 MENTION_SCHEMA = T.StructType(
     [
@@ -39,74 +43,95 @@ MENTION_SCHEMA = T.StructType(
     ]
 )
 
-_MCOLS = [f.name for f in MENTION_SCHEMA.fields]
+TRIPLE_SCHEMA = T.StructType(
+    [
+        T.StructField("chunk_id", T.StringType(), False),
+        T.StructField("url", T.StringType(), False),
+        T.StructField("subj", T.StringType(), False),
+        T.StructField("subj_label", T.StringType(), False),
+        T.StructField("pred", T.StringType(), False),
+        T.StructField("obj", T.StringType(), False),
+        T.StructField("obj_label", T.StringType(), False),
+        T.StructField("confidence", T.DoubleType(), False),
+    ]
+)
+
+# per-chunk rows carry no provenance keys: the feature row holds them once
+_MENTION_STRUCT = T.StructType(MENTION_SCHEMA.fields[2:])
+_TRIPLE_STRUCT = T.StructType(TRIPLE_SCHEMA.fields[2:])
 
 
-def _mention_batches_fn(open_vocab: bool):
-    def _mention_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _feature_schema(with_embedding: bool) -> T.StructType:
+    fields = MENTION_SCHEMA.fields[:2]
+    if with_embedding:
+        fields = fields + [T.StructField("embedding", T.ArrayType(T.FloatType()), False)]
+    return T.StructType(
+        fields
+        + [
+            T.StructField("mentions", T.ArrayType(_MENTION_STRUCT), False),
+            T.StructField("triples", T.ArrayType(_TRIPLE_STRUCT), False),
+        ]
+    )
+
+
+def _features_fn(open_vocab: bool, with_embedding: bool):
+    mention_row = itemgetter(*_MENTION_STRUCT.fieldNames())
+    triple_row = itemgetter(*_TRIPLE_STRUCT.fieldNames())
+
+    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows: list[dict] = []
+            mentions, triples = [], []
             for cid, url, text in zip(pdf["chunk_id"], pdf["url"], pdf["text"]):
-                mentions, _ = extract_chunk(cid, url, text, open_vocab=open_vocab)
-                rows.extend(mentions)
-            yield pd.DataFrame(rows, columns=_MCOLS)
+                ms, ts = extract_chunk(cid, url, text, open_vocab=open_vocab)
+                mentions.append([mention_row(m) for m in ms])
+                triples.append([triple_row(t) for t in ts])
+            out = pdf[["chunk_id", "url"]]
+            if with_embedding:
+                vecs = _embed_matrix(pdf["text"]).astype(np.float32)
+                out = out.assign(embedding=list(vecs))
+            yield out.assign(mentions=mentions, triples=triples)
 
-    return _mention_batches
+    return _features
 
 
-def extract_mentions(chunks: DataFrame, open_vocab: bool = False) -> DataFrame:
-    """chunks -> mentions(chunk_id, url, name, label, confidence, start_char, method).
+def chunk_features(
+    chunks: DataFrame, open_vocab: bool = False, with_embedding: bool = True
+) -> DataFrame:
+    """chunks -> (chunk_id, url, [embedding,] mentions, triples), one row
+    per chunk, from one mapInPandas.
 
-    Within-chunk (name, label) dedup keeps max confidence (reference:
-    entity_resolver.py:71-82). Empty chunks were already dropped by the
-    chunker (extractor.py:176-177 semantics). open_vocab=True adds the
-    corelib.ner capitalized-span channel (reference's LLM is open-vocabulary,
-    extractor.py:138-180) — the name dictionary then grows with the corpus
-    and resolution's distributed LSH+CC path becomes the production path.
-    """
+    mentions: array<struct<name, label, confidence, start_char, method>>,
+    deduplicated on (name, label) with max confidence within the chunk
+    (reference: entity_resolver.py:71-82). triples: array<struct<subj,
+    subj_label, pred, obj, obj_label, confidence>>, deduplicated on (subj,
+    pred, obj) with max confidence. Both are corelib.extract.extract_chunk's
+    rows. embedding (with_embedding=True): array<float>[EMBED_DIM], the
+    float32 cast of corelib.similarity.embed_name(text).
+
+    open_vocab=True adds the corelib.ner capitalized-span channel
+    (reference's LLM is open-vocabulary, extractor.py:138-180) — the name
+    dictionary then grows with the corpus and resolution's distributed
+    LSH+CC path becomes the production path. Empty chunks were already
+    dropped by the chunker (extractor.py:176-177 semantics).
+
+    Pin the frame (the pipeline caches it) and read it through the
+    projections below, so the Python pass runs once."""
     return chunks.select("chunk_id", "url", "text").mapInPandas(
-        _mention_batches_fn(open_vocab), schema=MENTION_SCHEMA
+        _features_fn(open_vocab, with_embedding), schema=_feature_schema(with_embedding)
     )
 
 
-def derive_triples(mentions: DataFrame) -> DataFrame:
-    """mentions -> triples via broadcast pattern join + chunk-local self-join.
+def embedding_rows(features: DataFrame) -> DataFrame:
+    """features -> (chunk_id, url, embedding): the chunk_embeddings table."""
+    return features.select("chunk_id", "url", "embedding")
 
-    Output: (chunk_id, url, subj, subj_label, pred, obj, obj_label, confidence)
-    deduplicated on (chunk_id, subj, pred, obj) with max confidence —
-    identical to corelib.extract.extract_triples per chunk.
-    """
-    spark = mentions.sparkSession
-    patterns = literal_frame(
-        spark, REL_PATTERNS, "src_label string, pred string, dst_label string"
-    )
-    s = mentions.select(
-        "chunk_id",
-        "url",
-        F.col("name").alias("subj"),
-        F.col("label").alias("subj_label"),
-        F.col("confidence").alias("s_conf"),
-    )
-    o = mentions.select(
-        F.col("chunk_id").alias("o_chunk_id"),
-        F.col("url").alias("o_url"),
-        F.col("name").alias("obj"),
-        F.col("label").alias("obj_label"),
-        F.col("confidence").alias("o_conf"),
-    )
-    # url joins alongside chunk_id — semantically redundant (chunk_id is a
-    # pure function of (url, chunk_idx)) but it lets a url-bucketed
-    # mentions_raw table co-locate this self-join with NO Exchange, and the
-    # following groupBy's keys ⊇ {url} reuse the same partitioning
-    return (
-        s.join(F.broadcast(patterns), s.subj_label == patterns.src_label)
-        .join(
-            o,
-            (F.col("chunk_id") == F.col("o_chunk_id"))
-            & (F.col("url") == F.col("o_url"))
-            & (F.col("obj_label") == F.col("dst_label"))
-            & (F.col("subj") != F.col("obj")),
-        )
-        .groupBy("chunk_id", "url", "subj", "subj_label", "pred", "obj", "obj_label")
-        .agg(F.max(F.least("s_conf", "o_conf")).alias("confidence"))
-    )
+
+def mention_rows(features: DataFrame) -> DataFrame:
+    """features -> mentions in MENTION_SCHEMA column order."""
+    return features.select("chunk_id", "url", F.inline("mentions"))
+
+
+def triple_rows(features: DataFrame) -> DataFrame:
+    """features -> triples in TRIPLE_SCHEMA column order: (chunk_id, url,
+    subj, subj_label, pred, obj, obj_label, confidence)."""
+    return features.select("chunk_id", "url", F.inline("triples"))

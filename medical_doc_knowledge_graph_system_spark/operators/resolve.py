@@ -364,19 +364,26 @@ def build_name_map(names: DataFrame, driver_threshold: int = 500_000) -> DataFra
     Hybrid execution (same rationale as connected_components): the input is
     the *distinct name dictionary*, not the mention stream. When it fits
     under driver_threshold, run the shared single-process resolution
-    (corelib.resolve.build_name_map — literally the oracle code) in 2 Spark
-    jobs; beyond that, the fully distributed LSH + CC path below. Identical
-    results by construction; the distributed path is exercised in tests via
-    build_name_map_distributed.
+    (corelib.resolve.build_name_map — literally the oracle code) on one
+    limit(driver_threshold + 1) fetch; beyond that, the fully distributed
+    LSH + CC path below. Identical results by construction; the distributed
+    path is exercised in tests via build_name_map_distributed.
+
+    The fetch is an Arrow toPandas, not a Row collect: above the threshold
+    its driver_threshold + 1 names are thrown away, and at 500,001 names
+    the Arrow fetch costs ~0.2 s over a bare count where a Row collect
+    costs ~2.5-3.5 s (4-core host).
     """
-    n = names.limit(driver_threshold + 1).count()
-    if n <= driver_threshold:
+    head = names.limit(driver_threshold + 1).toPandas()["name"].tolist()
+    if len(head) <= driver_threshold:
         from ..corelib.resolve import build_name_map as oracle_name_map
 
-        collected = [r.name for r in names.collect()]
-        nm = oracle_name_map(collected)
+        # a pandas frame plans as LocalTableScan: no Python task on any scan
+        # of the map (createDataFrame(list) is a Python-RDD scan)
+        nm = sorted(oracle_name_map(head).items())
         return names.sparkSession.createDataFrame(
-            sorted(nm.items()), schema="name string, canonical string"
+            pd.DataFrame(nm, columns=["name", "canonical"]),
+            schema="name string, canonical string",
         )
     return build_name_map_distributed(names)
 

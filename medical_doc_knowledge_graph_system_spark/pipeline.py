@@ -4,8 +4,14 @@ Stage graph (all lazy DataFrames; each stage materializes to the warehouse
 and records a checkpoint + per-partition metrics, so a killed job resumes
 from the last complete stage — north_rule resumability):
 
-  pages --repartition(url-hash)--> chunks --mapInPandas--> mentions_raw
-       --broadcast-pattern-join--> triples_raw
+  pages --repartition(url-hash)--> chunks
+  chunks --one mapInPandas, pinned (cached until triples_raw)--> features
+       (chunk_id, url, embedding, mentions[], triples[])
+  features --select--> chunk_embeddings ; --inline--> mentions_raw ;
+       --inline--> triples_raw   (JVM-only projections: triples are
+       chunk-local, so they come out of the pass that finds the mentions,
+       with no self-join and no shuffle; embed_backend="tfidf" embeds
+       JVM-side instead and the pass skips the embedding)
   distinct names --alias-broadcast + LSH + CC--> name_map
   mentions_raw/triples_raw --broadcast remap--> mentions / triples
   mentions --salted agg--> nodes ; triples --salted agg--> edges
@@ -21,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.chunk import chunk_pages
-from .operators.extract import derive_triples, extract_mentions
+from .operators.extract import chunk_features, embedding_rows, mention_rows, triple_rows
 from .operators.materialize import build_edges, build_nodes, build_provenance_edges
 from .operators.resolve import build_name_map, remap
 from .sources.warehouse import Warehouse
@@ -50,6 +56,10 @@ _PARTITION_BY = {"nodes": ["label"], "edges": ["rel_type"]}
 _SORT_WITHIN = {"chunks", "mentions", "mentions_raw", "triples", "triples_raw", "provenance_edges"}
 
 
+def _stage_done(wh: Warehouse, stage: str, resume: bool) -> bool:
+    return resume and wh.checkpoint_done(stage) and wh.exists(stage)
+
+
 def _run_stage(
     wh: Warehouse,
     spark: SparkSession,
@@ -58,9 +68,9 @@ def _run_stage(
     resume: bool,
     bucket_by_url: int = 0,
 ) -> None:
-    if resume and wh.checkpoint_done(stage) and wh.exists(stage):
+    if _stage_done(wh, stage, resume):
         return
-    t0 = time.time()
+    t0 = time.perf_counter()
     df = make()
     base = stage.split("__g")[0]
     if base in _SORT_WITHIN and bucket_by_url > 0 and "__g" not in stage:
@@ -70,7 +80,7 @@ def _run_stage(
         if base in _SORT_WITHIN:
             df = df.sortWithinPartitions("url")
         wh.write(df, stage, partition_by=_PARTITION_BY.get(stage))
-    wall_ms = (time.time() - t0) * 1000
+    wall_ms = (time.perf_counter() - t0) * 1000
     rows = wh.log_partition_metrics(spark, stage, stage)
     wh.mark_checkpoint(stage, "complete", rows, wall_ms)
 
@@ -150,7 +160,7 @@ def run_pipeline(
 
         for shard in _glob.glob(wh.path("chunks__g*")):
             wh.drop(os.path.basename(shard))
-    t_start = time.time()
+    t_start = time.perf_counter()
 
     # documents dim table (reference A4: Document node per doc_id with audit
     # metadata, app/graph/queries.py:9-16 — here a projection of pages)
@@ -180,39 +190,52 @@ def run_pipeline(
                 wh, spark, f"chunks__g{g}", lambda grp=grp: chunk_pages(grp), resume, bucket_by_url=bucket_by_url)
     chunks = wh.read(spark, "chunks")
 
-    from .operators.embed import embed_chunks
+    # one pinned Python pass yields embeddings, mentions and triples. It is
+    # built on first use, so a resume that skips all three stages never runs
+    # it, and the first stage's write fills it. A cache, not a
+    # localCheckpoint, so it can be released right after triples_raw: py4j
+    # frees a localCheckpoint's JVM handle only on Python's cyclic GC, and
+    # its blocks stayed in the JVM heap until then (measured with
+    # tools/heap_probe.py --mode pipeline).
+    features = None
 
-    embedder = None
-    if embed_backend == "tfidf" and not (
-        resume and wh.checkpoint_done("chunk_embeddings")
-    ):
-        # fit on the deduped page corpus (skipped entirely when resume will
-        # skip the embed stage anyway); at larger scales pass a sample —
-        # IDF weights converge long before the corpus is exhausted
+    def pinned_features() -> DataFrame:
+        nonlocal features
+        if features is None:
+            features = chunk_features(
+                chunks,
+                open_vocab=open_vocab,
+                with_embedding=embed_backend == "hash"
+                and not _stage_done(wh, "chunk_embeddings", resume),
+            ).persist()
+        return features
+
+    def make_embeddings():
+        if embed_backend == "hash":
+            return embedding_rows(pinned_features())
+        # tfidf: fit on the deduped page corpus (only when the stage runs);
+        # at larger scales pass a sample — IDF weights converge long before
+        # the corpus is exhausted
+        from .operators.embed import embed_chunks
         from .operators.embed_tfidf import fit_tfidf_embedder
 
-        embedder = fit_tfidf_embedder(pages, "text")
-    _run_stage(
-        wh,
-        spark,
-        "chunk_embeddings",
-        lambda: embed_chunks(chunks, embedder=embedder),
-        resume, bucket_by_url=bucket_by_url)
+        return embed_chunks(chunks, embedder=fit_tfidf_embedder(pages, "text"))
 
-    _run_stage(
-        wh,
-        spark,
-        "mentions_raw",
-        lambda: extract_mentions(chunks, open_vocab=open_vocab),
-        resume, bucket_by_url=bucket_by_url)
+    try:
+        _run_stage(wh, spark, "chunk_embeddings", make_embeddings, resume, bucket_by_url=bucket_by_url)
+        _run_stage(
+            wh, spark, "mentions_raw", lambda: mention_rows(pinned_features()), resume, bucket_by_url=bucket_by_url)
+        _run_stage(
+            wh, spark, "triples_raw", lambda: triple_rows(pinned_features()), resume, bucket_by_url=bucket_by_url)
+    finally:
+        if features is not None:
+            features.unpersist()
     mentions_raw = wh.read(spark, "mentions_raw")
-
-    _run_stage(wh, spark, "triples_raw", lambda: derive_triples(mentions_raw), resume, bucket_by_url=bucket_by_url)
     triples_raw = wh.read(spark, "triples_raw")
 
     def make_name_map():
-        # triples' subj/obj are mention names by construction (derive_triples
-        # is a self-join of mentions), so mentions_raw alone covers the
+        # triples' subj/obj are mention names by construction (extract_chunk
+        # pairs the chunk's mentions), so mentions_raw alone covers the
         # distinct-name dictionary — no need to scan triples_raw.
         return build_name_map(
             mentions_raw.select("name").distinct(),
@@ -239,7 +262,7 @@ def run_pipeline(
     _run_stage(
         wh, spark, "provenance_edges", lambda: build_provenance_edges(mentions), resume, bucket_by_url=bucket_by_url)
 
-    wall = time.time() - t_start
+    wall = time.perf_counter() - t_start
     # stage row counts from the checkpoint log (no extra count jobs)
     import json
 

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.chunk import chunk_pages
-from ..operators.extract import derive_triples, extract_mentions
+from ..operators.extract import chunk_features, mention_rows, triple_rows
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -71,16 +71,19 @@ def incremental_ingest(
             return
         chunks = chunk_pages(batch_df)
         chunks.persist()
-        mentions = extract_mentions(chunks)
-        mentions.persist()
-        triples = derive_triples(mentions)
+        features = chunk_features(chunks, with_embedding=False)
+        features.persist()
         # batch_id is stable across replays of the same epoch — overwrite of
         # the per-batch partition dir makes the replayed write a no-op
-        for df, table in ((chunks, "chunks"), (mentions, "mentions_raw"), (triples, "triples_raw")):
+        for df, table in (
+            (chunks, "chunks"),
+            (mention_rows(features), "mentions_raw"),
+            (triple_rows(features), "triples_raw"),
+        ):
             df.write.mode("overwrite").parquet(
                 os.path.join(warehouse_root, table, f"batch_id={batch_id}")
             )
-        mentions.unpersist()
+        features.unpersist()
         chunks.unpersist()
 
     stream = (
@@ -114,8 +117,8 @@ def compact_graph(spark: SparkSession, warehouse_root: str) -> dict:
     wh = Warehouse(warehouse_root)
     mentions_raw = wh.read(spark, "mentions_raw")
     triples_raw = wh.read(spark, "triples_raw")
-    # triples' subj/obj ⊆ mention names (derive_triples is a mentions
-    # self-join), so mentions_raw covers the dictionary
+    # triples' subj/obj ⊆ mention names (extract_chunk pairs a chunk's
+    # mentions), so mentions_raw covers the dictionary
     name_map = build_name_map(mentions_raw.select("name").distinct()).localCheckpoint()
     mentions = dedup_mentions(remap(mentions_raw, name_map, "name"))
     triples = remap(triples_raw, name_map, "subj", "obj")

@@ -49,8 +49,8 @@ def test_soap_strategy_pipeline(spark):
     """End-to-end with the SOAP chunking strategy over note-shaped pages."""
     from medical_doc_knowledge_graph_system_spark.operators.chunk import chunk_pages
     from medical_doc_knowledge_graph_system_spark.operators.extract import (
-        derive_triples,
-        extract_mentions,
+        chunk_features,
+        triple_rows,
     )
     from tests.test_soap_chunker import FIXTURE
 
@@ -61,7 +61,7 @@ def test_soap_strategy_pipeline(spark):
     chunks = chunk_pages(pages, strategy="soap")
     rows = chunks.collect()
     assert {r.section for r in rows} == {"Subjective", "Objective", "Assessment", "Plan"}
-    triples = derive_triples(extract_mentions(chunks)).collect()
+    triples = triple_rows(chunk_features(chunks)).collect()
     preds = {t.pred for t in triples}
     # Subjective chunk: Patient + Hypertension (via HTN alias) + symptoms
     assert {"HAS_CONDITION", "EXHIBITS_SYMPTOM", "MANIFESTS_AS"} <= preds

@@ -7,6 +7,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from medical_doc_knowledge_graph_system_spark.corelib.oracle import (
     precision_recall,
     triple_set,
@@ -277,3 +279,101 @@ def test_normalize_urls_collapses_variant_fetches(spark, tmp_path):
         r.text for r in spark.read.parquet(f"{root}/chunks").collect()
     )
     assert "newer fetch" in texts and "older fetch" not in texts
+
+
+# -- raw extraction tables vs the oracle's per-chunk rows ----------------------
+
+_RAW_RUNS = {"plain": {}, "open_vocab": {"open_vocab": True}, "bucketed": {"bucket_by_url": 4}}
+
+
+def _oracle_raw(chunks, open_vocab=False):
+    """Multisets of the rows mentions_raw, triples_raw and chunk_embeddings
+    must hold: extract_chunk's rows per chunk and the float32 cast of
+    embed_name(text)."""
+    from collections import Counter
+
+    import numpy as np
+
+    from medical_doc_knowledge_graph_system_spark.corelib.extract import extract_chunk
+    from medical_doc_knowledge_graph_system_spark.corelib.similarity import embed_name
+
+    mentions, triples, embeddings = Counter(), Counter(), Counter()
+    for c in chunks:
+        ms, ts = extract_chunk(c["chunk_id"], c["url"], c["text"], open_vocab=open_vocab)
+        mentions.update(
+            (c["chunk_id"], c["url"], m["name"], m["label"], m["confidence"], m["start_char"], m["method"])
+            for m in ms
+        )
+        triples.update(
+            (c["chunk_id"], c["url"], t["subj"], t["subj_label"], t["pred"], t["obj"], t["obj_label"], t["confidence"])
+            for t in ts
+        )
+        vec = np.asarray(embed_name(c["text"]), dtype=np.float32).tolist()
+        embeddings[(c["chunk_id"], c["url"], tuple(vec))] += 1
+    return {"mentions_raw": mentions, "triples_raw": triples, "chunk_embeddings": embeddings}
+
+
+def _table_rows(spark, root, name):
+    from collections import Counter
+
+    from medical_doc_knowledge_graph_system_spark.sources.warehouse import Warehouse
+
+    rows = Warehouse(root).read(spark, name).collect()
+    return Counter(tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in rows)
+
+
+@pytest.mark.parametrize("run", list(_RAW_RUNS))
+def test_raw_tables_equal_oracle_rows(spark, pages_parquet, warehouse50, oracle50, tmp_path, run):
+    """mentions_raw, triples_raw and chunk_embeddings hold exactly the
+    oracle's per-chunk rows (confidence, start_char, method, labels, the
+    float32 embedding), as multisets and in the tables' column order."""
+    from medical_doc_knowledge_graph_system_spark.operators.extract import (
+        MENTION_SCHEMA,
+        TRIPLE_SCHEMA,
+    )
+    from medical_doc_knowledge_graph_system_spark.pipeline import run_pipeline
+    from medical_doc_knowledge_graph_system_spark.sources.warehouse import Warehouse
+
+    root = warehouse50[0]
+    if run != "plain":
+        root = str(tmp_path / run)
+        run_pipeline(spark, spark.read.parquet(pages_parquet), root, **_RAW_RUNS[run])
+    want = _oracle_raw(oracle50["chunks"], open_vocab=run == "open_vocab")
+    wh = Warehouse(root)
+    assert wh.read(spark, "mentions_raw").columns == MENTION_SCHEMA.fieldNames()
+    assert wh.read(spark, "triples_raw").columns == TRIPLE_SCHEMA.fieldNames()
+    assert dict(wh.read(spark, "chunk_embeddings").dtypes)["embedding"] == "array<float>"
+    for name, rows in want.items():
+        assert sum(rows.values()) > 0, name  # the fixture must exercise the table
+        assert _table_rows(spark, root, name) == rows, name
+
+
+@pytest.mark.parametrize("missing", ["chunk_embeddings", "triples_raw"])
+def test_resume_rebuilds_one_feature_table(spark, pages_parquet, warehouse50, tmp_path, missing):
+    """Crash with only one of the three feature-pass tables missing: resume
+    rebuilds the pin, recomputes only that stage, and every table equals
+    the uninterrupted run's."""
+    import json
+    import shutil
+
+    from medical_doc_knowledge_graph_system_spark.pipeline import STAGES, run_pipeline
+    from medical_doc_knowledge_graph_system_spark.sources.warehouse import Warehouse
+
+    base_root = warehouse50[0]
+    root = str(tmp_path / "wh")
+    shutil.copytree(base_root, root)
+    wh = Warehouse(root)
+    ck = wh._meta_path("_checkpoints")
+    recs = [json.loads(line) for line in open(ck)]
+    with open(ck, "w") as f:
+        for rec in recs:
+            if rec["stage"] != missing:
+                f.write(json.dumps(rec) + "\n")
+    wh.drop(missing)
+    n_before = len(recs) - 1
+
+    run_pipeline(spark, spark.read.parquet(pages_parquet), root, resume=True)
+    rerun = [json.loads(line)["stage"] for line in open(ck)][n_before:]
+    assert rerun == [missing]
+    for stage in STAGES:
+        assert _table_rows(spark, root, stage) == _table_rows(spark, base_root, stage), stage

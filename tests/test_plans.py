@@ -87,17 +87,6 @@ def test_salted_join_plans_shuffle_hash_on_salted_key(spark):
     assert got == [("a", 1, "ca"), ("a", 2, "ca"), ("b", 3, "cb")]
 
 
-def test_pattern_join_broadcasts(spark):
-    from medical_doc_knowledge_graph_system_spark.operators.extract import derive_triples
-
-    mentions = spark.createDataFrame(
-        [("c1", "u", "Aspirin", "Medication", 0.9, 0, "gazetteer")],
-        "chunk_id string, url string, name string, label string, confidence double, start_char int, method string",
-    )
-    p = plan_string(derive_triples(mentions))
-    assert "BroadcastHashJoin" in p
-
-
 def test_whole_stage_codegen_in_text_path(docs):
     from medical_doc_knowledge_graph_system_spark.functions.textfns import (
         with_quality_score,
@@ -166,40 +155,6 @@ def test_bucketed_chunk_family_join_no_exchange(spark, tmp_path_factory):
         assert cites.count() == 100
         pw = physical_plan_string(next_chunk_join(bc))
         assert "Exchange" not in pw, pw
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_bucketed_derive_triples_no_exchange(spark, tmp_path_factory):
-    """The triple self-join keys on (chunk_id, url); over a url-bucketed
-    mentions table the whole derive_triples plan — self-join AND the
-    dedup groupBy — runs with zero hash Exchange."""
-    from medical_doc_knowledge_graph_system_spark.operators.extract import (
-        derive_triples,
-    )
-    from medical_doc_knowledge_graph_system_spark.plans.checks import (
-        physical_plan_string,
-    )
-    from medical_doc_knowledge_graph_system_spark.sources.warehouse import Warehouse
-
-    wh = Warehouse(str(tmp_path_factory.mktemp("bwh_dt")))
-    mentions = spark.createDataFrame(
-        [
-            (f"c{i % 10}", f"u{i % 10}", name, label, 0.9, i, "gazetteer")
-            for i in range(40)
-            for name, label in [("aspirin", "Medication"), ("migraine", "Condition")]
-        ],
-        "chunk_id string, url string, name string, label string, "
-        "confidence double, start_char int, method string",
-    )
-    wh.write_bucketed(mentions, "mentions_raw", n_buckets=4)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        t = derive_triples(wh.read(spark, "mentions_raw"))
-        p = physical_plan_string(t)
-        assert "Exchange hashpartitioning" not in p, p
-        assert t.count() > 0
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
@@ -934,23 +889,99 @@ def test_literal_frame_rejects_empty_rows(spark):
 
 
 def test_literal_dimensions_broadcast_without_python_scan(spark, docs):
-    """doc_mentions, doc_triples and derive_triples still broadcast-hash
-    join their static dictionary, and no dimension is a Python-RDD scan
-    (the inputs here are parquet- or Range-rooted, so any ExistingRDD
-    would be a dimension)."""
-    from medical_doc_knowledge_graph_system_spark.operators.extract import derive_triples
+    """doc_mentions and doc_triples still broadcast-hash join their static
+    dictionary, and no dimension is a Python-RDD scan (the input here is
+    parquet-rooted, so any ExistingRDD would be a dimension)."""
     from medical_doc_knowledge_graph_system_spark.plans.checks import (
         physical_plan_string,
     )
 
-    mentions = spark.range(4).select(
-        F.lit("c1").alias("chunk_id"),
-        F.lit("u").alias("url"),
-        F.format_string("e%d", "id").alias("name"),
-        F.when(F.col("id") % 2 == 0, "Patient").otherwise("Condition").alias("label"),
-        F.lit(0.9).alias("confidence"),
-    )
-    for df in (webkg.doc_mentions(docs), webkg.doc_triples(docs), derive_triples(mentions)):
+    for df in (webkg.doc_mentions(docs), webkg.doc_triples(docs)):
         p = physical_plan_string(df)
         assert "BroadcastHashJoin" in p, p
         assert "ExistingRDD" not in p, p
+
+
+@pytest.fixture(scope="module")
+def chunk_frame(spark):
+    """A Range-rooted chunks frame: any ExistingRDD or extra Python node in
+    a plan over it comes from the operator under test."""
+    return spark.range(0, 16, 1, numPartitions=2).select(
+        F.format_string("c%d", "id").alias("chunk_id"),
+        F.format_string("u%d", F.col("id") % 4).alias("url"),
+        F.lit("Peter Fern has hypertension and takes aspirin for chest pain").alias("text"),
+    )
+
+
+@pytest.mark.parametrize("with_embedding", [True, False])
+def test_chunk_features_is_one_map_in_pandas(chunk_frame, with_embedding):
+    """Embeddings, mentions and triples come from ONE Python pass: exactly
+    one MapInPandas and no per-column Python UDF node."""
+    from medical_doc_knowledge_graph_system_spark.operators.extract import chunk_features
+    from medical_doc_knowledge_graph_system_spark.plans.checks import (
+        physical_plan_string,
+    )
+
+    df = chunk_features(chunk_frame, with_embedding=with_embedding)
+    p = physical_plan_string(df)
+    assert p.count("MapInPandas") == 1, p
+    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, p
+    assert ("embedding" in df.columns) == with_embedding
+
+
+def test_feature_projections_no_exchange_no_join(chunk_frame):
+    """mentions_raw / triples_raw / chunk_embeddings are projections of the
+    feature frame: no Exchange and no Join, unpinned or read from the
+    pipeline's cached pin (the old triples_raw was a self-join with two
+    shuffles)."""
+    from medical_doc_knowledge_graph_system_spark.operators.extract import (
+        chunk_features,
+        embedding_rows,
+        mention_rows,
+        triple_rows,
+    )
+    from medical_doc_knowledge_graph_system_spark.plans.checks import (
+        physical_plan_string,
+    )
+
+    features = chunk_features(chunk_frame)
+    pinned = chunk_features(chunk_frame).persist()
+    try:
+        for proj in (mention_rows, triple_rows, embedding_rows):
+            for src in (features, pinned):
+                p = physical_plan_string(proj(src))
+                assert "Exchange" not in p and "Join" not in p, p
+            assert "InMemoryTableScan" in physical_plan_string(proj(pinned))
+        assert triple_rows(pinned).count() > 0
+    finally:
+        pinned.unpersist()
+
+
+_NAMES = [
+    "heart attack", "Myocardial Infarction", "Acute Myocardial Infarction",
+    "Aspirin", "aspirin", "HTN", "Hypertension", "hypertension",
+    "Colonoscopy", "Type 2 Diabetes", "type 2 diabetes mellitus", "Metformin",
+]
+
+
+def test_build_name_map_same_on_both_sides_of_driver_threshold(spark):
+    """driver_threshold = n runs the driver path, n - 1 the distributed
+    path: same map. The driver-path result is a LocalTableScan, so scans of
+    it start no Python task (createDataFrame(list) planned ExistingRDD)."""
+    from medical_doc_knowledge_graph_system_spark.operators.resolve import build_name_map
+    from medical_doc_knowledge_graph_system_spark.plans.checks import (
+        physical_plan_string,
+    )
+
+    names = spark.range(len(_NAMES)).select(
+        F.element_at(F.array(*map(F.lit, _NAMES)), F.col("id").cast("int") + 1).alias("name")
+    )
+    n = len(_NAMES)
+    driver = build_name_map(names, driver_threshold=n)
+    p = physical_plan_string(driver)
+    assert "LocalTableScan" in p and "ExistingRDD" not in p, p
+    got = {r.name: r.canonical for r in driver.collect()}
+    assert got == {
+        r.name: r.canonical for r in build_name_map(names, driver_threshold=n - 1).collect()
+    }
+    assert set(got) == set(_NAMES) and len(set(got.values())) < n

@@ -27,8 +27,8 @@ def test_incremental_ingest_matches_batch(spark, pages_parquet, tmp_path):
 
     from medical_doc_knowledge_graph_system_spark.operators.chunk import chunk_pages
     from medical_doc_knowledge_graph_system_spark.operators.extract import (
-        derive_triples,
-        extract_mentions,
+        chunk_features,
+        triple_rows,
     )
 
     batch_pages = spark.read.parquet(pages_parquet)
@@ -42,7 +42,7 @@ def test_incremental_ingest_matches_batch(spark, pages_parquet, tmp_path):
 
     batch_triples = {
         (r.chunk_id, r.subj, r.pred, r.obj)
-        for r in derive_triples(extract_mentions(chunk_pages(batch_pages))).collect()
+        for r in triple_rows(chunk_features(chunk_pages(batch_pages))).collect()
     }
     stream_triples = {
         (r.chunk_id, r.subj, r.pred, r.obj)
