@@ -112,15 +112,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["kg_provenance"] = lambda s, d: webkg.provenance(_t(s, d, "documents"))
 
     # C4-at-scale (VERDICT r2 #6): canonical remap when the name_map EXCEEDS
-    # the broadcast threshold — the salted shuffle-hash join + two-phase
-    # salted count from operators/skew.py, exercised as the MEASURED plan
-    # (SHUFFLE_HASH hint: at gate scale the replicated map would otherwise
-    # broadcast and the skew machinery would go untested). The big side is
-    # the raw token stream (Zipf-headed: stopwords dominate); the salt
-    # spreads each hot token across 16 reducers.
+    # the broadcast threshold — the salted shuffle-hash join from
+    # operators/skew.py, exercised as the MEASURED plan (SHUFFLE_HASH hint:
+    # at gate scale the replicated map would otherwise broadcast and the
+    # skew machinery would go untested). The big side is the raw token
+    # stream (Zipf-headed: stopwords dominate); the salt spreads each hot
+    # token across 16 join reducers. The count after it is a plain groupBy:
+    # partial aggregation already ships one row per hot key per map task.
     def kg_remap_salted(s, d):
         from medical_doc_knowledge_graph_system_spark.operators.skew import (
-            salted_count,
             salted_join_big_small,
         )
 
@@ -140,7 +140,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         joined = salted_join_big_small(
             toks, nm, "name", salts=16, how="inner", force_shuffle=True
         )
-        return salted_count(joined, "canonical_id").select(
+        return joined.groupBy("canonical_id").count().select(
             "canonical_id", F.col("count").alias("n_mentions")
         )
 
@@ -261,8 +261,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     # Whole-graph analytics (operators/graph_analytics.py, r5): PageRank as
-    # a fixed-8-iteration power method — join + salted two-phase sum per
-    # round, localCheckpoint-flattened lineage, count-free loop. The oracle
+    # a fixed-8-iteration power method — join + one groupBy sum per round,
+    # localCheckpoint-flattened lineage, count-free loop. The oracle
     # unrolls the identical recurrence as 8 DuckDB CTEs; rank_norm = rank*N
     # (mean 1.0) keeps the shared 4dp float convention scale-invariant.
     def kg_pagerank(s, d):

@@ -61,13 +61,13 @@ def main() -> None:
     for _pass in range(args.reps):
         for n in names:
             spark.sparkContext.setJobDescription(f"bench_extra:{n}")
-            t0 = time.time()
+            t0 = time.perf_counter()
             df = qs[n](spark, args.sf_dir)
             if args.noop:
                 df.write.format("noop").mode("overwrite").save()
             else:
                 df.count()
-            runs[n].append(round(time.time() - t0, 3))
+            runs[n].append(round(time.perf_counter() - t0, 3))
             spark.sparkContext.setJobDescription(None)
 
     def median(xs):

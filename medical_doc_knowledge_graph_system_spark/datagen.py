@@ -6,8 +6,9 @@ Shape per BASELINE.json input_hint:
 Properties engineered for the pipeline under test:
   * sentences embed gazetteer surface forms (canonical names AND
     abbreviations/aliases) so extraction + resolution have real work;
-  * a Zipf-skewed head entity dominates mentions (exercises salting / AQE
-    skew handling, BASELINE.json north_rule);
+  * a Zipf-skewed head entity dominates mentions (exercises partial
+    aggregation, salted joins and AQE skew handling, BASELINE.json
+    north_rule);
   * ~20%% of pages carry html only (text = NULL) to exercise the
     boilerplate-strip path;
   * per-page RNG seeded by (seed, page index) — rows are reproducible

@@ -854,9 +854,9 @@ def textrank_keywords(
     weighted) edge, and keywords are the top-``k`` words by weighted
     PageRank over that graph.
 
-    Reuses the fixed-iteration weighted ``pagerank`` operator (salted
-    two-phase contribution sums, localCheckpoint per round, count-free
-    loop), so the recurrence — and its unrolled DuckDB oracle — is the
+    Reuses the fixed-iteration weighted ``pagerank`` operator (one groupBy
+    contribution sum per round, localCheckpoint-flattened lineage,
+    count-free loop), so the recurrence — and its unrolled DuckDB oracle — is the
     kg_pagerank_weighted one; only the edge construction is new. Ranking
     happens on the 4dp-ROUNDED rank_norm (token tiebreak) so both
     engines share the selection order.

@@ -14,16 +14,15 @@ with set-based DataFrame aggregation:
   SOURCED_FROM provenance edges (A8) are a projection of mentions: entity
       node -> chunk_id with confidence + method (queries.py:174-181).
 
-Mention counting uses salted two-phase aggregation (operators/skew.py) since
-entity name frequency is Zipf-skewed.
+Node and edge counts are one groupBy().agg() each. Entity name frequency is
+Zipf-skewed, but count and max are algebraic: map-side partial aggregation
+ships at most one row per hot key per map task, so no salt is needed.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .skew import salted_agg
 
 
 def node_id(label_col, name_col):
@@ -60,17 +59,9 @@ def dedup_mentions(remapped: DataFrame) -> DataFrame:
 
 def build_nodes(mentions: DataFrame) -> DataFrame:
     """Resolved mentions -> one row per (label, name)."""
-    return salted_agg(
-        mentions,
-        keys=["label", "name"],
-        partial_aggs=[
-            F.count(F.lit(1)).alias("__c"),
-            F.max("confidence").alias("__mx"),
-        ],
-        final_aggs=[
-            F.sum("__c").cast("long").alias("n_mentions"),
-            F.max("__mx").alias("max_confidence"),
-        ],
+    return mentions.groupBy("label", "name").agg(
+        F.count(F.lit(1)).alias("n_mentions"),
+        F.max("confidence").alias("max_confidence"),
     ).select(
         node_id(F.col("label"), F.col("name")).alias("node_id"),
         "label",
@@ -82,17 +73,9 @@ def build_nodes(mentions: DataFrame) -> DataFrame:
 
 def build_edges(triples: DataFrame) -> DataFrame:
     """Resolved triples -> aggregated typed edges between node ids."""
-    return salted_agg(
-        triples,
-        keys=["subj", "subj_label", "pred", "obj", "obj_label"],
-        partial_aggs=[
-            F.count(F.lit(1)).alias("__c"),
-            F.max("confidence").alias("__mx"),
-        ],
-        final_aggs=[
-            F.sum("__c").cast("long").alias("n_occurrences"),
-            F.max("__mx").alias("confidence"),
-        ],
+    return triples.groupBy("subj", "subj_label", "pred", "obj", "obj_label").agg(
+        F.count(F.lit(1)).alias("n_occurrences"),
+        F.max("confidence").alias("confidence"),
     ).select(
         node_id(F.col("subj_label"), F.col("subj")).alias("src"),
         node_id(F.col("obj_label"), F.col("obj")).alias("dst"),

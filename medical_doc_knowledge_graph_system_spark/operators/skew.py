@@ -1,12 +1,12 @@
-"""Skew-aware helpers: salted two-phase aggregation and salted joins.
+"""Skew-aware helpers: salted joins, hot-group-safe top-k and ranking.
 
-The datagen plants a Zipf head entity (BASELINE.json north_rule: salted
-entity-hash keys to defeat head-entity skew). A plain groupBy("name") puts
-every head-entity row in one reducer; salting splits the hot key across S
-partial aggregates, then combines — classic two-phase aggregation. Spark's
-map-side partial aggregation already does much of this for algebraic aggs;
-the explicit salt is the pattern that survives on a 1000-executor cluster
-for high-cardinality keys + AQE-resistant skew.
+The datagen plants a Zipf head entity, and the north rule wants that skew
+handled explicitly. Algebraic aggregates (count/sum/min/max) need no helper
+here: Spark's map-side partial aggregation already ships at most one row
+per hot key per map task, so a plain groupBy().agg() is the skew-safe form,
+and a salt on top only multiplies the partial rows that get shuffled. What
+partial aggregation cannot do is split a hot key of a JOIN or of a
+per-group WINDOW; the helpers below do that.
 """
 
 from __future__ import annotations
@@ -72,47 +72,6 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n)
     return df
-
-
-def with_salt(df: DataFrame, salts: int = DEFAULT_SALTS) -> DataFrame:
-    # salt only affects row distribution, never results, so a per-row id is
-    # fine; avoids rand() (non-reproducible) and avoids hashing the group
-    # keys (which would send every hot-key row to the same salt).
-    return df.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salts))
-    )
-
-
-def salted_count(df: DataFrame, *keys: str, salts: int = DEFAULT_SALTS) -> DataFrame:
-    """groupBy(keys).count() with an explicit salted partial phase."""
-    partial = (
-        with_salt(df, salts)
-        .groupBy(*keys, "__salt")
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
-    return partial.groupBy(*keys).agg(F.sum("__c").cast("long").alias("count"))
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: list[str],
-    partial_aggs: list[Column],
-    final_aggs: list[Column],
-    salts: int = DEFAULT_SALTS,
-) -> DataFrame:
-    """General two-phase salted aggregation for algebraic aggregates.
-
-    partial_aggs run per (keys, salt); final_aggs combine the partials per
-    keys. Caller is responsible for choosing re-aggregable functions
-    (sum/sum, count/sum, min/min, max/max).
-    """
-    return (
-        with_salt(df, salts)
-        .groupBy(*keys, "__salt")
-        .agg(*partial_aggs)
-        .groupBy(*keys)
-        .agg(*final_aggs)
-    )
 
 
 def topk_per_group(

@@ -14,7 +14,7 @@ from the last complete stage — north_rule resumability):
        JVM-side instead and the pass skips the embedding)
   distinct names --alias-broadcast + LSH + CC--> name_map
   mentions_raw/triples_raw --broadcast remap--> mentions / triples
-  mentions --salted agg--> nodes ; triples --salted agg--> edges
+  mentions --groupBy--> nodes ; triples --groupBy--> edges
   mentions --projection--> provenance_edges
 """
 
@@ -163,7 +163,8 @@ def run_pipeline(
     t_start = time.perf_counter()
 
     # documents dim table (reference A4: Document node per doc_id with audit
-    # metadata, app/graph/queries.py:9-16 — here a projection of pages)
+    # metadata, app/graph/queries.py:9-16 — here a projection of pages; the
+    # latest-crawl window above already left one row per url)
     _run_stage(
         wh,
         spark,
@@ -174,7 +175,7 @@ def run_pipeline(
             "lang",
             F.length(F.coalesce("text", F.lit(""))).alias("text_chars"),
             F.isnull("text").alias("from_html"),
-        ).dropDuplicates(["url"]),
+        ),
         resume, bucket_by_url=bucket_by_url)
 
     if url_groups <= 1:

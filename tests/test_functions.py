@@ -1062,3 +1062,27 @@ def test_set_jaccard_pairs_reads_toks_as_sets(spark, vocab):
     for k, (o, na, nb) in want.items():
         assert got[k][:3] == (o, na, nb)
         assert got[k][3] == pytest.approx(o / (na + nb - o), abs=1e-4)
+
+
+def test_doc_triples_collapses_repeated_mentions(spark):
+    """doc_triples collapses each doc's mentions to a set before counting,
+    so a mention frame that repeats every row gives the same n_docs."""
+    from medical_doc_knowledge_graph_system_spark.functions.webkg import (
+        doc_mentions,
+        doc_triples,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (1, "spark runs a fast join over the table"),
+            (2, "the stream query does a hash scan of each row"),
+            (3, "spark join on a big table"),
+            (4, "slow sort"),
+        ],
+        "doc_id long, text string",
+    )
+    m = doc_mentions(docs)
+    want = sorted(map(tuple, doc_triples(docs, mentions=m).collect()))
+    got = sorted(map(tuple, doc_triples(docs, mentions=m.union(m)).collect()))
+    assert got == want
+    assert ("spark", "EXECUTES", "join", 2) in want

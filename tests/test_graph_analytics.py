@@ -88,7 +88,7 @@ def test_pagerank_k4_pendant(spark):
 
 def test_random_graph_matches_driver_oracles(spark):
     """Seeded G(n, m) graph, ~200 nodes / 600 edges, against independent
-    driver-side oracles. Exercises the salted two-phase sum, the
+    driver-side oracles. Exercises the groupBy contribution sum, the
     degree-orientation tie-breaks, and zero-triangle / isolated-from-
     triangles nodes."""
     rng = random.Random(20260817)
@@ -106,9 +106,9 @@ def test_random_graph_matches_driver_oracles(spark):
     got_pr = {r.name: r.rank_norm for r in pagerank(df).collect()}
     want_pr = _pr_oracle(edges)
     assert set(got_pr) == set(want_pr)
-    # float summation order differs (salted partial sums vs sequential
-    # loop); 4dp rounding can still straddle a boundary in principle, so
-    # compare at 4dp with a 1-ulp-of-rounding tolerance.
+    # float summation order differs (per-map-task partial sums vs the
+    # sequential loop); 4dp rounding can still straddle a boundary in
+    # principle, so compare at 4dp with a 1-ulp-of-rounding tolerance.
     for v, w in want_pr.items():
         assert abs(got_pr[v] - w) <= 1e-4 + 1e-9, (v, got_pr[v], w)
 
@@ -298,8 +298,9 @@ def test_pagerank_empty_seed_set_raises(spark):
 
 def test_star_graph_hub_skew(spark):
     """Zipf-hub shape: one center joined to 50 leaves. No triangles anywhere;
-    the center's rank must dominate; the salted aggregate must still produce
-    the exact closed-form ranks (star PageRank has a 2-cycle closed form)."""
+    the center's rank must dominate; the hub's contribution sum, combined
+    from per-map-task partial sums, must still produce the exact closed-form
+    ranks (star PageRank has a 2-cycle closed form)."""
     edges = [("hub", f"leaf{i:02d}") for i in range(50)]
     edges = [(min(a, b), max(a, b)) for a, b in edges]
     tri = {r.name: r.n_tri for r in triangle_stats(_edges_df(spark, edges)).collect()}

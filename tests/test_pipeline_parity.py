@@ -160,7 +160,8 @@ def test_url_group_checkpointing(spark, pages_parquet, warehouse50, tmp_path):
 def test_recrawled_urls_latest_wins(spark, tmp_path):
     """Duplicate urls (re-crawls): the latest warc_ts version is ingested
     once — reference MERGE-by-key upsert semantics (queries.py:9-31) — and
-    Spark matches the oracle on the deduped corpus."""
+    Spark matches the oracle on the deduped corpus. Crawls with equal
+    warc_ts fall back to the greatest text, as in the oracle's key."""
     import datetime as dt
 
     from medical_doc_knowledge_graph_system_spark.corelib.oracle import (
@@ -172,6 +173,8 @@ def test_recrawled_urls_latest_wins(spark, tmp_path):
         ("https://x/1", dt.datetime(2025, 1, 1), None, "old text about Aspirin", "en"),
         ("https://x/1", dt.datetime(2025, 1, 2), None, "new text about Hypertension", "en"),
         ("https://x/2", dt.datetime(2025, 1, 1), None, "Peter Fern takes Metformin", "en"),
+        ("https://x/3", dt.datetime(2025, 1, 3), None, "alpha note on Aspirin", "en"),
+        ("https://x/3", dt.datetime(2025, 1, 3), None, "beta Metformin", "en"),
     ]
     pages = spark.createDataFrame(
         rows, "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -182,6 +185,18 @@ def test_recrawled_urls_latest_wins(spark, tmp_path):
     texts = {t for _, t in chunks}
     assert "new text about Hypertension" in texts
     assert "old text about Aspirin" not in texts  # superseded crawl dropped
+    assert "beta Metformin" in texts  # equal warc_ts: greatest text wins
+    assert "alpha note on Aspirin" not in texts
+
+    docs = [
+        (r.url, r.warc_ts, r.text_chars)
+        for r in spark.read.parquet(f"{root}/documents").collect()
+    ]
+    assert sorted(docs) == [
+        ("https://x/1", dt.datetime(2025, 1, 2), len("new text about Hypertension")),
+        ("https://x/2", dt.datetime(2025, 1, 1), len("Peter Fern takes Metformin")),
+        ("https://x/3", dt.datetime(2025, 1, 3), len("beta Metformin")),
+    ]
 
     oracle = oracle_run(
         [

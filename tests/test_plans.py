@@ -778,19 +778,15 @@ def test_minhash_signatures_one_explode_one_shuffle(docs):
     assert {kind for kind, _ in exchanges} <= {"hashpartitioning", "RoundRobinPartitioning"}, p
 
 
-def _cc_round_plans(spark, monkeypatch, nodes, edges):
-    """Run _cc_iterative under its own job group, recording the physical
-    plan of every localCheckpoint pin. Returns (plans, job count); plans[0]
-    is the vertex-state pin, the rest are one per round."""
-    from medical_doc_knowledge_graph_system_spark.operators.resolve import (
-        _cc_iterative,
-    )
+def _pinned_plans(spark, monkeypatch, run):
+    """Call run() under its own job group, recording the physical plan of
+    every localCheckpoint pin. Returns (plans, job count)."""
     from medical_doc_knowledge_graph_system_spark.plans.checks import (
         physical_plan_string,
     )
 
     plans = []
-    df_cls = type(nodes)
+    df_cls = type(spark.range(1))
     pin = df_cls.localCheckpoint
 
     def recording_pin(self, *args, **kwargs):
@@ -799,14 +795,24 @@ def _cc_round_plans(spark, monkeypatch, nodes, edges):
 
     monkeypatch.setattr(df_cls, "localCheckpoint", recording_pin)
     sc = spark.sparkContext
-    group = f"cc_rounds_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "cc rounds")
+    group = f"pins_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "recorded pins")
     try:
-        _cc_iterative(nodes, edges)
+        run()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     return plans, len(jobs)
+
+
+def _cc_round_plans(spark, monkeypatch, nodes, edges):
+    """_pinned_plans of _cc_iterative: plans[0] is the vertex-state pin, the
+    rest are one per round."""
+    from medical_doc_knowledge_graph_system_spark.operators.resolve import (
+        _cc_iterative,
+    )
+
+    return _pinned_plans(spark, monkeypatch, lambda: _cc_iterative(nodes, edges))
 
 
 def _cc_test_graph(spark):
@@ -856,6 +862,65 @@ def test_local_checkpoint_drops_hash_partitioning(spark):
     pinned = df.repartition(8, "k").localCheckpoint()
     p = physical_plan_string(pinned.groupBy("k").agg(F.count("id")))
     assert "Exchange hashpartitioning" in p, p
+
+
+@pytest.mark.parametrize("op", ["pagerank", "hits"])
+def test_rank_loop_pins_carry_no_salt(spark, monkeypatch, op):
+    """pagerank and hits sum each step's contributions with one groupBy (a
+    partial_sum under one Exchange). No pinned plan carries a __salt column:
+    a salt hashed from the group key never splits that key."""
+    from medical_doc_knowledge_graph_system_spark.operators import graph_analytics
+
+    _, edges = _cc_test_graph(spark)
+    if op == "hits":
+        edges = edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    rank = getattr(graph_analytics, op)
+    plans, _ = _pinned_plans(
+        spark, monkeypatch, lambda: rank(edges, iterations=5).collect()
+    )
+    assert any("partial_sum" in p for p in plans), plans
+    assert not [p for p in plans if "__salt" in p]
+
+
+@pytest.mark.parametrize("table", ["nodes", "edges"])
+def test_materialize_is_one_partial_aggregate_shuffle(spark, table):
+    """build_nodes / build_edges are one groupBy().agg(): a single hash
+    Exchange with the map-side partial_count below it (which caps a Zipf
+    head entity at one row per map task) and no salt column."""
+    import re
+
+    from medical_doc_knowledge_graph_system_spark.operators.materialize import (
+        build_edges,
+        build_nodes,
+    )
+    from medical_doc_knowledge_graph_system_spark.plans.checks import (
+        physical_plan_string,
+    )
+
+    rows = spark.range(0, 200).select(
+        F.when(F.col("id") % 10 < 7, F.lit("Hypertension"))
+        .otherwise(F.format_string("e%d", F.col("id") % 13))
+        .alias("name"),
+        F.lit("Disease").alias("label"),
+        ((F.col("id") % 100) / 100.0).alias("confidence"),
+    )
+    if table == "nodes":
+        df = build_nodes(rows)
+    else:
+        df = build_edges(
+            rows.select(
+                F.col("name").alias("subj"),
+                F.col("label").alias("subj_label"),
+                F.lit("TREATS").alias("pred"),
+                F.lit("Aspirin").alias("obj"),
+                F.lit("Drug").alias("obj_label"),
+                "confidence",
+            )
+        )
+    p = physical_plan_string(df)
+    assert len(re.findall(r"Exchange hashpartitioning", p)) == 1, p
+    assert p.index("Exchange hashpartitioning") < p.index("partial_count"), p
+    assert "__salt" not in p, p
 
 
 _LITERAL_DIMS = {

@@ -5,41 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from medical_doc_knowledge_graph_system_spark.corelib.textproc import chunk_page
-from medical_doc_knowledge_graph_system_spark.operators.skew import (
-    salted_agg,
-    salted_count,
-    salted_join_big_small,
-)
-
-
-def test_salted_count_equals_plain(spark):
-    # Zipf-skewed key: 'hot' dominates
-    rows = [("hot" if i % 10 else f"cold{i}",) for i in range(5000)]
-    df = spark.createDataFrame(rows, "k string")
-    plain = {r.k: r["count"] for r in df.groupBy("k").count().collect()}
-    salted = {r.k: r["count"] for r in salted_count(df, "k").collect()}
-    assert salted == plain
-
-
-def test_salted_agg_equals_plain(spark):
-    rows = [("hot" if i % 5 else "cold", float(i)) for i in range(1000)]
-    df = spark.createDataFrame(rows, "k string, v double")
-    plain = {
-        r.k: (r.n, r.mx)
-        for r in df.groupBy("k")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"), F.max("v").alias("mx"))
-        .collect()
-    }
-    got = {
-        r.k: (r.n, r.mx)
-        for r in salted_agg(
-            df,
-            keys=["k"],
-            partial_aggs=[F.count(F.lit(1)).alias("__c"), F.max("v").alias("__m")],
-            final_aggs=[F.sum("__c").cast("long").alias("n"), F.max("__m").alias("mx")],
-        ).collect()
-    }
-    assert got == plain
+from medical_doc_knowledge_graph_system_spark.operators.skew import salted_join_big_small
 
 
 def test_salted_join_equals_plain(spark):
@@ -101,8 +67,8 @@ def test_chunker_edge_cases():
 
 
 def test_pipeline_head_entity_skew_counts(spark, warehouse50, oracle50):
-    """The Zipf head entity's mention count (salted aggregation path) must
-    equal the oracle's plain count."""
+    """The Zipf head entity's mention count (a plain groupBy, relieved by
+    map-side partial aggregation) must equal the oracle's count."""
     root, _ = warehouse50
     nodes = {
         (r.label, r.name): r.n_mentions
