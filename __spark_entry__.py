@@ -11,8 +11,13 @@ so the two sides cannot drift.
 from __future__ import annotations
 
 import datetime
+import glob
+import hashlib
 import os
+import shutil
 import sys
+import tempfile
+import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -73,6 +78,74 @@ from medical_doc_knowledge_graph_system_spark.functions.textfns import (
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def _drain_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    sources: list[list[DataFrame]],
+    build: Callable[..., DataFrame],
+    mode: str,
+) -> DataFrame:
+    """Replay each source's frames as a file stream and drain
+    `build(*streams)` into the memory table `{name}_{tag}`, which is
+    returned.
+
+    Each source is staged in its own directory, one parquet file per frame:
+    the first frame via repartition(1) (a single-split testdata scan is ONE
+    partition, which coalesce can't split) in overwrite mode, later frames
+    via coalesce(1) in append mode. File mtimes are pinned in list order, so
+    at maxFilesPerTrigger=1 the frames replay in list order, one microbatch
+    each: state genuinely crosses batches and a sentinel frame listed last
+    lands in the last batch. Every stream reads its source with the schema
+    of that source's first frame. The drain runs `availableNow` in output
+    `mode` ("update" or "append") at 8 shuffle partitions (captured at
+    stream start, so also the state-store partition count); the previous
+    setting is restored afterwards, also when the drain fails.
+
+    The staging dir is unique per run: concurrent gate runs must not share
+    a source path (an overwrite would delete files another run's stream has
+    already listed). It is removed after the drain, since the memory sink
+    holds the result rows.
+    """
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    base = tempfile.mkdtemp(prefix=f"mdkgs_{name}_{tag}_")
+    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        now = time.time()
+        streams = []
+        for j, frames in enumerate(sources):
+            src = os.path.join(base, str(j))
+            staged: set[str] = set()
+            for i, frame in enumerate(frames):
+                if i == 0:
+                    frame.repartition(1).write.mode("overwrite").parquet(src)
+                else:
+                    frame.coalesce(1).write.mode("append").parquet(src)
+                t = now - 100 + 10 * i
+                for p in set(glob.glob(os.path.join(src, "part-*.parquet"))) - staged:
+                    os.utime(p, (t, t))
+                    staged.add(p)
+            streams.append(
+                spark.readStream.schema(frames[0].schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
+            )
+        out = build(*streams)
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        sq = (
+            out.writeStream.format("memory")
+            .queryName(f"{name}_{tag}")
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        sq.awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+        shutil.rmtree(base, ignore_errors=True)
+    return spark.table(f"{name}_{tag}")
 
 
 def _dbl_emb(df: DataFrame) -> DataFrame:
@@ -402,6 +475,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return shingle_overlap_edges(_t(s, d, "documents"), min_shared=3)
 
+    def _kg_docgraph_sources(g):
+        """The sampled BFS sources of the doc-similarity graph: every node
+        with doc_id % 31 == 0."""
+        return (
+            g.select(F.col("a").alias("name"))
+            .unionAll(g.select(F.col("b").alias("name")))
+            .distinct()
+            .where(F.col("name") % 31 == 0)
+        )
+
     # Per-node triangle counts + local clustering coefficient via
     # degree-ordered orientation (wedge fan-out bounded by the SMALLER
     # endpoint degree — the shape that survives Zipf hubs), over the
@@ -494,12 +577,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         g = _kg_docgraph(s, d)
-        src = (
-            g.select(F.col("a").alias("name"))
-            .unionAll(g.select(F.col("b").alias("name")))
-            .distinct()
-            .where(F.col("name") % 31 == 0)
-        )
+        src = _kg_docgraph_sources(g)
         return closeness(g, rounds=8, sources=src)
 
     q["kg_closeness"] = kg_closeness
@@ -1855,55 +1933,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # and 8 state-store partitions (shuffle.partitions is captured at stream
     # start and restored after the drain).
     def stream_stateful_dedup(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
         from medical_doc_knowledge_graph_system_spark.streaming.stateful import (
             dedup_chunk_stream,
         )
 
-        tag = _h.md5(d.encode()).hexdigest()[:8]
-        # per-run unique staging dir: concurrent gate runs must not share a
-        # source path (an overwrite would delete files another run's stream
-        # has already listed); removed after the drain — the memory sink
-        # holds the result rows, so the source is no longer needed
-        src = tempfile.mkdtemp(prefix=f"mdkgs_dedup_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            chunks = _t(s, d, "documents").select(
-                F.md5(F.col("doc_id").cast("string")).alias("chunk_id"),
-                F.col("doc_id").cast("string").alias("url"),
-                F.lit(0).alias("chunk_idx"),
-                "text",
-            )
-            # repartition (not coalesce: the single-file testdata scan is ONE
-            # partition, which coalesce can't split) so the base set lands in
-            # 1 file + 1 append file of planted re-deliveries = 2 microbatches
-            # at maxFilesPerTrigger=1 — state genuinely crosses batches
-            chunks.repartition(1).write.mode("overwrite").parquet(src)
-            chunks.where(F.col("url").cast("long") % 3 == 0).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            stream = (
-                s.readStream.schema(chunks.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                dedup_chunk_stream(stream, n_shards=8)
-                .writeStream.format("memory")
-                .queryName(f"ssd_{tag}")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
-        return s.table(f"ssd_{tag}")
+        chunks = _t(s, d, "documents").select(
+            F.md5(F.col("doc_id").cast("string")).alias("chunk_id"),
+            F.col("doc_id").cast("string").alias("url"),
+            F.lit(0).alias("chunk_idx"),
+            "text",
+        )
+        # the base set, then the planted re-deliveries: 2 microbatches
+        redelivered = chunks.where(F.col("url").cast("long") % 3 == 0)
+        return _drain_stream(
+            s,
+            d,
+            "ssd",
+            [[chunks, redelivered]],
+            lambda st: dedup_chunk_stream(st, n_shards=8),
+            "append",
+        )
 
     q["stream_stateful_dedup"] = stream_stateful_dedup
 
@@ -1917,44 +1966,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (key, touched batch); n_rows is strictly increasing per key, so
     # max_by(_, n_rows) is the deterministic latest-state selector.
     def stream_kmv(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
         from medical_doc_knowledge_graph_system_spark.streaming.stateful import (
             kmv_stream,
         )
 
-        tag = _h.md5(d.encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_kmv_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events").select("event_type", "user_id")
-            ev.where(F.col("user_id") % 2 == 0).repartition(1).write.mode(
-                "overwrite"
-            ).parquet(src)
-            ev.where(F.col("user_id") % 2 != 0).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            stream = (
-                s.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                kmv_stream(stream, k=32)
-                .writeStream.format("memory")
-                .queryName(f"skmv_{tag}")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
-        last = s.table(f"skmv_{tag}").groupBy("event_type").agg(
+        ev = _t(s, d, "events").select("event_type", "user_id")
+        halves = [
+            ev.where(F.col("user_id") % 2 == 0),
+            ev.where(F.col("user_id") % 2 != 0),
+        ]
+        drained = _drain_stream(
+            s, d, "skmv", [halves], lambda st: kmv_stream(st, k=32), "update"
+        )
+        last = drained.groupBy("event_type").agg(
             F.max_by("n_min", "n_rows").alias("n_min"),
             F.max_by("h_k", "n_rows").alias("h_k"),
         )
@@ -1978,10 +2002,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # across a batch boundary; estimate computed by the SAME
     # sketches.hll_estimate closed form the batch gate uses.
     def stream_hll(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
         from medical_doc_knowledge_graph_system_spark.functions.sketches import (
             hll_estimate,
             hll_regs_to_moments,
@@ -1990,43 +2010,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             hll_stream,
         )
 
-        tag = _h.md5(d.encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_hll_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events").select(
-                "event_type",
-                F.concat_ws(
-                    ":", F.col("user_id"), F.to_date("ts").cast("string")
-                ).alias("ud"),
-                F.col("user_id"),
-            )
-            ev.where(F.col("user_id") % 2 == 0).drop("user_id").repartition(
-                1
-            ).write.mode("overwrite").parquet(src)
-            ev.where(F.col("user_id") % 2 != 0).drop("user_id").coalesce(
-                1
-            ).write.mode("append").parquet(src)
-            schema = "event_type string, ud string"
-            stream = (
-                s.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                hll_stream(stream, "ud")
-                .writeStream.format("memory")
-                .queryName(f"shll_{tag}")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
-        last = s.table(f"shll_{tag}").groupBy("event_type").agg(
+        ev = _t(s, d, "events").select(
+            "event_type",
+            F.concat_ws(
+                ":", F.col("user_id"), F.to_date("ts").cast("string")
+            ).alias("ud"),
+            F.col("user_id"),
+        )
+        halves = [
+            ev.where(F.col("user_id") % 2 == 0).drop("user_id"),
+            ev.where(F.col("user_id") % 2 != 0).drop("user_id"),
+        ]
+        drained = _drain_stream(
+            s, d, "shll", [halves], lambda st: hll_stream(st, "ud"), "update"
+        )
+        last = drained.groupBy("event_type").agg(
             F.max_by("regs", "n_rows").alias("regs")
         )
         n_regs, sum_q = hll_regs_to_moments(F.col("regs"))
@@ -2047,59 +2045,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # The drained sessions == the batch F.session_window result, so the
     # query shares the events_session_native oracle verbatim.
     def stream_session_native(s, d):
-        import glob as _glob
-        import hashlib as _h
-        import shutil
-        import tempfile
-        import time as _time
-
         from medical_doc_knowledge_graph_system_spark.streaming.incremental import (
             session_windows_stream,
         )
 
-        tag = _h.md5(d.encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_sess_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events").select("user_id", "ts")
-            mid = F.lit("2024-01-16").cast("timestamp_ntz")
-            ev.where(F.col("ts") < mid).repartition(1).write.mode(
-                "overwrite"
-            ).parquet(src)
-            ev.where(F.col("ts") >= mid).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            s.createDataFrame(
-                [(-1, datetime.datetime(2150, 1, 1))],
-                "user_id long, ts timestamp_ntz",
-            ).coalesce(1).write.mode("append").parquet(src)
-            # pin the file-source processing order: sentinel strictly last
-            now = _time.time()
-            parts = sorted(
-                _glob.glob(os.path.join(src, "part-*.parquet")),
-                key=os.path.getmtime,
-            )
-            for i, p in enumerate(parts):
-                os.utime(p, (now - 100 + 10 * i, now - 100 + 10 * i))
-            stream = (
-                s.readStream.schema("user_id long, ts timestamp_ntz")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                session_windows_stream(stream)
-                .writeStream.format("memory")
-                .queryName(f"ssess_{tag}")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
-        tbl = s.table(f"ssess_{tag}").where(F.col("user_id") >= 0)
+        ev = _t(s, d, "events").select("user_id", "ts")
+        mid = F.lit("2024-01-16").cast("timestamp_ntz")
+        sentinel = s.createDataFrame(
+            [(-1, datetime.datetime(2150, 1, 1))],
+            "user_id long, ts timestamp_ntz",
+        )
+        frames = [ev.where(F.col("ts") < mid), ev.where(F.col("ts") >= mid), sentinel]
+        drained = _drain_stream(
+            s, d, "ssess", [frames], session_windows_stream, "append"
+        )
+        tbl = drained.where(F.col("user_id") >= 0)
         return (
             tbl.select(
                 "user_id",
@@ -2127,48 +2087,28 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # selection makes the fold == the batch sketch == the events_hist
     # oracle verbatim. Same two-file parity staging as stream_kmv/hll.
     def stream_hist(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
         from medical_doc_knowledge_graph_system_spark.functions.sketches import (
             hist_bin,
             hist_estimate,
         )
 
-        tag = _h.md5(d.encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_hist_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events").select("event_type", "value", "user_id")
-            ev.where(F.col("user_id") % 2 == 0).drop("user_id").repartition(
-                1
-            ).write.mode("overwrite").parquet(src)
-            ev.where(F.col("user_id") % 2 != 0).drop("user_id").coalesce(
-                1
-            ).write.mode("append").parquet(src)
-            stream = (
-                s.readStream.schema("event_type string, value double")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            binned = stream.groupBy(
+        ev = _t(s, d, "events").select("event_type", "value", "user_id")
+        halves = [
+            ev.where(F.col("user_id") % 2 == 0).drop("user_id"),
+            ev.where(F.col("user_id") % 2 != 0).drop("user_id"),
+        ]
+        drained = _drain_stream(
+            s,
+            d,
+            "shist",
+            [halves],
+            lambda st: st.groupBy(
                 "event_type",
                 hist_bin(F.col("value"), 0.0, 1024.0, 4096).alias("bin"),
-            ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                binned.writeStream.format("memory")
-                .queryName(f"shist_{tag}")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
-        cells = s.table(f"shist_{tag}").groupBy("event_type", "bin").agg(
+            ).agg(F.count(F.lit(1)).cast("long").alias("c")),
+            "update",
+        )
+        cells = drained.groupBy("event_type", "bin").agg(
             F.max("c").alias("c")
         )
         return hist_estimate(cells, ["event_type"], 0.0, 1024.0, 12, (50, 95))
@@ -2184,55 +2124,33 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # the fold == the batch sketch and the oracle is shared verbatim with
     # events_cms.
     def stream_cms(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
         from medical_doc_knowledge_graph_system_spark.functions.sketches import (
             _cms_bucket,
             cms_probe,
         )
 
         depth, width = 4, 256
-        tag = _h.md5(d.encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_cms_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events").select("user_id", "event_id")
-            ev.where(F.col("event_id") % 2 == 0).drop("event_id").repartition(
-                1
-            ).write.mode("overwrite").parquet(src)
-            ev.where(F.col("event_id") % 2 != 0).drop("event_id").coalesce(
-                1
-            ).write.mode("append").parquet(src)
-            stream = (
-                s.readStream.schema("user_id long")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
+        ev = _t(s, d, "events").select("user_id", "event_id")
+        halves = [
+            ev.where(F.col("event_id") % 2 == 0).drop("event_id"),
+            ev.where(F.col("event_id") % 2 != 0).drop("event_id"),
+        ]
+        rows = F.array([F.lit(j) for j in range(depth)])
+        drained = _drain_stream(
+            s,
+            d,
+            "scms",
+            [halves],
+            lambda st: st.select(
+                F.col("user_id").cast("string").alias("__k"),
+                F.explode(rows).alias("j"),
             )
-            rows = F.array([F.lit(j) for j in range(depth)])
-            cells = (
-                stream.select(
-                    F.col("user_id").cast("string").alias("__k"),
-                    F.explode(rows).alias("j"),
-                )
-                .select("j", _cms_bucket(F.col("j"), F.col("__k"), width).alias("bucket"))
-                .groupBy("j", "bucket")
-                .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                cells.writeStream.format("memory")
-                .queryName(f"scms_{tag}")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
-        folded = s.table(f"scms_{tag}").groupBy("j", "bucket").agg(
+            .select("j", _cms_bucket(F.col("j"), F.col("__k"), width).alias("bucket"))
+            .groupBy("j", "bucket")
+            .agg(F.count(F.lit(1)).cast("long").alias("c")),
+            "update",
+        )
+        folded = drained.groupBy("j", "bucket").agg(
             F.max("c").alias("c")
         )
         return cms_probe(_t(s, d, "events"), folded, "user_id", depth, width)
@@ -2247,49 +2165,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # drained fold is max again per key == the batch compaction; oracle
     # shared verbatim with events_latest. State = one struct per live key.
     def stream_latest(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
-        tag = _h.md5(d.encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_latest_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events").select(
-                "user_id", "event_type", "ts", "event_id", "value"
-            )
-            ev.where(F.col("event_id") % 2 == 0).repartition(1).write.mode(
-                "overwrite"
-            ).parquet(src)
-            ev.where(F.col("event_id") % 2 != 0).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            stream = (
-                s.readStream.schema(
-                    "user_id long, event_type string, ts timestamp_ntz,"
-                    " event_id long, value double"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            agg = stream.groupBy("user_id", "event_type").agg(
+        ev = _t(s, d, "events").select(
+            "user_id", "event_type", "ts", "event_id", "value"
+        )
+        halves = [
+            ev.where(F.col("event_id") % 2 == 0),
+            ev.where(F.col("event_id") % 2 != 0),
+        ]
+        drained = _drain_stream(
+            s,
+            d,
+            "slatest",
+            [halves],
+            lambda st: st.groupBy("user_id", "event_type").agg(
                 F.max(F.struct("ts", "event_id", "value")).alias("m")
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                agg.writeStream.format("memory")
-                .queryName(f"slatest_{tag}")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
+            ),
+            "update",
+        )
         folded = (
-            s.table(f"slatest_{tag}")
-            .groupBy("user_id", "event_type")
+            drained.groupBy("user_id", "event_type")
             .agg(F.max("m").alias("m"))
         )
         return folded.select(
@@ -2396,52 +2290,29 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (same chunk -> same ts in both deliveries, all inside the watermark
     # window), so the drained output must equal the distinct chunk set.
     def stream_dedup_native(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
         from medical_doc_knowledge_graph_system_spark.streaming.stateful import (
             dedup_chunk_stream_native,
         )
 
-        tag = _h.md5(("native" + d).encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_dedup_native_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            chunks = _t(s, d, "documents").select(
-                F.md5(F.col("doc_id").cast("string")).alias("chunk_id"),
-                F.col("doc_id").cast("string").alias("url"),
-                F.lit(0).alias("chunk_idx"),
-                "text",
-                (
-                    F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-                    + F.make_interval(secs=(F.col("doc_id") % 1800).cast("double"))
-                ).alias("ts"),
-            )
-            chunks.repartition(1).write.mode("overwrite").parquet(src)
-            chunks.where(F.col("url").cast("long") % 3 == 0).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            stream = (
-                s.readStream.schema(chunks.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                dedup_chunk_stream_native(stream)
-                .drop("ts")
-                .writeStream.format("memory")
-                .queryName(f"sdn_{tag}")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
-        return s.table(f"sdn_{tag}")
+        chunks = _t(s, d, "documents").select(
+            F.md5(F.col("doc_id").cast("string")).alias("chunk_id"),
+            F.col("doc_id").cast("string").alias("url"),
+            F.lit(0).alias("chunk_idx"),
+            "text",
+            (
+                F.to_timestamp(F.lit("2024-01-01 00:00:00"))
+                + F.make_interval(secs=(F.col("doc_id") % 1800).cast("double"))
+            ).alias("ts"),
+        )
+        redelivered = chunks.where(F.col("url").cast("long") % 3 == 0)
+        return _drain_stream(
+            s,
+            d,
+            "sdn",
+            [[chunks, redelivered]],
+            lambda st: dedup_chunk_stream_native(st).drop("ts"),
+            "append",
+        )
 
     q["stream_dedup_native"] = stream_dedup_native
 
@@ -2726,12 +2597,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         g = _kg_docgraph(s, d)
-        src = (
-            g.select(F.col("a").alias("name"))
-            .unionAll(g.select(F.col("b").alias("name")))
-            .distinct()
-            .where(F.col("name") % 31 == 0)
-        )
+        src = _kg_docgraph_sources(g)
         return harmonic(g, rounds=8, sources=src)
 
     q["kg_harmonic"] = kg_harmonic
@@ -2745,12 +2611,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         g = _kg_docgraph(s, d)
-        src = (
-            g.select(F.col("a").alias("name"))
-            .unionAll(g.select(F.col("b").alias("name")))
-            .distinct()
-            .where(F.col("name") % 31 == 0)
-        )
+        src = _kg_docgraph_sources(g)
         return effective_diameter(g, rounds=8, sources=src, q_pct=90)
 
     q["kg_eff_diameter"] = kg_eff_diameter
@@ -2768,12 +2629,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         g = _kg_docgraph(s, d)
-        src = (
-            g.select(F.col("a").alias("name"))
-            .unionAll(g.select(F.col("b").alias("name")))
-            .distinct()
-            .where(F.col("name") % 31 == 0)
-        )
+        src = _kg_docgraph_sources(g)
         return betweenness(g, rounds=8, sources=src)
 
     q["kg_betweenness"] = kg_betweenness
@@ -2788,12 +2644,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         g = _kg_docgraph(s, d)
-        src = (
-            g.select(F.col("a").alias("name"))
-            .unionAll(g.select(F.col("b").alias("name")))
-            .distinct()
-            .where(F.col("name") % 31 == 0)
-        )
+        src = _kg_docgraph_sources(g)
         return deterministic_walks(g, steps=8, sources=src)
 
     q["kg_walks"] = kg_walks
@@ -3077,55 +2928,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # oracle shared verbatim with events_ohlc (the stream_latest pattern,
     # state = one candle per live (event_type, day) key).
     def stream_ohlc(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
-        tag = _h.md5(d.encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_ohlc_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events").select(
-                "event_type", "ts", "event_id", "value"
-            )
-            ev.where(F.col("event_id") % 2 == 0).repartition(1).write.mode(
-                "overwrite"
-            ).parquet(src)
-            ev.where(F.col("event_id") % 2 != 0).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            stream = (
-                s.readStream.schema(
-                    "event_type string, ts timestamp_ntz,"
-                    " event_id long, value double"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            agg = stream.groupBy(
-                "event_type", F.to_date("ts").alias("day")
-            ).agg(
+        ev = _t(s, d, "events").select("event_type", "ts", "event_id", "value")
+        halves = [
+            ev.where(F.col("event_id") % 2 == 0),
+            ev.where(F.col("event_id") % 2 != 0),
+        ]
+        drained = _drain_stream(
+            s,
+            d,
+            "sohlc",
+            [halves],
+            lambda st: st.groupBy("event_type", F.to_date("ts").alias("day")).agg(
                 F.min(F.struct("ts", "event_id", "value")).alias("o"),
                 F.max(F.struct("ts", "event_id", "value")).alias("c"),
                 F.max("value").alias("high"),
                 F.min("value").alias("low"),
                 F.count(F.lit(1)).cast("long").alias("n"),
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                agg.writeStream.format("memory")
-                .queryName(f"sohlc_{tag}")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
+            ),
+            "update",
+        )
         folded = (
-            s.table(f"sohlc_{tag}")
-            .groupBy("event_type", "day")
+            drained.groupBy("event_type", "day")
             .agg(
                 F.min("o").alias("o"),
                 F.max("c").alias("c"),
@@ -4056,60 +3879,34 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # a view matching k purchases emits k rows, exactly the batch LEFT
     # JOIN multiplicity the oracle runs.
     def stream_outer_join(s, d):
-        import glob as _glob
-        import hashlib as _h
-        import shutil
-        import tempfile
-        import time as _time
-
-        tag = _h.md5(("soj" + d).encode()).hexdigest()[:8]
-        base = tempfile.mkdtemp(prefix=f"mdkgs_soj_{tag}_")
-        lsrc = os.path.join(base, "l")
-        rsrc = os.path.join(base, "r")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events")
+        ev = _t(s, d, "events")
+        view_frames = [
             ev.where(F.col("event_type") == "view").select(
                 "user_id", F.col("ts").alias("view_ts")
-            ).repartition(1).write.mode("overwrite").parquet(lsrc)
+            ),
             s.createDataFrame(
                 [(-1, datetime.datetime(2150, 1, 1))],
                 "user_id long, view_ts timestamp_ntz",
-            ).coalesce(1).write.mode("append").parquet(lsrc)
+            ),
+        ]
+        purch_frames = [
             ev.where(F.col("event_type") == "purchase").select(
                 F.col("user_id").alias("p_user"), F.col("ts").alias("purch_ts")
-            ).repartition(1).write.mode("overwrite").parquet(rsrc)
+            ),
             s.createDataFrame(
                 [(-1, datetime.datetime(2150, 6, 1))],
                 "p_user long, purch_ts timestamp_ntz",
-            ).coalesce(1).write.mode("append").parquet(rsrc)
-            now = _time.time()
-            for src in (lsrc, rsrc):
-                parts = sorted(
-                    _glob.glob(os.path.join(src, "part-*.parquet")),
-                    key=os.path.getmtime,
-                )
-                for i, p in enumerate(parts):
-                    os.utime(p, (now - 100 + 10 * i, now - 100 + 10 * i))
-            views = (
-                s.readStream.schema("user_id long, view_ts timestamp_ntz")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(lsrc)
-                .select(
-                    "user_id", F.col("view_ts").cast("timestamp").alias("view_ts")
-                )
-                .withWatermark("view_ts", "1 hour")
-            )
-            purch = (
-                s.readStream.schema("p_user long, purch_ts timestamp_ntz")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(rsrc)
-                .select(
-                    "p_user", F.col("purch_ts").cast("timestamp").alias("purch_ts")
-                )
-                .withWatermark("purch_ts", "1 hour")
-            )
-            joined = views.join(
+            ),
+        ]
+
+        def build(view_stream, purch_stream):
+            views = view_stream.select(
+                "user_id", F.col("view_ts").cast("timestamp").alias("view_ts")
+            ).withWatermark("view_ts", "1 hour")
+            purch = purch_stream.select(
+                "p_user", F.col("purch_ts").cast("timestamp").alias("purch_ts")
+            ).withWatermark("purch_ts", "1 hour")
+            return views.join(
                 purch,
                 (F.col("user_id") == F.col("p_user"))
                 & (F.col("purch_ts") >= F.col("view_ts"))
@@ -4122,19 +3919,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .cast("long")
                 .alias("purch_us"),
             )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                joined.writeStream.format("memory")
-                .queryName(f"soj_{tag}")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(base, ignore_errors=True)
-        return s.table(f"soj_{tag}").where(F.col("user_id") >= 0)
+
+        drained = _drain_stream(
+            s, d, "soj", [view_frames, purch_frames], build, "append"
+        )
+        return drained.where(F.col("user_id") >= 0)
 
     q["stream_outer_join"] = stream_outer_join
 
@@ -4450,54 +4239,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # AFTER the drain — exactly the batch assembly. Shares the
     # events_top_paths oracle verbatim.
     def stream_top_paths(s, d, k=20):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
-        tag = _h.md5(d.encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_paths_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events").select(
-                "user_id", "ts", "event_id", "event_type"
-            )
-            ev.where(F.col("event_id") % 2 == 0).repartition(1).write.mode(
-                "overwrite"
-            ).parquet(src)
-            ev.where(F.col("event_id") % 2 != 0).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            stream = (
-                s.readStream.schema(
-                    "user_id long, ts timestamp_ntz,"
-                    " event_id long, event_type string"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            agg = stream.groupBy(
-                "user_id", F.to_date("ts").alias("day")
-            ).agg(
-                F.collect_list(
-                    F.struct("ts", "event_id", "event_type")
-                ).alias("evs"),
+        ev = _t(s, d, "events").select("user_id", "ts", "event_id", "event_type")
+        halves = [
+            ev.where(F.col("event_id") % 2 == 0),
+            ev.where(F.col("event_id") % 2 != 0),
+        ]
+        drained = _drain_stream(
+            s,
+            d,
+            "spaths",
+            [halves],
+            lambda st: st.groupBy("user_id", F.to_date("ts").alias("day")).agg(
+                F.collect_list(F.struct("ts", "event_id", "event_type")).alias("evs"),
                 F.count(F.lit(1)).cast("long").alias("n"),
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                agg.writeStream.format("memory")
-                .queryName(f"spaths_{tag}")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
+            ),
+            "update",
+        )
         baskets = (
-            s.table(f"spaths_{tag}")
-            .groupBy("user_id", "day")
+            drained.groupBy("user_id", "day")
             .agg(F.max_by("evs", "n").alias("evs"))
         )
         paths = (
@@ -4529,49 +4288,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # statistic; the closed form runs once at the end). Shares the
     # events_retention oracle verbatim.
     def stream_retention(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
-        tag = _h.md5(d.encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_ret_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events").select("user_id", "ts", "event_id")
-            ev.where(F.col("event_id") % 2 == 0).repartition(1).write.mode(
-                "overwrite"
-            ).parquet(src)
-            ev.where(F.col("event_id") % 2 != 0).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            stream = (
-                s.readStream.schema(
-                    "user_id long, ts timestamp_ntz, event_id long"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            agg = stream.groupBy(
-                "user_id", F.to_date("ts").alias("day")
-            ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                agg.writeStream.format("memory")
-                .queryName(f"sret_{tag}")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
+        ev = _t(s, d, "events").select("user_id", "ts", "event_id")
+        halves = [
+            ev.where(F.col("event_id") % 2 == 0),
+            ev.where(F.col("event_id") % 2 != 0),
+        ]
+        drained = _drain_stream(
+            s,
+            d,
+            "sret",
+            [halves],
+            lambda st: st.groupBy("user_id", F.to_date("ts").alias("day")).agg(
+                F.count(F.lit(1)).cast("long").alias("n")
+            ),
+            "update",
+        )
         # pin the drained activity set: the cohort aggregate and the cell
         # mapping both read it (and a self-join of the memory-sink view
         # would otherwise share attribute ids across branches)
         days = (
-            s.table(f"sret_{tag}")
-            .select("user_id", "day")
+            drained.select("user_id", "day")
             .distinct()
             .localCheckpoint()
         )
@@ -5231,58 +4967,32 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # then the SAME batch funnel operator runs; oracle shared verbatim
     # with events_funnel.
     def stream_funnel(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
         from medical_doc_knowledge_graph_system_spark.operators.funnel import (
             funnel,
         )
 
-        tag = _h.md5(("funnel" + d).encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_funnel_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = (
-                _t(s, d, "events")
-                .select("user_id", "ts", "event_id", "event_type")
-                .where(F.col("event_type").isin("view", "click", "purchase"))
-            )
-            ev.where(F.col("event_id") % 2 == 0).repartition(1).write.mode(
-                "overwrite"
-            ).parquet(src)
-            ev.where(F.col("event_id") % 2 != 0).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            stream = (
-                s.readStream.schema(
-                    "user_id long, ts timestamp_ntz,"
-                    " event_id long, event_type string"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            agg = stream.groupBy("user_id").agg(
-                F.collect_list(F.struct("ts", "event_id", "event_type")).alias(
-                    "evs"
-                ),
+        ev = (
+            _t(s, d, "events")
+            .select("user_id", "ts", "event_id", "event_type")
+            .where(F.col("event_type").isin("view", "click", "purchase"))
+        )
+        halves = [
+            ev.where(F.col("event_id") % 2 == 0),
+            ev.where(F.col("event_id") % 2 != 0),
+        ]
+        baskets = _drain_stream(
+            s,
+            d,
+            "sfunnel",
+            [halves],
+            lambda st: st.groupBy("user_id").agg(
+                F.collect_list(F.struct("ts", "event_id", "event_type")).alias("evs"),
                 F.count(F.lit(1)).cast("long").alias("n"),
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                agg.writeStream.format("memory")
-                .queryName(f"sfunnel_{tag}")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
+            ),
+            "update",
+        )
         drained = (
-            s.table(f"sfunnel_{tag}")
-            .groupBy("user_id")
+            baskets.groupBy("user_id")
             .agg(F.max_by("evs", "n").alias("evs"))
             .select("user_id", F.explode("evs").alias("e"))
             .select(
@@ -5507,56 +5217,33 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # moment, fed to the single-sourced anova_from_moments closed form.
     # Oracle shared verbatim with events_anova.
     def stream_anova(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
         from medical_doc_knowledge_graph_system_spark.functions.profiling import (
             anova_from_moments,
         )
 
-        tag = _h.md5(("anova" + d).encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_anova_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events").select(
-                "event_id",
-                "event_type",
-                F.floor(F.col("value")).cast("long").alias("c"),
-            )
-            ev.where(F.col("event_id") % 2 == 0).repartition(1).write.mode(
-                "overwrite"
-            ).parquet(src)
-            ev.where(F.col("event_id") % 2 != 0).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-            stream = (
-                s.readStream.schema(
-                    "event_id long, event_type string, c long"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            agg = stream.groupBy("event_type").agg(
+        ev = _t(s, d, "events").select(
+            "event_id",
+            "event_type",
+            F.floor(F.col("value")).cast("long").alias("c"),
+        )
+        halves = [
+            ev.where(F.col("event_id") % 2 == 0),
+            ev.where(F.col("event_id") % 2 != 0),
+        ]
+        drained = _drain_stream(
+            s,
+            d,
+            "sanova",
+            [halves],
+            lambda st: st.groupBy("event_type").agg(
                 F.count(F.lit(1)).cast("long").alias("n_i"),
                 F.sum("c").cast("long").alias("s_i"),
                 F.sum(F.col("c") * F.col("c")).cast("long").alias("q_i"),
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                agg.writeStream.format("memory")
-                .queryName(f"sanova_{tag}")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
+            ),
+            "update",
+        )
         moments = (
-            s.table(f"sanova_{tag}")
-            .groupBy("event_type")
+            drained.groupBy("event_type")
             .agg(
                 F.max("n_i").cast("long").alias("n_i"),
                 F.max("s_i").cast("long").alias("s_i"),
@@ -5884,59 +5571,34 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # the single-sourced benford_from_obs closed form. Oracle shared
     # verbatim with events_benford.
     def stream_benford(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
         from medical_doc_knowledge_graph_system_spark.functions.profiling import (
             benford_from_obs,
         )
 
-        tag = _h.md5(d.encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_benford_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events").select(
-                F.floor(F.col("value") * F.lit(100.0))
-                .cast("long")
-                .alias("cents"),
-                "event_id",
+        ev = _t(s, d, "events").select(
+            F.floor(F.col("value") * F.lit(100.0)).cast("long").alias("cents"),
+            "event_id",
+        )
+        halves = [
+            ev.where(F.col("event_id") % 2 == 0).drop("event_id"),
+            ev.where(F.col("event_id") % 2 != 0).drop("event_id"),
+        ]
+        drained = _drain_stream(
+            s,
+            d,
+            "sbenford",
+            [halves],
+            lambda st: st.where(F.col("cents") >= 1)
+            .groupBy(
+                F.substring(F.col("cents").cast("string"), 1, 1)
+                .cast("int")
+                .alias("digit")
             )
-            ev.where(F.col("event_id") % 2 == 0).drop("event_id").repartition(
-                1
-            ).write.mode("overwrite").parquet(src)
-            ev.where(F.col("event_id") % 2 != 0).drop("event_id").coalesce(
-                1
-            ).write.mode("append").parquet(src)
-            stream = (
-                s.readStream.schema("cents long")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            digits = (
-                stream.where(F.col("cents") >= 1)
-                .groupBy(
-                    F.substring(F.col("cents").cast("string"), 1, 1)
-                    .cast("int")
-                    .alias("digit")
-                )
-                .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                digits.writeStream.format("memory")
-                .queryName(f"sbenford_{tag}")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
+            .agg(F.count(F.lit(1)).cast("long").alias("c")),
+            "update",
+        )
         obs = (
-            s.table(f"sbenford_{tag}")
-            .groupBy("digit")
+            drained.groupBy("digit")
             .agg(F.max("c").cast("long").alias("n_obs"))
             .localCheckpoint(eager=True)
         )
@@ -5955,52 +5617,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # final cell (monotone), fed to the single-sourced simpson_from_cells
     # closed form. Oracle shared verbatim with events_simpson.
     def stream_simpson(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
         from medical_doc_knowledge_graph_system_spark.functions.profiling import (
             simpson_from_cells,
         )
 
-        tag = _h.md5(d.encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_simpson_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events").select(
-                (F.col("user_id") % 101).alias("bucket"),
-                "event_type",
-                "event_id",
-            )
-            ev.where(F.col("event_id") % 2 == 0).drop("event_id").repartition(
-                1
-            ).write.mode("overwrite").parquet(src)
-            ev.where(F.col("event_id") % 2 != 0).drop("event_id").coalesce(
-                1
-            ).write.mode("append").parquet(src)
-            stream = (
-                s.readStream.schema("bucket long, event_type string")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            cells = stream.groupBy("bucket", "event_type").agg(
+        ev = _t(s, d, "events").select(
+            (F.col("user_id") % 101).alias("bucket"),
+            "event_type",
+            "event_id",
+        )
+        halves = [
+            ev.where(F.col("event_id") % 2 == 0).drop("event_id"),
+            ev.where(F.col("event_id") % 2 != 0).drop("event_id"),
+        ]
+        cells = _drain_stream(
+            s,
+            d,
+            "ssimpson",
+            [halves],
+            lambda st: st.groupBy("bucket", "event_type").agg(
                 F.count(F.lit(1)).cast("long").alias("c")
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                cells.writeStream.format("memory")
-                .queryName(f"ssimpson_{tag}")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
+            ),
+            "update",
+        )
         drained = (
-            s.table(f"ssimpson_{tag}")
-            .groupBy("bucket", "event_type")
+            cells.groupBy("bucket", "event_type")
             .agg(F.max("c").cast("long").alias("__c"))
             .localCheckpoint(eager=True)
         )
@@ -6380,52 +6021,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # per-cell max IS the final daily series, fed to the single-sourced
     # snaive_backtest. Oracle shared verbatim with events_snaive.
     def stream_snaive(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
         from medical_doc_knowledge_graph_system_spark.operators.timeseries import (
             snaive_backtest,
         )
 
-        tag = _h.md5(d.encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_snaive_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events").select(
-                "event_type",
-                F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day"),
-                "event_id",
-            )
-            ev.where(F.col("event_id") % 2 == 0).drop("event_id").repartition(
-                1
-            ).write.mode("overwrite").parquet(src)
-            ev.where(F.col("event_id") % 2 != 0).drop("event_id").coalesce(
-                1
-            ).write.mode("append").parquet(src)
-            stream = (
-                s.readStream.schema("event_type string, day int")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            cells = stream.groupBy("event_type", "day").agg(
+        ev = _t(s, d, "events").select(
+            "event_type",
+            F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day"),
+            "event_id",
+        )
+        halves = [
+            ev.where(F.col("event_id") % 2 == 0).drop("event_id"),
+            ev.where(F.col("event_id") % 2 != 0).drop("event_id"),
+        ]
+        cells = _drain_stream(
+            s,
+            d,
+            "ssnaive",
+            [halves],
+            lambda st: st.groupBy("event_type", "day").agg(
                 F.count(F.lit(1)).cast("long").alias("c")
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                cells.writeStream.format("memory")
-                .queryName(f"ssnaive_{tag}")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
+            ),
+            "update",
+        )
         daily = (
-            s.table(f"ssnaive_{tag}")
-            .groupBy("event_type", "day")
+            cells.groupBy("event_type", "day")
             .agg(F.max("c").cast("long").alias("n_ev"))
             .localCheckpoint(eager=True)
         )
@@ -6815,58 +6435,32 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # both moments monotone; drained per-cell max == final cell), folded
     # into the same closed form. Oracle shared verbatim with events_did.
     def stream_did(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
-        tag = _h.md5(d.encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_did_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events").select(
-                "event_type",
-                (F.col("user_id") % 2 == 0).alias("treated"),
-                (
-                    F.datediff(F.to_date("ts"), F.lit("2024-01-01")) >= 15
-                ).alias("post"),
-                F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-                .cast("long")
-                .alias("cents"),
-                "event_id",
-            )
-            ev.where(F.col("event_id") % 2 == 0).drop("event_id").repartition(
-                1
-            ).write.mode("overwrite").parquet(src)
-            ev.where(F.col("event_id") % 2 != 0).drop("event_id").coalesce(
-                1
-            ).write.mode("append").parquet(src)
-            stream = (
-                s.readStream.schema(
-                    "event_type string, treated boolean, post boolean,"
-                    " cents long"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            cells = stream.groupBy("event_type", "treated", "post").agg(
+        ev = _t(s, d, "events").select(
+            "event_type",
+            (F.col("user_id") % 2 == 0).alias("treated"),
+            (F.datediff(F.to_date("ts"), F.lit("2024-01-01")) >= 15).alias("post"),
+            F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+            "event_id",
+        )
+        halves = [
+            ev.where(F.col("event_id") % 2 == 0).drop("event_id"),
+            ev.where(F.col("event_id") % 2 != 0).drop("event_id"),
+        ]
+        cells = _drain_stream(
+            s,
+            d,
+            "sdid",
+            [halves],
+            lambda st: st.groupBy("event_type", "treated", "post").agg(
                 F.count(F.lit(1)).cast("long").alias("n"),
                 F.sum("cents").cast("long").alias("s"),
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                cells.writeStream.format("memory")
-                .queryName(f"sdid_{tag}")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
+            ),
+            "update",
+        )
         drained = (
-            s.table(f"sdid_{tag}")
-            .groupBy("event_type", "treated", "post")
+            cells.groupBy("event_type", "treated", "post")
             .agg(
                 F.max("n").cast("long").alias("n"),
                 F.max("s").cast("long").alias("s"),
@@ -7274,57 +6868,34 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # final cell); the drained daily series feeds the SAME isotonic_fit
     # minimax closed form. Oracle shared verbatim with events_isotonic.
     def stream_isotonic(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
         from medical_doc_knowledge_graph_system_spark.operators.tsmodel import (
             isotonic_fit,
         )
 
-        tag = _h.md5(d.encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_iso_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events").select(
-                "event_type",
-                F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias(
-                    "day"
-                ),
-                F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-                .cast("long")
-                .alias("cents"),
-                "event_id",
-            )
-            ev.where(F.col("event_id") % 2 == 0).drop("event_id").repartition(
-                1
-            ).write.mode("overwrite").parquet(src)
-            ev.where(F.col("event_id") % 2 != 0).drop("event_id").coalesce(
-                1
-            ).write.mode("append").parquet(src)
-            stream = (
-                s.readStream.schema("event_type string, day int, cents long")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            cells = stream.groupBy("event_type", "day").agg(
+        ev = _t(s, d, "events").select(
+            "event_type",
+            F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day"),
+            F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+            "event_id",
+        )
+        halves = [
+            ev.where(F.col("event_id") % 2 == 0).drop("event_id"),
+            ev.where(F.col("event_id") % 2 != 0).drop("event_id"),
+        ]
+        cells = _drain_stream(
+            s,
+            d,
+            "siso",
+            [halves],
+            lambda st: st.groupBy("event_type", "day").agg(
                 F.sum("cents").cast("long").alias("s")
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                cells.writeStream.format("memory")
-                .queryName(f"siso_{tag}")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
+            ),
+            "update",
+        )
         drained = (
-            s.table(f"siso_{tag}")
-            .groupBy("event_type", "day")
+            cells.groupBy("event_type", "day")
             .agg(F.max("s").cast("long").alias("cents"))
             .localCheckpoint(eager=True)
         )
@@ -7347,76 +6918,49 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # sum/count, so drained max == final — folded by the single-sourced
     # bootstrap_from_cells. Oracle shared verbatim with events_bootstrap_ci.
     def stream_bootstrap(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
         from medical_doc_knowledge_graph_system_spark.functions.rankstats import (
             bootstrap_from_cells,
             bootstrap_weight,
         )
 
-        tag = _h.md5(d.encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_boot_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events").select(
-                "event_type",
-                "event_id",
-                F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-                .cast("long")
-                .alias("x"),
-            )
-            rep = ev.select(
-                "event_type",
-                "event_id",
-                "x",
-                F.explode(
-                    F.array(*[F.lit(r) for r in range(32)])
-                ).alias("r"),
-            ).select(
-                "event_type",
-                "event_id",
-                "x",
-                "r",
-                bootstrap_weight(
-                    F.col("event_id").cast("string"), F.col("r")
-                ).alias("w"),
-            )
-            rep.where(F.col("event_id") % 2 == 0).drop("event_id").repartition(
-                1
-            ).write.mode("overwrite").parquet(src)
-            rep.where(F.col("event_id") % 2 != 0).drop("event_id").coalesce(
-                1
-            ).write.mode("append").parquet(src)
-            stream = (
-                s.readStream.schema(
-                    "event_type string, x long, r int, w long"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            cells = stream.groupBy("event_type", "r").agg(
+        ev = _t(s, d, "events").select(
+            "event_type",
+            "event_id",
+            F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
+            .cast("long")
+            .alias("x"),
+        )
+        rep = ev.select(
+            "event_type",
+            "event_id",
+            "x",
+            F.explode(F.array(*[F.lit(r) for r in range(32)])).alias("r"),
+        ).select(
+            "event_type",
+            "event_id",
+            "x",
+            "r",
+            bootstrap_weight(F.col("event_id").cast("string"), F.col("r")).alias("w"),
+        )
+        halves = [
+            rep.where(F.col("event_id") % 2 == 0).drop("event_id"),
+            rep.where(F.col("event_id") % 2 != 0).drop("event_id"),
+        ]
+        cells = _drain_stream(
+            s,
+            d,
+            "sboot",
+            [halves],
+            lambda st: st.groupBy("event_type", "r").agg(
                 F.count(F.lit(1)).cast("long").alias("n"),
                 F.sum("x").cast("long").alias("sx"),
                 F.sum("w").cast("long").alias("sw"),
                 F.sum(F.col("w") * F.col("x")).cast("long").alias("swx"),
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                cells.writeStream.format("memory")
-                .queryName(f"sboot_{tag}")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
+            ),
+            "update",
+        )
         drained = (
-            s.table(f"sboot_{tag}")
-            .groupBy("event_type", "r")
+            cells.groupBy("event_type", "r")
             .agg(
                 F.max("n").cast("long").alias("__n"),
                 F.max("sx").cast("long").alias("__sx"),
@@ -7671,57 +7215,34 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # SAME best_stump minimax argmin. Oracle shared verbatim with
     # events_stump.
     def stream_stump(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
         from medical_doc_knowledge_graph_system_spark.operators.tsmodel import (
             best_stump,
         )
 
-        tag = _h.md5(d.encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_stump_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events").select(
-                "event_type",
-                F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias(
-                    "day"
-                ),
-                F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-                .cast("long")
-                .alias("cents"),
-                "event_id",
-            )
-            ev.where(F.col("event_id") % 2 == 0).drop("event_id").repartition(
-                1
-            ).write.mode("overwrite").parquet(src)
-            ev.where(F.col("event_id") % 2 != 0).drop("event_id").coalesce(
-                1
-            ).write.mode("append").parquet(src)
-            stream = (
-                s.readStream.schema("event_type string, day int, cents long")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            cells = stream.groupBy("event_type", "day").agg(
+        ev = _t(s, d, "events").select(
+            "event_type",
+            F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day"),
+            F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+            "event_id",
+        )
+        halves = [
+            ev.where(F.col("event_id") % 2 == 0).drop("event_id"),
+            ev.where(F.col("event_id") % 2 != 0).drop("event_id"),
+        ]
+        cells = _drain_stream(
+            s,
+            d,
+            "sstump",
+            [halves],
+            lambda st: st.groupBy("event_type", "day").agg(
                 F.sum("cents").cast("long").alias("s")
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                cells.writeStream.format("memory")
-                .queryName(f"sstump_{tag}")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
+            ),
+            "update",
+        )
         drained = (
-            s.table(f"sstump_{tag}")
-            .groupBy("event_type", "day")
+            cells.groupBy("event_type", "day")
             .agg(F.max("s").cast("long").alias("cents"))
             .localCheckpoint(eager=True)
         )
@@ -8140,57 +7661,34 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (dollars = cents div 100 derived post-drain). Oracle shared verbatim
     # with events_pettitt.
     def stream_pettitt(s, d):
-        import hashlib as _h
-        import shutil
-        import tempfile
-
         from medical_doc_knowledge_graph_system_spark.operators.tsmodel import (
             pettitt_test,
         )
 
-        tag = _h.md5(d.encode()).hexdigest()[:8]
-        src = tempfile.mkdtemp(prefix=f"mdkgs_pett_stream_{tag}_")
-        prev_sp = s.conf.get("spark.sql.shuffle.partitions")
-        try:
-            ev = _t(s, d, "events").select(
-                "event_type",
-                F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias(
-                    "day"
-                ),
-                F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
-                .cast("long")
-                .alias("cents"),
-                "event_id",
-            )
-            ev.where(F.col("event_id") % 2 == 0).drop("event_id").repartition(
-                1
-            ).write.mode("overwrite").parquet(src)
-            ev.where(F.col("event_id") % 2 != 0).drop("event_id").coalesce(
-                1
-            ).write.mode("append").parquet(src)
-            stream = (
-                s.readStream.schema("event_type string, day int, cents long")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            cells = stream.groupBy("event_type", "day").agg(
+        ev = _t(s, d, "events").select(
+            "event_type",
+            F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day"),
+            F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+            "event_id",
+        )
+        halves = [
+            ev.where(F.col("event_id") % 2 == 0).drop("event_id"),
+            ev.where(F.col("event_id") % 2 != 0).drop("event_id"),
+        ]
+        cells = _drain_stream(
+            s,
+            d,
+            "spett",
+            [halves],
+            lambda st: st.groupBy("event_type", "day").agg(
                 F.sum("cents").cast("long").alias("s")
-            )
-            s.conf.set("spark.sql.shuffle.partitions", "8")
-            sq = (
-                cells.writeStream.format("memory")
-                .queryName(f"spett_{tag}")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sq.awaitTermination()
-        finally:
-            s.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            shutil.rmtree(src, ignore_errors=True)
+            ),
+            "update",
+        )
         drained = (
-            s.table(f"spett_{tag}")
-            .groupBy("event_type", "day")
+            cells.groupBy("event_type", "day")
             .agg(F.max("s").cast("long").alias("cents"))
             .localCheckpoint(eager=True)
         )

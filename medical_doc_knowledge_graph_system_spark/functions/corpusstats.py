@@ -45,7 +45,11 @@ def ngram_topk(
     Plan shape: explode -> partial+final count (one shuffle) ->
     TakeOrderedAndProject (no global sort, no full-result materialize).
     """
-    grams = _ngrams_col(tokens_col(text_col), n)
+    # the one-element transform binds the split token array once per doc;
+    # passed directly, _ngrams_col's lambda would re-split it for every gram
+    grams = F.transform(
+        F.array(tokens_col(text_col)), lambda toks: _ngrams_col(toks, n)
+    )[0]
     # r6: the gram build is the whole cost of this op and the corpus often
     # arrives as ONE parquet split — spread the scan (guide §2.5)
     return (

@@ -176,7 +176,10 @@ def with_repetition(
     Reference analogue: the quality gates before chunking
     (app/ingestion/chunker.py filters empty/whitespace chunks); this is the
     corpus-curation generalization a 100 TB training pipeline needs."""
-    grams = _ngrams_col(tokens_col(text_col), n)
+    # bind the split token array once per doc (see corpusstats.ngram_topk)
+    grams = F.transform(
+        F.array(tokens_col(text_col)), lambda toks: _ngrams_col(toks, n)
+    )[0]
     n_grams = F.size(grams)
     frac = F.when(
         n_grams > 0, F.round(F.lit(1.0) - F.size(F.array_distinct(grams)) / n_grams, 4)

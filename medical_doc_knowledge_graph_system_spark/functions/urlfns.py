@@ -69,9 +69,3 @@ def canonical_url(url: Column) -> Column:
     return F.concat(
         head, path, F.when(kept == "", F.lit("")).otherwise(F.concat(F.lit("?"), kept))
     )
-
-
-def with_canonical_url(df, url_col: str = "url", out_col: str = "canonical_url"):
-    """df + canonical_url column (and its md5 — the URL-dedup group key)."""
-    c = canonical_url(F.col(url_col))
-    return df.withColumn(out_col, c).withColumn(f"{out_col}_key", F.md5(c))

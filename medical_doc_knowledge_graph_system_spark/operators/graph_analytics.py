@@ -407,9 +407,7 @@ def greedy_coloring(
     return out.select(F.col("v").alias("name"), "color")
 
 
-def kcore(
-    edges: DataFrame, k: int = 2, rounds: int | None = 8, num_partitions: int = 8
-) -> DataFrame:
+def kcore(edges: DataFrame, k: int = 2, rounds: int | None = 8) -> DataFrame:
     """k-core peeling over the undirected (a, b) edge list.
 
     Each round drops every node of degree < k and every edge touching one;

@@ -30,10 +30,3 @@ def assert_in_plan(df: DataFrame, *needles: str) -> str:
     missing = [n for n in needles if n not in p]
     assert not missing, f"plan missing {missing}:\n{p}"
     return p
-
-
-def assert_not_in_plan(df: DataFrame, *needles: str) -> str:
-    p = plan_string(df)
-    present = [n for n in needles if n in p]
-    assert not present, f"plan unexpectedly contains {present}:\n{p}"
-    return p

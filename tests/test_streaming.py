@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from medical_doc_knowledge_graph_system_spark.streaming.incremental import (
@@ -682,3 +683,72 @@ def test_hist_stream_fold_equals_batch_sketch(spark, tmp_path):
         bits=7,
     )
     assert got == {tuple(r) for r in batch.collect()}
+
+
+# ── __spark_entry__._drain_stream: the file-staged stream gate harness ──────
+
+
+@pytest.fixture
+def drain_env(spark, tmp_path, monkeypatch):
+    """Staging dirs land in tmp_path; shuffle partitions start at 5, so a
+    leaked drain setting (8) is visible."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "5")
+    yield
+    spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _staging_dirs(root):
+    return [p for p in os.listdir(root) if p.startswith("mdkgs_")]
+
+
+def test_drain_stream_replays_frames_in_list_order(spark, tmp_path, drain_env):
+    """Frames of 3, 1 and 2 rows drained through a running count: each
+    frame is one microbatch, so the update-mode emissions are the prefix
+    sums in list order (every other order gives a different set). The
+    shuffle-partition setting is restored and the staging dir removed."""
+    import __spark_entry__ as entry
+
+    frames = [spark.range(0, 3), spark.range(3, 4), spark.range(4, 6)]
+    out = entry._drain_stream(
+        spark,
+        str(tmp_path),
+        "drain_order",
+        [frames],
+        lambda st: st.groupBy().count(),
+        "update",
+    )
+    assert sorted(r["count"] for r in out.collect()) == [3, 4, 6]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
+    assert _staging_dirs(tmp_path) == []
+
+
+def _raise_in_build(st):
+    raise ValueError("build failed")
+
+
+def _fail_in_drain(st):
+    return st.select(F.assert_true(F.col("id") < 0))
+
+
+@pytest.mark.parametrize("build", [_raise_in_build, _fail_in_drain])
+def test_drain_stream_cleans_up_when_build_fails(spark, tmp_path, drain_env, build):
+    """A build that raises while planning, or a query that fails inside the
+    drain (after the 8-partition setting is applied): either way the old
+    shuffle-partition setting is back and the staging dir is gone."""
+    import __spark_entry__ as entry
+
+    with pytest.raises(Exception):
+        entry._drain_stream(
+            spark,
+            str(tmp_path),
+            "drain_fail",
+            [[spark.range(2), spark.range(2, 4)]],
+            build,
+            "append",
+        )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "5"
+    assert _staging_dirs(tmp_path) == []

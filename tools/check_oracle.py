@@ -2,6 +2,8 @@
 on Spark and its oracle_sql() on DuckDB at a given sf dir; compare row count,
 column-name set, and an order-insensitive value hash. Usage:
     python tools/check_oracle.py [sf_dir] [query ...]
+Exits 0 when every query passes, 1 when any fails, and 2 (before starting
+Spark) when a named query is not in queries().
 """
 
 from __future__ import annotations
@@ -47,6 +49,11 @@ def _norm(v) -> str:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    qs, oracles = entry.queries(), entry.oracle_sql()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print(f"unknown query names: {unknown}", file=sys.stderr)
+        sys.exit(2)
     spark = get_spark(cores=16)
     con = duckdb.connect()
     for t in TABLES:
@@ -54,7 +61,6 @@ def main() -> None:
         if os.path.exists(p):
             con.sql(f"create view {t} as select * from '{p}'")
 
-    qs, oracles = entry.queries(), entry.oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
@@ -118,6 +124,7 @@ def main() -> None:
                 print("   only oracle:", os_)
     print("\nfailures:", failures or "none")
     spark.stop()
+    sys.exit(1 if failures else 0)
 
 
 if __name__ == "__main__":
