@@ -1,13 +1,21 @@
 """Exact in-memory graph traversals (no Spark imports — corelib invariant).
 
-Driver-side counterparts of the distributed BFS loops in
+Driver-side counterparts of the distributed path loops in
 operators/graph_queries.py, used below the collect threshold
 (DRIVER_GRAPH_MAX_EDGES): a KG vocabulary graph is bounded by the canonical
 term dictionary, orders of magnitude smaller than the corpus, which is why
 the reference serves the same traversals from a single Neo4j server
-(app/retrieval/path_reasoning.py:15-43). Semantics are EXACTLY the
-distributed loops' — level-synchronous BFS, lexicographically-min
-(path, rels) per node per level, visited pruning — proven equal by
+(app/retrieval/path_reasoning.py:15-43). Two traversals over one
+``adjacency`` dict:
+
+- ``multi_source_paths``: shortest paths per (seed, target) pair —
+  level-synchronous BFS per seed, lexicographically-min (path, rels) per
+  node per level, visited pruning (reference C11, and C13 seed→target
+  paths; ``graph_queries.shortest_path`` is its one-pair case);
+- ``all_simple_paths``: every cycle-free path up to max_hops, no visited
+  pruning (reference C12).
+
+Semantics are EXACTLY the distributed loops', proven equal by
 tests/test_graph_queries.py's forced-distributed equality tests. Python
 tuple-of-str comparison matches Spark's array<string> ordering (element-wise
 code-point compare; all paths within a level share one length, so the
@@ -28,37 +36,6 @@ def adjacency(edge_rows) -> dict[str, list[tuple[str, str]]]:
     for x, y, rel in edge_rows:
         adj[x].append((y, rel))
     return adj
-
-
-def bfs_shortest_path(
-    adj: dict[str, list[tuple[str, str]]],
-    src: str,
-    dst: str,
-    max_hops: int,
-) -> tuple[int, list[str], list[str]] | None:
-    """Min-hop path src -> dst; among min-hop paths, the lexicographically
-    min (path, rels). None if unreachable within max_hops or src == dst."""
-    if src == dst:
-        return None
-    frontier: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {
-        src: ((src,), ())
-    }
-    visited = {src}
-    for hop in range(1, max_hops + 1):
-        cand: dict[str, tuple[tuple[str, ...], tuple[str, ...]]] = {}
-        for n, (p, r) in frontier.items():
-            for m, rel in adj.get(n, ()):
-                c = (p + (m,), r + (rel,))
-                if m not in cand or c < cand[m]:
-                    cand[m] = c
-        if dst in cand:
-            p, r = cand[dst]
-            return hop, list(p), list(r)
-        frontier = {m: c for m, c in cand.items() if m not in visited}
-        if not frontier:
-            return None
-        visited |= frontier.keys()
-    return None
 
 
 def all_simple_paths(
@@ -97,10 +74,11 @@ def multi_source_paths(
     targets: list[str],
     max_hops: int,
 ) -> list[tuple[str, str, int, list[str], list[str]]]:
-    """Per (seed, target) pair: first-arrival hop + lexicographically-min
-    path — identical to bfs_shortest_path per pair (one BFS per seed serves
-    all its targets; targets keep expanding as intermediates, matching the
-    distributed loop, which never removes hit nodes from the frontier)."""
+    """Per (seed, target) pair with seed != target: first-arrival hop +
+    lexicographically-min (path, rels) among min-hop paths; unreachable
+    pairs are absent. One BFS per seed serves all its targets; targets keep
+    expanding as intermediates, matching the distributed loop, which never
+    removes hit nodes from the frontier."""
     found: list[tuple[str, str, int, list[str], list[str]]] = []
     tset = set(targets)
     for s in sorted(set(seeds)):

@@ -4,29 +4,42 @@ The reference serves its graph from one Neo4j instance, where global
 analytics (centrality, clustering structure) come from APOC/GDS calls on
 the single box (SURVEY §2 non-goal for the *serving* surface). At
 10^12-document scale the entity graph itself is cluster-sized, so the
-Spark-native engine carries the two canonical distributed graph analytics
-as first-class operators:
+Spark-native engine carries them as first-class distributed operators:
 
-- ``pagerank``: power iteration expressed as join + aggregate per round,
-  lineage kept flat with ``localCheckpoint`` (the GraphFrames/Pregel
-  shape). Contributions are summed by one groupBy: map-side partial
+- ranking: ``pagerank`` (global, personalized, weighted) and ``hits`` —
+  power iteration as join + one groupBy sum per round (map-side partial
   aggregation sends a head entity's reducer one row per map task, not its
-  whole neighbor list.
-- ``triangle_stats``: per-node triangle counts + local clustering
-  coefficient via degree-ordered edge orientation (the MR "count triangles
-  by wedge-closing on the oriented graph" algorithm). Orientation bounds
-  every wedge fan-out by the SMALLER endpoint degree, so a Zipf-headed hub
-  with degree d contributes O(d) oriented wedges, not O(d^2) — the
-  property that keeps the join alive at web scale.
+  whole neighbor list), lineage kept flat with ``localCheckpoint`` (the
+  GraphFrames/Pregel shape);
+- triangle family: ``triangle_stats``, ``ktruss``, ``count_4cliques`` and
+  ``link_prediction``/``rich_club`` over one pinned degree frame
+  (``_degrees``). Triangles come from ONE enumerator: ``_oriented``
+  directs each edge by (deg, name) rank and ``_triangles`` closes the
+  wedges, so a Zipf-headed hub with degree d contributes O(d) oriented
+  wedges, not O(d^2);
+- peeling: ``kcore`` and ``ktruss`` share the ``_peel`` loop (fixed budget
+  or run to convergence);
+- traversal: ``closeness``, ``harmonic``, ``effective_diameter`` (on
+  ``_ms_bfs_dists``), ``betweenness``, ``deterministic_walks``, ``sssp``
+  and ``label_propagation``; the first five and LPA read one pinned
+  mirrored adjacency (``_adjacency``) with its origin restriction
+  (``_origins``);
+- structure: ``assortativity``, ``modularity``, ``greedy_coloring``,
+  ``maximal_independent_set``, ``butterflies``, ``dyad_census``,
+  ``scc_by_closure`` and ``degree_discount_seeds``.
 
-Both take the same undirected edge-list contract as the CC operators:
-``edges`` with columns (a, b), a < b, distinct. Both pin the (tiny,
-vocabulary-sized) edge frame before fanning it out: Catalyst reuses
+Undirected operators take the same edge-list contract as the CC operators:
+``edges`` with columns (a, b), a < b, distinct (``hits``, ``dyad_census``
+and ``scc_by_closure`` read a directed (src, dst) list, ``butterflies`` a
+bipartite incidence frame). Each pins the
+(tiny, vocabulary-sized) edge frame before fanning it out: Catalyst reuses
 nothing across union/self-join branches (CLAUDE.md late-r2), so an
 unpinned corpus-derived lineage would re-run per reference.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -46,6 +59,42 @@ def _mirrored(e0: DataFrame) -> DataFrame:
     """Symmetric (x, y) view of the pinned a<b edge list."""
     return e0.select(F.col("a").alias("x"), F.col("b").alias("y")).union(
         e0.select(F.col("b").alias("x"), F.col("a").alias("y"))
+    )
+
+
+def _degrees(e0: DataFrame, num_partitions: int = 8) -> DataFrame:
+    """Pinned (name, deg) frame of the pinned a<b edge list — also its node
+    list. The pre-pin repartition sets the pinned frame's partition count."""
+    return (
+        _mirrored(e0)
+        .groupBy(F.col("x").alias("name"))
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .repartition(num_partitions, "name")
+        .localCheckpoint()
+    )
+
+
+def _adjacency(edges: DataFrame, num_partitions: int) -> DataFrame:
+    """Pinned mirrored (x, y) adjacency of the undirected (a, b) edge list,
+    spread over ``num_partitions`` by x before the pin. Without that width
+    the pin keeps the union's partition count and the first BFS frontier
+    starts on one partition (measured 14-27% slower on the BFS family at
+    sf0.1)."""
+    e0 = edges.select("a", "b").localCheckpoint()
+    return _mirrored(e0).repartition(num_partitions, "x").localCheckpoint()
+
+
+def _origins(
+    adj: DataFrame, sources: DataFrame | None
+) -> tuple[DataFrame, DataFrame]:
+    """(nodes, origins) of a pinned adjacency: the distinct node list, and
+    the traversal origins — the nodes named by the first column of
+    ``sources``, or every node when it is None."""
+    nodes = adj.select(F.col("x").alias("name")).distinct()
+    if sources is None:
+        return nodes, nodes
+    return nodes, nodes.join(
+        sources.select(F.col(sources.columns[0]).alias("name")), "name"
     )
 
 
@@ -186,17 +235,13 @@ def pagerank(
     )
 
 
-def _triangles(e0: DataFrame, deg: DataFrame) -> DataFrame:
-    """Enumerate each triangle of the pinned a<b edge list exactly once as
-    (u, v, w) — vertices in (deg, name) rank order, NOT name order.
-
-    Degree-ordered orientation: edge {u, v} is directed from the endpoint
-    with the smaller (deg, name) pair to the larger. Every triangle then
-    has exactly one node with two out-edges (its minimum-rank corner), so
-    (wedge at u) ∩ (closing oriented edge) hits each triangle exactly once,
-    and a degree-d Zipf hub is the APEX of no wedge unless both neighbors
-    have even higher degree — the property that keeps the self-join alive
-    at web scale.
+def _oriented(e0: DataFrame, deg: DataFrame) -> DataFrame:
+    """Pinned degree-ordered orientation (src, dst, dst_deg) of the pinned
+    a<b edge list: edge {a, b} is directed from the endpoint with the
+    smaller (deg, name) pair to the larger. Every triangle then has exactly
+    one node with two out-edges (its minimum-rank corner), and a degree-d
+    Zipf hub is the source of few edges — the property that keeps the
+    wedge self-join alive at web scale.
     """
     da, db = deg.alias("da"), deg.alias("db")
     with_deg = (
@@ -209,11 +254,20 @@ def _triangles(e0: DataFrame, deg: DataFrame) -> DataFrame:
     a_first = (F.col("deg_a") < F.col("deg_b")) | (
         (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
     )
-    oriented = with_deg.select(
+    return with_deg.select(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
         F.when(a_first, F.col("deg_b")).otherwise(F.col("deg_a")).alias("dst_deg"),
     ).localCheckpoint()
+
+
+def _triangles(oriented: DataFrame) -> DataFrame:
+    """Enumerate each triangle of an ``_oriented`` edge frame exactly once
+    as (u, v, w) — vertices in (deg, name) rank order, NOT name order, so
+    u -> v, u -> w and v -> w are all oriented edges. (wedge at the
+    minimum-rank corner u) ∩ (closing oriented edge) hits each triangle
+    exactly once; wedge fan-out is bounded by the smaller endpoint degree.
+    """
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     # wedge (src -> v, src -> w) with v before w in (deg, name) rank order;
     # the closing edge {v, w} is then oriented v -> w by construction.
@@ -247,14 +301,8 @@ def triangle_stats(edges: DataFrame, num_partitions: int = 8) -> DataFrame:
     standard MR triangle enumeration.
     """
     e0 = edges.select("a", "b").localCheckpoint()
-    deg = (
-        _mirrored(e0)
-        .groupBy(F.col("x").alias("name"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .repartition(num_partitions, "name")
-        .localCheckpoint()
-    )
-    tris = _triangles(e0, deg)
+    deg = _degrees(e0, num_partitions)
+    tris = _triangles(_oriented(e0, deg))
     per_node = (
         tris.select(F.col("u").alias("name"))
         .union(tris.select(F.col("v").alias("name")))
@@ -309,13 +357,7 @@ def link_prediction(
     have deg >= 2 by construction so ln(deg) > 0 always.
     """
     e0 = edges.select("a", "b").localCheckpoint()
-    deg = (
-        _mirrored(e0)
-        .groupBy(F.col("x").alias("name"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .repartition(num_partitions, "name")
-        .localCheckpoint()
-    )
+    deg = _degrees(e0, num_partitions)
     ctr = _mirrored(e0).join(deg, F.col("x") == F.col("name")).select(
         "x", "y", F.col("deg").alias("wdeg")
     )
@@ -407,6 +449,24 @@ def greedy_coloring(
     return out.select(F.col("v").alias("name"), "color")
 
 
+def _peel(
+    e: DataFrame, peel_round: Callable[[DataFrame], DataFrame], rounds: int | None
+) -> DataFrame:
+    """Apply ``peel_round`` to the pinned edge frame ``rounds`` times, or
+    with rounds=None until a round keeps the edge count (one count probe
+    per round) — the shared loop of ``kcore`` and ``ktruss``."""
+    budget = rounds if rounds is not None else 1 << 30
+    prev_edges = -1
+    for _ in range(budget):
+        e = peel_round(e)
+        if rounds is None:
+            n = e.count()
+            if n == prev_edges:
+                break
+            prev_edges = n
+    return e
+
+
 def kcore(edges: DataFrame, k: int = 2, rounds: int | None = 8) -> DataFrame:
     """k-core peeling over the undirected (a, b) edge list.
 
@@ -424,10 +484,8 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int | None = 8) -> DataFrame:
     checkpointed edge frame; lineage stays flat via localCheckpoint, and
     the edge set only ever shrinks.
     """
-    e = edges.select("a", "b").localCheckpoint()
-    budget = rounds if rounds is not None else 1 << 30
-    prev_edges = -1
-    for _ in range(budget):
+
+    def peel_round(e: DataFrame) -> DataFrame:
         deg = (
             _mirrored(e)
             .groupBy(F.col("x").alias("name"))
@@ -436,12 +494,9 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int | None = 8) -> DataFrame:
         keep = deg.where(F.col("deg") >= k).select("name").localCheckpoint()
         ka = keep.select(F.col("name").alias("a"))
         kb = keep.select(F.col("name").alias("b"))
-        e = e.join(ka, "a").join(kb, "b").select("a", "b").localCheckpoint()
-        if rounds is None:
-            n = e.count()
-            if n == prev_edges:
-                break
-            prev_edges = n
+        return e.join(ka, "a").join(kb, "b").select("a", "b").localCheckpoint()
+
+    e = _peel(edges.select("a", "b").localCheckpoint(), peel_round, rounds)
     return (
         _mirrored(e)
         .groupBy(F.col("x").alias("name"))
@@ -454,14 +509,7 @@ def _edge_support(e: DataFrame, num_partitions: int = 8) -> DataFrame:
     for every edge in >= 1 triangle. Each enumerated triangle credits its
     three edges; pairs are re-normalized with least/greatest because
     ``_triangles`` orders vertices by (deg, name) rank, not name."""
-    deg = (
-        _mirrored(e)
-        .groupBy(F.col("x").alias("name"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .repartition(num_partitions, "name")
-        .localCheckpoint()
-    )
-    tris = _triangles(e, deg).localCheckpoint()
+    tris = _triangles(_oriented(e, _degrees(e, num_partitions))).localCheckpoint()
     pairs = (
         tris.select(F.col("u").alias("p"), F.col("v").alias("q"))
         .union(tris.select(F.col("u").alias("p"), F.col("w").alias("q")))
@@ -510,20 +558,15 @@ def ktruss(
     """
     if k < 3:
         raise ValueError("k-truss requires k >= 3 (k-2 >= 1 triangle per edge)")
-    e = edges.select("a", "b").localCheckpoint()
-    budget = rounds if rounds is not None else 1 << 30
-    prev_edges = -1
-    for _ in range(budget):
+
+    def peel_round(e: DataFrame) -> DataFrame:
         # supp only contains edges in >= 1 triangle, and k - 2 >= 1, so
         # semi-joining on the pre-filtered support keys == the left-join +
         # coalesce(supp, 0) >= k - 2 filter.
         keep = _edge_support(e, num_partitions).where(F.col("supp") >= k - 2)
-        e = e.join(keep, ["a", "b"], "semi").localCheckpoint()
-        if rounds is None:
-            n = e.count()
-            if n == prev_edges:
-                break
-            prev_edges = n
+        return e.join(keep, ["a", "b"], "semi").localCheckpoint()
+
+    e = _peel(edges.select("a", "b").localCheckpoint(), peel_round, rounds)
     supp = _edge_support(e, num_partitions)
     return (
         e.join(supp, ["a", "b"], "left")
@@ -680,12 +723,10 @@ def label_propagation(
     count aggregate, one per-node top-1 window (partitioned by node — never
     global); lineage flattened per round via localCheckpoint.
     """
-    e0 = edges.select("a", "b").localCheckpoint()
-    adj = _mirrored(e0).repartition(num_partitions, "x").localCheckpoint()
+    adj = _adjacency(edges, num_partitions)
+    nodes, _ = _origins(adj, None)
     labels = (
-        adj.select(F.col("x").alias("name"))
-        .distinct()
-        .withColumn("label", F.col("name"))
+        nodes.withColumn("label", F.col("name"))
         .repartition(num_partitions, "name")
         .localCheckpoint()
     )
@@ -720,22 +761,18 @@ def _ms_bfs_dists(
     num_partitions: int,
 ) -> DataFrame:
     """Multi-source BFS distance frame (src, node, d) over the undirected
-    (a, b) edge list — the shared engine under `closeness` and `harmonic`.
+    (a, b) edge list — the shared engine under `closeness`, `harmonic` and
+    `effective_diameter`.
     Per round ONE join of the (src, node)-keyed frontier against the
     pinned mirrored adjacency, a distinct, and a LEFT ANTI against the
     visited union (anti-join keeps the Catalyst size estimate bounded by
     the left side — the r5 stats-explosion rule); frontiers are disjoint
     by construction so `visited` is a plain union of checkpointed
     frontiers, never re-joined with itself."""
-    e0 = edges.select("a", "b").localCheckpoint()
-    adj = _mirrored(e0).repartition(num_partitions, "x").localCheckpoint()
-    nodes = adj.select(F.col("x").alias("name")).distinct()
-    if sources is not None:
-        nodes = nodes.join(
-            sources.select(F.col(sources.columns[0]).alias("name")), "name"
-        )
+    adj = _adjacency(edges, num_partitions)
+    _, origins = _origins(adj, sources)
     frontier = (
-        nodes.select(
+        origins.select(
             F.col("name").alias("src"),
             F.col("name").alias("node"),
             F.lit(0).cast("int").alias("d"),
@@ -957,14 +994,8 @@ def betweenness(
     in the Catalyst size estimate (no self-join growth, the r5
     stats-explosion rule).
     """
-    e0 = edges.select("a", "b").localCheckpoint()
-    adj = _mirrored(e0).repartition(num_partitions, "x").localCheckpoint()
-    nodes = adj.select(F.col("x").alias("name")).distinct()
-    srcs = nodes
-    if sources is not None:
-        srcs = nodes.join(
-            sources.select(F.col(sources.columns[0]).alias("name")), "name"
-        )
+    adj = _adjacency(edges, num_partitions)
+    nodes, srcs = _origins(adj, sources)
     frontier = (
         srcs.select(
             F.col("name").alias("src"),
@@ -1087,14 +1118,8 @@ def deterministic_walks(
     per step with localCheckpoint; all joins are additive in the Catalyst
     size estimate.
     """
-    e0 = edges.select("a", "b").localCheckpoint()
-    adj = _mirrored(e0).repartition(num_partitions, "x").localCheckpoint()
-    nodes = adj.select(F.col("x").alias("name")).distinct()
-    srcs = nodes
-    if sources is not None:
-        srcs = nodes.join(
-            sources.select(F.col(sources.columns[0]).alias("name")), "name"
-        )
+    adj = _adjacency(edges, num_partitions)
+    _, srcs = _origins(adj, sources)
     cur = (
         srcs.select(F.col("name").alias("src"), F.col("name").alias("node"))
         .repartition(num_partitions, "src")
@@ -1552,52 +1577,30 @@ def degree_discount_seeds(
 
 def count_4cliques(edges: DataFrame) -> DataFrame:
     """Global 4-clique count over the undirected (a, b) edge list, by
-    degree-ordered orientation (Chiba-Nishizeki): orient every edge from
-    the lexicographically smaller (deg, name) endpoint, enumerate oriented
-    triangles (fan-out bounded by the SMALLER endpoint degree — the shape
-    that survives Zipf hubs), then extend each triangle (v, w, x) by the
-    apexes u with u→v, u→w, u→x. Every 4-clique is counted exactly once
-    (its orientation order is unique). Pure integer counting.
+    degree-ordered orientation (Chiba-Nishizeki): enumerate each triangle
+    once as (u, v, w) with ``_oriented`` + ``_triangles`` (fan-out bounded
+    by the SMALLER endpoint degree — the shape that survives Zipf hubs),
+    then extend it by the apexes p with p→u, p→v, p→w. Every 4-clique is
+    counted exactly once, from its minimum-rank corner p (its orientation
+    order is unique). Pure integer counting.
 
     Returns one row: (n_edges, n_triangles, n_cliques4).
     """
     e0 = edges.select("a", "b").distinct().localCheckpoint(eager=True)
-    deg = (
-        _mirrored(e0)
-        .groupBy(F.col("x").alias("n"))
-        .agg(F.count(F.lit(1)).cast("long").alias("dg"))
-        .localCheckpoint(eager=True)
-    )
-    da = deg.select(F.col("n").alias("a"), F.col("dg").alias("da"))
-    db = deg.select(F.col("n").alias("b"), F.col("dg").alias("db"))
-    ed = e0.join(da, "a").join(db, "b")
-    fwd = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    eo = ed.select(
-        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("x"),
-        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("y"),
-    ).localCheckpoint(eager=True)
-    # oriented triangles u -> v -> w (u -> w closes the wedge)
-    w1 = eo.select(F.col("x").alias("u"), F.col("y").alias("v"))
-    w2 = eo.select(F.col("x").alias("v2"), F.col("y").alias("w"))
-    wedge = w1.join(w2, F.col("v") == F.col("v2")).select("u", "v", "w")
-    closer = eo.select(F.col("x").alias("u2"), F.col("y").alias("w2"))
-    tri = wedge.join(
-        closer, (F.col("u") == F.col("u2")) & (F.col("w") == F.col("w2"))
-    ).select("u", "v", "w")
+    eo = _oriented(e0, _degrees(e0))
+    tri = _triangles(eo)
     n_tri = tri.groupBy().agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
     # extend: apex p with p -> u, p -> v, p -> w completes a 4-clique
     j1 = tri.join(
-        eo.select(F.col("x").alias("p"), F.col("y").alias("tu")),
+        eo.select(F.col("src").alias("p"), F.col("dst").alias("tu")),
         F.col("u") == F.col("tu"),
     ).select("p", "u", "v", "w")
     j2 = j1.join(
-        eo.select(F.col("x").alias("p2"), F.col("y").alias("tv")),
+        eo.select(F.col("src").alias("p2"), F.col("dst").alias("tv")),
         (F.col("p") == F.col("p2")) & (F.col("v") == F.col("tv")),
     ).select("p", "u", "v", "w")
     j3 = j2.join(
-        eo.select(F.col("x").alias("p3"), F.col("y").alias("tw")),
+        eo.select(F.col("src").alias("p3"), F.col("dst").alias("tw")),
         (F.col("p") == F.col("p3")) & (F.col("w") == F.col("tw")),
     )
     n_c4 = j3.groupBy().agg(F.count(F.lit(1)).cast("long").alias("n_cliques4"))
@@ -1616,16 +1619,8 @@ def rich_club(edges: DataFrame, ks: tuple[int, ...] = (1, 2, 4, 8)) -> DataFrame
     edge list, then the k dimension is a broadcast explode over the SAME
     joined frame — adding a k never re-reads the graph.
     Output: (k, n_nodes, n_edges, phi)."""
-    from pyspark.sql import functions as F
-
     e = edges.select("a", "b").localCheckpoint(eager=True)
-    deg = (
-        e.select(F.col("a").alias("v"))
-        .unionAll(e.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        .localCheckpoint(eager=True)
-    )
+    deg = _degrees(e)
     kdim = F.explode(F.array(*[F.lit(int(k)) for k in ks])).alias("k")
     nodes_k = (
         deg.select("deg", kdim)
@@ -1634,8 +1629,8 @@ def rich_club(edges: DataFrame, ks: tuple[int, ...] = (1, 2, 4, 8)) -> DataFrame
         .agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
     )
     ej = (
-        e.join(deg.select(F.col("v").alias("a"), F.col("deg").alias("da")), "a")
-        .join(deg.select(F.col("v").alias("b"), F.col("deg").alias("db")), "b")
+        e.join(deg.select(F.col("name").alias("a"), F.col("deg").alias("da")), "a")
+        .join(deg.select(F.col("name").alias("b"), F.col("deg").alias("db")), "b")
     )
     edges_k = (
         ej.select("da", "db", kdim)

@@ -124,75 +124,13 @@ def shortest_path(
     """BFS shortest path src -> dst (undirected), one row:
     (hops, path: array<node_id>, rels: array<rel_type>) or empty.
     Reference C11 (app/retrieval/path_reasoning.py:15-29, shortestPath *..6).
-    Below DRIVER_GRAPH_MAX_EDGES: exact in-memory BFS on the collected edge
-    list. Above (or force_distributed): frontier loop of distributed joins —
-    path arrays on the frontier, visited anti-join, early exit on target hit.
+    The one-seed, one-target case of multi_source_shortest_paths; src == dst
+    leaves no pair to resolve, so the same-node guard (path_reasoning.py:66)
+    yields the empty result.
     """
-    spark = edges.sparkSession
-    if src_id == dst_id:  # same-node guard (path_reasoning.py:66)
-        return spark.createDataFrame([], "hops int, path array<string>, rels array<string>")
-    if not force_distributed:
-        local_adj = _try_collect_adjacency(undirected(edges))
-        if local_adj is not None:
-            res = graphalgs.bfs_shortest_path(local_adj, src_id, dst_id, max_hops)
-            return spark.createDataFrame(
-                [res] if res else [],
-                "hops int, path array<string>, rels array<string>",
-            )
-    adj = _pin(undirected(edges))
-    frontier = spark.createDataFrame(
-        [(src_id, [src_id], [])], "y string, path array<string>, rels array<string>"
-    )
-    visited = frontier.select("y")
-    try:
-        for hop in range(1, max_hops + 1):
-            # TWO driver rounds per hop (r4; was 5 in r2, 4 in r3): the hop's
-            # single materialization fuses expand -> min-per-node -> visited
-            # anti-join, and one tiny follow-up collect over the checkpoint
-            # serves BOTH the target probe and the emptiness check (a
-            # limit(1) marker row signals non-empty). Probing the anti-joined
-            # frontier instead of the raw expansion is equivalent: dst is
-            # never in visited (a visited dst would have returned on an
-            # earlier hop). Min-per-node BEFORE the anti-join is equivalent:
-            # removing whole nodes never changes another node's min, and the
-            # lexicographically-min-prefix rule composes as before.
-            frontier = (
-                adj.join(frontier.hint("broadcast"), adj.x == frontier.y)
-                .select(
-                    adj.y.alias("y"),
-                    F.concat("path", F.array(adj.y)).alias("path"),
-                    F.concat("rels", F.array("rel_type")).alias("rels"),
-                )
-                .groupBy("y")
-                .agg(F.min(F.struct("path", "rels")).alias("pr"))
-                .select("y", F.col("pr.path").alias("path"), F.col("pr.rels").alias("rels"))
-                .join(visited, "y", "left_anti")
-                .localCheckpoint()
-            )
-            probe = (
-                frontier.where(F.col("y") == dst_id)
-                .select(F.lit(1).alias("m"), "path", "rels")
-                .unionByName(
-                    frontier.limit(1).select(F.lit(0).alias("m"), "path", "rels")
-                )
-                .collect()
-            )
-            hit = next((r for r in probe if r.m == 1), None)
-            if hit is not None:
-                return spark.createDataFrame(
-                    [(hop, hit.path, hit.rels)],
-                    "hops int, path array<string>, rels array<string>",
-                )
-            if not probe:  # no marker row at all -> frontier exhausted
-                break
-            # per-hop frontiers are disjoint by construction (each anti-joins
-            # everything before it), so visited grows by plain union of
-            # checkpointed frames — no distinct, no per-hop job; it is
-            # evaluated inside the next hop's materialization
-            visited = visited.union(frontier.select("y"))
-        return spark.createDataFrame([], "hops int, path array<string>, rels array<string>")
-    finally:
-        adj.unpersist()
+    return multi_source_shortest_paths(
+        edges, [src_id], [dst_id], max_hops, force_distributed
+    ).select("hops", "path", "rels")
 
 
 def multi_source_shortest_paths(
@@ -208,11 +146,14 @@ def multi_source_shortest_paths(
     loop — the r2 verdict's driver-latency sink in _reasoning_paths).
 
     Returns (seed_id, target_id, hops, path, rels): per pair, the minimum
-    hop count and the lexicographically-min path at that hop — identical
-    to running shortest_path() per pair (reference C11 semantics,
-    app/retrieval/path_reasoning.py:15-29), because the per-seed traversal
-    (visited set, min-path-per-node frontier) is target-independent and
-    targets only observe their first-arrival hop."""
+    hop count and the lexicographically-min path at that hop (reference C11
+    semantics, app/retrieval/path_reasoning.py:15-29) — the per-seed
+    traversal (visited set, min-path-per-node frontier) is
+    target-independent and targets only observe their first-arrival hop.
+    Below DRIVER_GRAPH_MAX_EDGES: exact in-memory BFS on the collected edge
+    list. Above (or force_distributed): frontier loop of distributed joins —
+    path arrays on the frontier, visited anti-join, early exit once every
+    pair is resolved."""
     spark = edges.sparkSession
     remaining = {(s, t) for s in seed_ids for t in target_ids if s != t}
     out_schema = (
@@ -243,11 +184,13 @@ def multi_source_shortest_paths(
     found: list[tuple] = []
     try:
         for hop in range(1, max_hops + 1):
-            # TWO driver rounds per hop (r4, same fusion as shortest_path):
-            # expand -> min-per-(seed,node) -> visited anti-join in ONE
-            # materialization, then one collect for target hits + emptiness.
-            # Probing the anti-joined frontier is equivalent to probing the
-            # raw expansion: a (seed, target) first-arrival is by definition
+            # TWO driver rounds per hop (r4; was 5 in r2, 4 in r3): expand ->
+            # min-per-(seed,node) -> visited anti-join in ONE
+            # materialization, then one tiny collect over the checkpoint
+            # serves both the target hits and the emptiness check (a
+            # limit(1) marker row signals non-empty). Probing the
+            # anti-joined frontier is equivalent to probing the raw
+            # expansion: a (seed, target) first-arrival is by definition
             # not in visited, and later re-arrivals were already discarded
             # from `remaining` at first arrival.
             frontier = (
@@ -259,8 +202,7 @@ def multi_source_shortest_paths(
                     F.concat("rels", F.array("rel_type")).alias("rels"),
                 )
                 # lexicographically-min path per (seed, node): every prefix of
-                # a min shortest path is itself min, so these compose — the
-                # same determinism rule as shortest_path()
+                # a min shortest path is itself min, so these compose
                 .groupBy("seed_id", "y")
                 .agg(F.min(F.struct("path", "rels")).alias("pr"))
                 .select(
@@ -288,7 +230,9 @@ def multi_source_shortest_paths(
                     found.append((r.seed_id, r.y, hop, r.path, r.rels))
             if not remaining or not probe:
                 break
-            # disjoint per-hop frontiers -> plain union, no distinct, no job
+            # per-hop frontiers are disjoint by construction (each anti-joins
+            # everything before it), so visited grows by plain union of
+            # checkpointed frames — no distinct, no per-hop job
             visited = visited.union(frontier.select("seed_id", "y"))
         return spark.createDataFrame(found, out_schema)
     finally:
@@ -306,7 +250,8 @@ def all_paths(
     """All simple paths src -> dst up to max_hops, ORDER BY hops LIMIT n
     (reference C12, path_reasoning.py:31-43). Cycle-free via
     array_contains(path, next) check instead of a visited set (path-distinct,
-    not node-distinct). Same driver/distributed threshold as shortest_path."""
+    not node-distinct). Same driver/distributed threshold as
+    multi_source_shortest_paths."""
     spark = edges.sparkSession
     if not force_distributed:
         local_adj = _try_collect_adjacency(undirected(edges))

@@ -1,5 +1,7 @@
 """Fifteenth-session r5 operators (batch B): ARI/Coleman-Liau readability,
-TextRank keywords, dyad census — known-answer and brute-force parity."""
+TextRank keywords — known-answer and brute-force parity. The graph
+operators of this batch (dyad census, SCC, degree discount, 4-cliques) are
+tested in test_graph_analytics.py."""
 
 from __future__ import annotations
 
@@ -116,43 +118,6 @@ def test_textrank_isolated_token_excluded(spark):
         r["word"] for r in textrank_keywords(df, k=10, stopwords=[]).collect()
     }
     assert words == {"alpha", "beta"}
-
-
-# ── dyad_census ──────────────────────────────────────────────────────────────
-
-
-def test_dyad_census_counts(spark):
-    from medical_doc_knowledge_graph_system_spark.operators.graph_analytics import (
-        dyad_census,
-    )
-
-    edges = [
-        ("p", "a", "b"),
-        ("p", "b", "a"),  # mutual
-        ("p", "a", "c"),  # asym
-        ("p", "c", "c"),  # self loop dropped
-        ("p", "a", "b"),  # duplicate dropped
-        ("q", "x", "y"),  # asym
-    ]
-    df = spark.createDataFrame(edges, "pred string, subj string, obj string")
-    out = {
-        r["pred"]: r
-        for r in dyad_census(df, "subj", "obj", ["pred"]).collect()
-    }
-    assert out["p"]["mutual"] == 1 and out["p"]["asym"] == 1
-    assert abs(out["p"]["reciprocity"] - 2 / 3) < 1e-12
-    assert out["q"]["mutual"] == 0 and out["q"]["reciprocity"] == 0.0
-
-
-def test_dyad_census_fully_mutual(spark):
-    from medical_doc_knowledge_graph_system_spark.operators.graph_analytics import (
-        dyad_census,
-    )
-
-    edges = [("a", "b"), ("b", "a"), ("b", "c"), ("c", "b")]
-    df = spark.createDataFrame(edges, "subj string, obj string")
-    r = dyad_census(df, "subj", "obj").collect()[0]
-    assert r["mutual"] == 2 and r["asym"] == 0 and r["reciprocity"] == 1.0
 
 
 # ── best_changepoint ─────────────────────────────────────────────────────────
@@ -456,117 +421,6 @@ def test_keyness_chi2_matches_formula(spark):
     assert abs(out["z"] - chi2(1, 2)) < 2e-3
 
 
-# ── scc_by_closure ───────────────────────────────────────────────────────────
-
-
-def test_scc_cycles_and_chain(spark):
-    from medical_doc_knowledge_graph_system_spark.operators.graph_analytics import (
-        scc_by_closure,
-    )
-
-    # cycle {a,b,c}, cycle {d,e}, chain f->g; a->d bridges the cycles
-    edges = [
-        ("a", "b"), ("b", "c"), ("c", "a"),
-        ("d", "e"), ("e", "d"),
-        ("a", "d"), ("f", "g"),
-    ]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    out = {r["name"]: r for r in scc_by_closure(df, rounds=6).collect()}
-    assert out["a"]["scc_id"] == out["b"]["scc_id"] == out["c"]["scc_id"] == "a"
-    assert out["a"]["scc_size"] == 3
-    assert out["d"]["scc_id"] == out["e"]["scc_id"] == "d"
-    assert out["d"]["scc_size"] == 2
-    assert out["f"]["scc_size"] == 1 and out["g"]["scc_size"] == 1
-    # the bridge must NOT merge the two cycles
-    assert out["a"]["scc_id"] != out["d"]["scc_id"]
-
-
-def test_scc_matches_python_tarjan_on_random_digraph(spark):
-    import random as _r
-
-    from medical_doc_knowledge_graph_system_spark.operators.graph_analytics import (
-        scc_by_closure,
-    )
-
-    rng = _r.Random(43)
-    nodes = [f"n{i:02d}" for i in range(15)]
-    edges = list(
-        {
-            (rng.choice(nodes), rng.choice(nodes))
-            for _ in range(40)
-        }
-    )
-    edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r["name"]: r["scc_id"] for r in scc_by_closure(df, rounds=15).collect()}
-
-    # reference: Tarjan via iterative Kosaraju
-    from collections import defaultdict
-
-    fwd, bwd = defaultdict(list), defaultdict(list)
-    ns = set()
-    for a, b in edges:
-        fwd[a].append(b)
-        bwd[b].append(a)
-        ns |= {a, b}
-
-    def reach(start, adj):
-        seen, stack = {start}, [start]
-        while stack:
-            for w in adj[stack.pop()]:
-                if w not in seen:
-                    seen.add(w)
-                    stack.append(w)
-        return seen
-
-    exp = {}
-    for v in ns:
-        scc = reach(v, fwd) & reach(v, bwd)
-        exp[v] = min(scc)
-    assert got == exp
-
-
-# ── degree_discount_seeds ────────────────────────────────────────────────────
-
-
-def test_degree_discount_avoids_adjacent_hubs(spark):
-    from medical_doc_knowledge_graph_system_spark.operators.graph_analytics import (
-        degree_discount_seeds,
-    )
-
-    # star around h1 (deg 5) adjacent to h2 (deg 4, shares leaves);
-    # far clique {x,y,z}. After picking h1, h2's dd = 4 - 2 = 2, ties x/y/z
-    edges = [("h1", f"l{i}") for i in range(4)] + [("h1", "h2")]
-    edges += [("h2", f"l{i}") for i in range(3)]
-    edges += [("x", "y"), ("y", "z"), ("x", "z")]
-    df = spark.createDataFrame(edges, "a string, b string")
-    out = {r["sel_rank"]: r for r in degree_discount_seeds(df, k=3).collect()}
-    assert out[1]["name"] == "h1" and out[1]["dd"] == 5
-    # h2 raw deg 4 but one selected neighbor -> dd = 2; ties with x/y/z
-    # and 'h2' < 'x' so h2 still picked second at dd=2
-    assert out[2]["dd"] == 2
-    assert out[2]["name"] == "h2"
-    # leaves have dd = 2 - 2*2 = -2; clique members keep dd = 2 -> 'x'
-    assert out[3]["name"] == "x" and out[3]["dd"] == 2
-    # verify via exhaustive recompute
-    from collections import defaultdict
-
-    adj = defaultdict(set)
-    for a, b in edges:
-        adj[a].add(b)
-        adj[b].add(a)
-    picked, t = [], defaultdict(int)
-    for _ in range(3):
-        cand = sorted(
-            ((len(adj[v]) - 2 * t[v], v) for v in adj if v not in picked),
-            key=lambda p: (-p[0], p[1]),
-        )[0]
-        picked.append(cand[1])
-        for u in adj[cand[1]]:
-            t[u] += 1
-    assert [out[i]["name"] for i in (1, 2, 3)] == picked
-
-
 # ── topk_mips ────────────────────────────────────────────────────────────────
 
 
@@ -600,63 +454,6 @@ def test_topk_mips_matches_numpy(spark):
         assert [v for _, v, _ in rows] == order
         for rk, v, dotv in rows:
             assert abs(dotv - dots[v]) < 1e-4
-
-
-# ── count_4cliques ───────────────────────────────────────────────────────────
-
-
-def _py_count4(edges):
-    from itertools import combinations
-
-    adj = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    nodes = sorted(adj)
-    tri = c4 = 0
-    for t in combinations(nodes, 3):
-        if t[1] in adj[t[0]] and t[2] in adj[t[0]] and t[2] in adj[t[1]]:
-            tri += 1
-    for q in combinations(nodes, 4):
-        if all(y in adj[x] for x, y in combinations(q, 2)):
-            c4 += 1
-    return tri, c4
-
-
-def test_count4_known_graphs(spark):
-    from itertools import combinations
-
-    from medical_doc_knowledge_graph_system_spark.operators.graph_analytics import (
-        count_4cliques,
-    )
-
-    # K5 has C(5,3)=10 triangles and C(5,4)=5 four-cliques
-    k5 = list(combinations("abcde", 2))
-    df = spark.createDataFrame(k5, "a string, b string")
-    r = count_4cliques(df).collect()[0]
-    assert (r["n_edges"], r["n_triangles"], r["n_cliques4"]) == (10, 10, 5)
-
-
-def test_count4_matches_bruteforce_random(spark):
-    import random as _r
-
-    from medical_doc_knowledge_graph_system_spark.operators.graph_analytics import (
-        count_4cliques,
-    )
-
-    rng = _r.Random(53)
-    nodes = [f"n{i:02d}" for i in range(12)]
-    edges = sorted(
-        {
-            tuple(sorted((rng.choice(nodes), rng.choice(nodes))))
-            for _ in range(45)
-        }
-    )
-    edges = [e for e in edges if e[0] != e[1]]
-    df = spark.createDataFrame(edges, "a string, b string")
-    r = count_4cliques(df).collect()[0]
-    tri, c4 = _py_count4(edges)
-    assert (r["n_triangles"], r["n_cliques4"]) == (tri, c4)
 
 
 # ── label_centroid_cosines ───────────────────────────────────────────────────

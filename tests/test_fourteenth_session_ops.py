@@ -446,67 +446,6 @@ def test_events_theilsen_rooted_in_pinned_daily(spark):
     assert p.count("Scan parquet") == 0
 
 
-# ── greedy_coloring ──────────────────────────────────────────────────────────
-
-
-def _py_jp_coloring(edges, rounds=4):
-    nodes = sorted({v for e in edges for v in e})
-    adj = {v: set() for v in nodes}
-    for a, b in edges:
-        adj[a].add(b)
-        adj[b].add(a)
-    colors = {}
-    uncolored = set(nodes)
-    for r in range(1, rounds + 1):
-        take = {
-            v
-            for v in uncolored
-            if all(w not in uncolored or v > w for w in adj[v])
-        }
-        for v in take:
-            colors[v] = r
-        uncolored -= take
-    return colors
-
-
-def test_coloring_matches_python_and_is_proper(spark):
-    from medical_doc_knowledge_graph_system_spark.operators.graph_analytics import (
-        greedy_coloring,
-    )
-
-    rng = random.Random(19)
-    edges = sorted(
-        {
-            (min(a, b), max(a, b))
-            for a, b in (
-                (rng.randrange(0, 60), rng.randrange(0, 60)) for _ in range(200)
-            )
-            if a != b
-        }
-    )
-    df = spark.createDataFrame(edges, "a long, b long")
-    got = {r["name"]: r["color"] for r in greedy_coloring(df, rounds=4).collect()}
-    expect = _py_jp_coloring(edges, rounds=4)
-    assert got == expect
-    # properness: no colored edge endpoint pair shares a color
-    for a, b in edges:
-        if a in got and b in got:
-            assert got[a] != got[b]
-
-
-def test_coloring_path_graph_known_answer(spark):
-    from medical_doc_knowledge_graph_system_spark.operators.graph_analytics import (
-        greedy_coloring,
-    )
-
-    # path 1-2-3-4-5: round 1 colors {5}, round 2 {4}, round 3 {3}, ...
-    df = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 5)], "a long, b long"
-    )
-    got = {r["name"]: r["color"] for r in greedy_coloring(df, rounds=4).collect()}
-    assert got == {5: 1, 4: 2, 3: 3, 2: 4}  # node 1 left uncolored by budget
-
-
 # ── anova_oneway ─────────────────────────────────────────────────────────────
 
 

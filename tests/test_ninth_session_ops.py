@@ -1,7 +1,7 @@
 """Ninth-session r5 operators: SymSpell edit-distance blocking
-(completeness vs brute-force levenshtein, verify soundness), bipartite
-butterfly counting (known answer + brute-force 4-cycle enumeration), and
-BM25 top-k (python-reference equality on the quantized scores)."""
+(completeness vs brute-force levenshtein, verify soundness) and BM25 top-k
+(python-reference equality on the quantized scores). The butterfly-count
+tests live in test_graph_analytics.py."""
 
 from __future__ import annotations
 
@@ -12,9 +12,6 @@ from pyspark.sql import functions as F
 
 from medical_doc_knowledge_graph_system_spark.functions.corpusstats import bm25_topk
 from medical_doc_knowledge_graph_system_spark.functions.dedup import editdist_pairs
-from medical_doc_knowledge_graph_system_spark.operators.graph_analytics import (
-    butterflies,
-)
 
 
 # ── edit distance ────────────────────────────────────────────────────────────
@@ -64,50 +61,6 @@ def test_editdist_pairs_dedups_multi_variant_candidates(spark):
     df = spark.createDataFrame([("aa",), ("ab",)], "name string")
     rows = editdist_pairs(df, "name").collect()
     assert [(r.name_a, r.name_b, r.dist) for r in rows] == [("aa", "ab", 1)]
-
-
-# ── butterflies ──────────────────────────────────────────────────────────────
-
-
-def _brute_butterflies(incid):
-    left = sorted({d for d, _ in incid})
-    nb = {d: {s for dd, s in incid if dd == d} for d in left}
-    per = {}
-    for d1, d2 in combinations(left, 2):
-        c = len(nb[d1] & nb[d2])
-        if c >= 2:
-            bfly = c * (c - 1) // 2
-            for d in (d1, d2):
-                cop, tot = per.get(d, (0, 0))
-                per[d] = (cop + 1, tot + bfly)
-    return sorted((d, c, b) for d, (c, b) in per.items())
-
-
-def test_butterflies_known_answer_and_brute_force(spark):
-    # K_{2,2} on (1,2)x(a,b) = exactly 1 butterfly; doc 3 shares only one
-    # shingle with each -> in no butterfly; shingle 'z' is df=1 (dropped
-    # by min_df); 'w' has df=4 but stays under max_df
-    incid = [
-        (1, "a"), (1, "b"), (2, "a"), (2, "b"),
-        (3, "a"), (3, "z"),
-        (1, "w"), (2, "w"), (3, "w"), (4, "w"),
-    ]
-    df = spark.createDataFrame(incid, "doc_id bigint, shingle string")
-    got = sorted(
-        (r.doc_id, r.n_copair, r.n_bfly) for r in butterflies(df).collect()
-    )
-    assert got == _brute_butterflies(incid)
-    # docs 1 and 2 share {a, b, w} -> C(3,2)=3 butterflies each from that
-    # pair alone; 1-3 and 2-3 share {a, w} -> 1 more each
-    assert got == [(1, 2, 4), (2, 2, 4), (3, 2, 2)]
-
-
-def test_butterflies_df_cap_drops_frequent_shingles(spark):
-    # with max_df=2 the df-3 shingle is excluded and no butterfly survives
-    incid = [(1, "a"), (2, "a"), (3, "a"), (1, "b"), (2, "b"), (3, "b")]
-    df = spark.createDataFrame(incid, "doc_id bigint, shingle string")
-    assert butterflies(df, max_df=2).count() == 0
-    assert butterflies(df, max_df=3).count() == 3
 
 
 # ── BM25 ────────────────────────────────────────────────────────────────────

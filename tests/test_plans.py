@@ -1050,3 +1050,82 @@ def test_build_name_map_same_on_both_sides_of_driver_threshold(spark):
         r.name: r.canonical for r in build_name_map(names, driver_threshold=n - 1).collect()
     }
     assert set(got) == set(_NAMES) and len(set(got.values())) < n
+
+
+def _jaccard_token_sets(spark):
+    """30 docs over a 12-token vocabulary, some sets repeated: few enough
+    distinct sets and tokens for set_jaccard_pairs' dense bitmask path."""
+    import random
+
+    rng = random.Random(5)
+    vocab = [f"t{i:02d}" for i in range(12)]
+    rows = [(i, rng.sample(vocab, rng.randint(3, 8))) for i in range(24)]
+    rows += [(100 + i, toks) for i, toks in rows[:6]]
+    return spark.createDataFrame(rows, "doc_id long, toks array<string>")
+
+
+def test_set_jaccard_dense_path_is_broadcast_bit_count(spark, monkeypatch):
+    """Dense set_jaccard_pairs: every cross-set pair is one broadcast
+    comparison of BIGINT masks with bit_count, and no aggregate runs on
+    pairs (the sets and their masks are pinned, so the final plan holds no
+    HashAggregate at all). The general path, forced by DENSE_SETS_MAX = 0,
+    aggregates the per-token overlap count on (sa, sb), so the pin is not
+    vacuous."""
+    from medical_doc_knowledge_graph_system_spark.functions import dedup
+    from medical_doc_knowledge_graph_system_spark.plans.checks import (
+        physical_plan_string,
+    )
+
+    tok_sets = _jaccard_token_sets(spark)
+    p = physical_plan_string(dedup.set_jaccard_pairs(tok_sets, t_num=1, t_den=2))
+    assert "BroadcastNestedLoopJoin" in p, p
+    assert "bit_count" in p, p
+    assert "HashAggregate" not in p, p
+
+    monkeypatch.setattr(dedup, "DENSE_SETS_MAX", 0)
+    general = physical_plan_string(dedup.set_jaccard_pairs(tok_sets, t_num=1, t_den=2))
+    assert "bit_count" not in general, general
+    assert "HashAggregate(keys=[sa#" in general, general
+
+
+def test_simhash_band_join_reads_the_value_pin(spark, docs):
+    """simhash_hamming_pairs dedups simhash VALUES with one
+    groupBy("simhash") pin before the band self-join: the final plan reads
+    that pin only. Its one aggregate is the value-pair distinct on
+    (sa, sb, hamming); neither the per-value collect_list nor the per-doc
+    simhash aggregates run under the band join, and no parquet is scanned."""
+    import re
+
+    from medical_doc_knowledge_graph_system_spark.functions.dedup import (
+        simhash_hamming_pairs,
+    )
+    from medical_doc_knowledge_graph_system_spark.plans.checks import (
+        physical_plan_string,
+    )
+
+    p = physical_plan_string(simhash_hamming_pairs(docs))
+    assert "Join" in p, p
+    assert "Scan parquet" not in p, p
+    keys = re.findall(r"HashAggregate\(keys=\[(\w+)#", p)
+    assert keys and set(keys) == {"sa"}, p
+
+
+def test_kg_mention_sets_aggregate_before_fanout(spark, monkeypatch):
+    """_kg_mention_sets (behind kg_pagerank's edge graph) collapses
+    per-doc mention sets to DISTINCT sets with their doc counts — an
+    aggregate keyed by the set itself — inside its pin, before any pair
+    explode; the explode fan-out over ms then reads the pin, never the
+    documents scan."""
+    import __spark_entry__ as entry
+
+    q = entry.queries()
+    plans, _ = _pinned_plans(
+        spark, monkeypatch, lambda: q["kg_pagerank"](spark, SF).collect()
+    )
+    sets_pins = [p for p in plans if "collect_set" in p]
+    assert len(sets_pins) == 1, plans
+    assert "HashAggregate(keys=[ms#" in sets_pins[0], sets_pins[0]
+    assert "explode(ms#" not in sets_pins[0], sets_pins[0]
+    fanout = [p for p in plans if "explode(ms#" in p]
+    assert fanout, plans
+    assert all("Scan parquet" not in p for p in fanout), fanout

@@ -743,38 +743,6 @@ def test_energy_distance_identical_distribution_near_zero(spark):
     assert abs(got["e_stat"]) < 1e-9  # identical samples: E == 0 exactly
 
 
-# ── rich_club ────────────────────────────────────────────────────────────────
-
-
-def test_rich_club_matches_bruteforce(spark):
-    from medical_doc_knowledge_graph_system_spark.operators.graph_analytics import (
-        rich_club,
-    )
-
-    # hub clique 0-1-2-3 (complete) + pendant spokes to drive degrees up
-    edges = [(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3)]
-    edges += [(0, 10), (0, 11), (1, 12), (2, 13), (3, 14)]
-    edges += [(1, 15), (2, 16), (3, 17)]  # lift the clique to degree 5
-    df = spark.createDataFrame(edges, "a long, b long")
-    got = {r["k"]: r for r in rich_club(df, ks=(1, 2, 4)).collect()}
-
-    deg = {}
-    for a, b in edges:
-        deg[a] = deg.get(a, 0) + 1
-        deg[b] = deg.get(b, 0) + 1
-    for k in (1, 2, 4):
-        rich = {v for v, d in deg.items() if d > k}
-        if len(rich) < 2:
-            assert k not in got
-            continue
-        ek = sum(1 for a, b in edges if a in rich and b in rich)
-        assert got[k]["n_nodes"] == len(rich)
-        assert got[k]["n_edges"] == ek
-        assert abs(got[k]["phi"] - 2 * ek / (len(rich) * (len(rich) - 1))) < 1e-9
-    # the degree>4 club is exactly the clique: phi == 1
-    assert got[4]["phi"] == 1.0
-
-
 # ── detrended_acf1 ───────────────────────────────────────────────────────────
 
 
