@@ -210,9 +210,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .select("name", F.md5("name").alias("canonical_id"))
             .localCheckpoint()
         )
-        joined = salted_join_big_small(
-            toks, nm, "name", salts=16, how="inner", force_shuffle=True
-        )
+        joined = salted_join_big_small(toks, nm, "name", how="inner")
         return joined.groupBy("canonical_id").count().select(
             "canonical_id", F.col("count").alias("n_mentions")
         )

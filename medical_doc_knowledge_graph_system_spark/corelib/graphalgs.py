@@ -1,8 +1,8 @@
 """Exact in-memory graph traversals (no Spark imports — corelib invariant).
 
 Driver-side counterparts of the distributed path loops in
-operators/graph_queries.py, used below the collect threshold
-(DRIVER_GRAPH_MAX_EDGES): a KG vocabulary graph is bounded by the canonical
+operators/graph_queries.py, used within the driver fetch bound
+(session.DRIVER_MAX_ROWS): a KG vocabulary graph is bounded by the canonical
 term dictionary, orders of magnitude smaller than the corpus, which is why
 the reference serves the same traversals from a single Neo4j server
 (app/retrieval/path_reasoning.py:15-43). Two traversals over one
@@ -16,7 +16,7 @@ the reference serves the same traversals from a single Neo4j server
   pruning (reference C12).
 
 Semantics are EXACTLY the distributed loops', proven equal by
-tests/test_graph_queries.py's forced-distributed equality tests. Python
+tests/test_graph_queries.py's driver-vs-distributed equality tests. Python
 tuple-of-str comparison matches Spark's array<string> ordering (element-wise
 code-point compare; all paths within a level share one length, so the
 shorter-prefix rule never fires).

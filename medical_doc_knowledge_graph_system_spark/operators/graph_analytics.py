@@ -267,6 +267,8 @@ def _triangles(oriented: DataFrame) -> DataFrame:
     u -> v, u -> w and v -> w are all oriented edges. (wedge at the
     minimum-rank corner u) ∩ (closing oriented edge) hits each triangle
     exactly once; wedge fan-out is bounded by the smaller endpoint degree.
+    The result is pinned: every caller reads it more than once, and Spark
+    reuses no exchange across those branches.
     """
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     # wedge (src -> v, src -> w) with v before w in (deg, name) rank order;
@@ -286,7 +288,7 @@ def _triangles(oriented: DataFrame) -> DataFrame:
         (F.col("o1.dst") == F.col("c_src")) & (F.col("o2.dst") == F.col("c_dst")),
     ).select(
         F.col("o1.src").alias("u"), F.col("o1.dst").alias("v"), F.col("o2.dst").alias("w")
-    )
+    ).localCheckpoint()
 
 
 def triangle_stats(edges: DataFrame, num_partitions: int = 8) -> DataFrame:
@@ -509,7 +511,7 @@ def _edge_support(e: DataFrame, num_partitions: int = 8) -> DataFrame:
     for every edge in >= 1 triangle. Each enumerated triangle credits its
     three edges; pairs are re-normalized with least/greatest because
     ``_triangles`` orders vertices by (deg, name) rank, not name."""
-    tris = _triangles(_oriented(e, _degrees(e, num_partitions))).localCheckpoint()
+    tris = _triangles(_oriented(e, _degrees(e, num_partitions)))
     pairs = (
         tris.select(F.col("u").alias("p"), F.col("v").alias("q"))
         .union(tris.select(F.col("u").alias("p"), F.col("w").alias("q")))

@@ -6,6 +6,10 @@ shortest path, all-paths enumeration, provenance joins, graph stats.
 Recursion has no Catalyst primitive, so variable-length expansions are
 driver-orchestrated loops of DataFrame joins (k <= 6, SURVEY §2.C8-C13) —
 each iteration is a distributed join, only loop control lives on the driver.
+The path traversals (shortest paths, all paths) first try
+session.driver_rows on the undirected edge list: within its bound they run
+as exact in-memory BFS on the driver (corelib/graphalgs.py), and only a
+larger graph pays the distributed loop.
 """
 
 from __future__ import annotations
@@ -14,30 +18,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..corelib import graphalgs
-
-# Path traversals below this edge count run as exact in-memory BFS on the
-# driver (corelib/graphalgs.py) instead of a driver-orchestrated loop of
-# distributed joins: the KG vocabulary graph is bounded by the canonical
-# term dictionary (the reference serves these same traversals from one
-# Neo4j server, app/retrieval/path_reasoning.py), and per-hop Spark jobs
-# cost ~0.3 s of pure scheduling latency each — the r3 verdict's only
-# complaint about these operators. 500k undirected rows ≈ tens of MB on
-# the driver. Above the threshold (or with force_distributed=True, the
-# tested-equal path) the distributed frontier loop runs — same semantics,
-# proven by tests/test_graph_queries.py equality tests.
-DRIVER_GRAPH_MAX_EDGES = 500_000
+from ..session import driver_rows
 
 
 def _try_collect_adjacency(adj: DataFrame) -> dict[str, list[tuple[str, str]]] | None:
-    """ONE evaluation of the (unpinned) adjacency lineage: collect up to
-    threshold+1 rows; None means the graph exceeds the driver threshold (the
-    truncated limit() sample is discarded — it is an arbitrary subset — and
-    the caller runs the distributed loop). Under the threshold limit() is the
-    complete edge set, so no pin + count + collect double evaluation."""
-    rows = adj.select("x", "y", "rel_type").limit(DRIVER_GRAPH_MAX_EDGES + 1).collect()
-    if len(rows) > DRIVER_GRAPH_MAX_EDGES:
+    """The symmetric (x, y, rel_type) list as a driver adjacency dict, or
+    None when session.driver_rows finds it over the bound (the caller runs
+    its distributed loop). Path traversals on the driver are exact
+    in-memory BFS (corelib/graphalgs.py), proven equal to the distributed
+    loops by tests/test_graph_queries.py."""
+    rows = driver_rows(adj.select("x", "y", "rel_type"))
+    if rows is None:
         return None
-    return graphalgs.adjacency((r[0], r[1], r[2]) for r in rows)
+    return graphalgs.adjacency(rows.itertuples(index=False, name=None))
 
 
 def undirected(edges: DataFrame) -> DataFrame:
@@ -119,7 +112,6 @@ def shortest_path(
     src_id: str,
     dst_id: str,
     max_hops: int = 6,
-    force_distributed: bool = False,
 ) -> DataFrame:
     """BFS shortest path src -> dst (undirected), one row:
     (hops, path: array<node_id>, rels: array<rel_type>) or empty.
@@ -128,9 +120,9 @@ def shortest_path(
     leaves no pair to resolve, so the same-node guard (path_reasoning.py:66)
     yields the empty result.
     """
-    return multi_source_shortest_paths(
-        edges, [src_id], [dst_id], max_hops, force_distributed
-    ).select("hops", "path", "rels")
+    return multi_source_shortest_paths(edges, [src_id], [dst_id], max_hops).select(
+        "hops", "path", "rels"
+    )
 
 
 def multi_source_shortest_paths(
@@ -138,7 +130,6 @@ def multi_source_shortest_paths(
     seed_ids: list[str],
     target_ids: list[str],
     max_hops: int = 5,
-    force_distributed: bool = False,
 ) -> DataFrame:
     """ALL (seed, target) shortest paths in ONE BFS loop: the frontier
     carries seed_id, so s seeds × t targets resolve in max_hops driver
@@ -150,10 +141,10 @@ def multi_source_shortest_paths(
     semantics, app/retrieval/path_reasoning.py:15-29) — the per-seed
     traversal (visited set, min-path-per-node frontier) is
     target-independent and targets only observe their first-arrival hop.
-    Below DRIVER_GRAPH_MAX_EDGES: exact in-memory BFS on the collected edge
-    list. Above (or force_distributed): frontier loop of distributed joins —
-    path arrays on the frontier, visited anti-join, early exit once every
-    pair is resolved."""
+    Within session.DRIVER_MAX_ROWS undirected edges: exact in-memory BFS on
+    the fetched edge list. Above: frontier loop of distributed joins — path
+    arrays on the frontier, visited anti-join, early exit once every pair
+    is resolved."""
     spark = edges.sparkSession
     remaining = {(s, t) for s in seed_ids for t in target_ids if s != t}
     out_schema = (
@@ -162,15 +153,12 @@ def multi_source_shortest_paths(
     )
     if not remaining:
         return spark.createDataFrame([], out_schema)
-    if not force_distributed:
-        local_adj = _try_collect_adjacency(undirected(edges))
-        if local_adj is not None:
-            return spark.createDataFrame(
-                graphalgs.multi_source_paths(
-                    local_adj, seed_ids, target_ids, max_hops
-                ),
-                out_schema,
-            )
+    local_adj = _try_collect_adjacency(undirected(edges))
+    if local_adj is not None:
+        return spark.createDataFrame(
+            graphalgs.multi_source_paths(local_adj, seed_ids, target_ids, max_hops),
+            out_schema,
+        )
     adj = _pin(undirected(edges))
     frontier = spark.createDataFrame(
         [(s, s, [s], []) for s in sorted({s for s, _ in remaining})],
@@ -245,7 +233,6 @@ def all_paths(
     dst_id: str,
     max_hops: int = 4,
     max_paths: int = 5,
-    force_distributed: bool = False,
 ) -> DataFrame:
     """All simple paths src -> dst up to max_hops, ORDER BY hops LIMIT n
     (reference C12, path_reasoning.py:31-43). Cycle-free via
@@ -253,15 +240,12 @@ def all_paths(
     not node-distinct). Same driver/distributed threshold as
     multi_source_shortest_paths."""
     spark = edges.sparkSession
-    if not force_distributed:
-        local_adj = _try_collect_adjacency(undirected(edges))
-        if local_adj is not None:
-            return spark.createDataFrame(
-                graphalgs.all_simple_paths(
-                    local_adj, src_id, dst_id, max_hops, max_paths
-                ),
-                "hops int, path array<string>, rels array<string>",
-            )
+    local_adj = _try_collect_adjacency(undirected(edges))
+    if local_adj is not None:
+        return spark.createDataFrame(
+            graphalgs.all_simple_paths(local_adj, src_id, dst_id, max_hops, max_paths),
+            "hops int, path array<string>, rels array<string>",
+        )
     adj = _pin(undirected(edges))
     frontier = spark.createDataFrame(
         [(src_id, [src_id], [])], "y string, path array<string>, rels array<string>"

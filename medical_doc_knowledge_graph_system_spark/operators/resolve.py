@@ -34,6 +34,7 @@ from ..corelib.similarity import (
     semantic_match,
     simhash_band_keys,
 )
+from .. import session
 from ..session import literal_frame
 
 
@@ -113,54 +114,51 @@ def candidate_pairs(names: DataFrame, band_udf) -> DataFrame:
     )
 
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    max_iter: int = 25,
-    driver_threshold: int = 200_000,
-) -> DataFrame:
+def connected_components(nodes: DataFrame, edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """nodes(name), edges(a,b) -> (name, comp).
 
     Hybrid execution: the vertex set is *distinct names* and the edge set is
     LSH-blocked merge candidates — usually orders of magnitude smaller than
-    the corpus. If edges fit under driver_threshold, solve exactly on the
-    driver with the same union-find the oracle uses (zero drift, one job);
+    the corpus. If session.driver_rows fetches the edges within
+    session.CC_DRIVER_MAX_EDGES (one evaluation of their lineage), solve
+    exactly on the driver with the same union-find the oracle uses;
     otherwise run distributed min-label propagation (_cc_iterative's
-    one-shuffle rounds). Both paths produce identical components, ignore
-    edges with an endpoint outside `nodes` and give one row per distinct
-    node name; the distributed path is exercised directly in tests.
+    one-shuffle rounds). The nodes are fetched unbounded on the driver
+    path: only the edge count picks the path. Both paths produce
+    identical components, ignore edges with an endpoint outside `nodes` and
+    give one row per distinct node name. The driver result is a pandas
+    frame, so it plans as a LocalTableScan.
     """
-    n_edges = edges.limit(driver_threshold + 1).count()
-    if n_edges <= driver_threshold:
-        edge_rows = [(r.a, r.b) for r in edges.collect()]
-        names = [r.name for r in nodes.collect()]
-        parent = {n: n for n in names}
+    edge_rows = session.driver_rows(edges.select("a", "b"), session.CC_DRIVER_MAX_EDGES)
+    if edge_rows is None:
+        return _cc_iterative(nodes, edges, max_iter)
+    # .tolist() gives plain Python values: bigint doc ids stay ints
+    names = nodes.select("name").toPandas()["name"].tolist()
+    parent = {n: n for n in names}
 
-        def find(x: str) -> str:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
-        for a, b in edge_rows:
-            if a not in parent or b not in parent:
-                continue  # endpoint outside `nodes`: ignored, as _cc_iterative
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[ra] = rb
-        roots: dict[str, str] = {}
-        for n in names:
-            r = find(n)
-            roots[r] = min(roots.get(r, n), n)  # comp = min name, as iterative path
-        comp = {n: roots[find(n)] for n in names}
-        spark = nodes.sparkSession
-        # r6: schema follows the node id type — doc-id (bigint) graphs use
-        # the same driver path as name (string) graphs
-        t = dict(nodes.dtypes)["name"]
-        return spark.createDataFrame(
-            sorted(comp.items()), schema=f"name {t}, comp {t}"
-        )
-    return _cc_iterative(nodes, edges, max_iter)
+    for a, b in zip(edge_rows["a"].tolist(), edge_rows["b"].tolist()):
+        if a not in parent or b not in parent:
+            continue  # endpoint outside `nodes`: ignored, as _cc_iterative
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+    roots = {}
+    for n in names:
+        r = find(n)
+        roots[r] = min(roots.get(r, n), n)  # comp = min name, as iterative path
+    comp = sorted((n, roots[find(n)]) for n in parent)
+    # the schema follows the node id type: doc-id (bigint) graphs use the
+    # same path as name (string) graphs
+    t = dict(nodes.dtypes)["name"]
+    return nodes.sparkSession.createDataFrame(
+        pd.DataFrame(comp, columns=["name", "comp"]), schema=f"name {t}, comp {t}"
+    )
 
 
 def _cc_iterative(nodes: DataFrame, edges: DataFrame, max_iter: int = 25) -> DataFrame:
@@ -357,35 +355,30 @@ def _merge_pass(names: DataFrame, band_udf, match_udf) -> DataFrame:
     return _canonical_per_component(members)
 
 
-def build_name_map(names: DataFrame, driver_threshold: int = 500_000) -> DataFrame:
+def build_name_map(names: DataFrame) -> DataFrame:
     """distinct names(name) -> (name, canonical). Mirrors
     corelib.resolve.build_name_map stage for stage.
 
     Hybrid execution (same rationale as connected_components): the input is
-    the *distinct name dictionary*, not the mention stream. When it fits
-    under driver_threshold, run the shared single-process resolution
-    (corelib.resolve.build_name_map — literally the oracle code) on one
-    limit(driver_threshold + 1) fetch; beyond that, the fully distributed
-    LSH + CC path below. Identical results by construction; the distributed
-    path is exercised in tests via build_name_map_distributed.
-
-    The fetch is an Arrow toPandas, not a Row collect: above the threshold
-    its driver_threshold + 1 names are thrown away, and at 500,001 names
-    the Arrow fetch costs ~0.2 s over a bare count where a Row collect
-    costs ~2.5-3.5 s (4-core host).
+    the *distinct name dictionary*, not the mention stream. When
+    session.driver_rows fetches it, run the shared single-process
+    resolution (corelib.resolve.build_name_map — literally the oracle code);
+    beyond the bound, the fully distributed LSH + CC path below. Identical
+    results by construction; the distributed path is exercised in tests
+    via build_name_map_distributed and a lowered session.DRIVER_MAX_ROWS.
     """
-    head = names.limit(driver_threshold + 1).toPandas()["name"].tolist()
-    if len(head) <= driver_threshold:
-        from ..corelib.resolve import build_name_map as oracle_name_map
+    head = session.driver_rows(names)
+    if head is None:
+        return build_name_map_distributed(names)
+    from ..corelib.resolve import build_name_map as oracle_name_map
 
-        # a pandas frame plans as LocalTableScan: no Python task on any scan
-        # of the map (createDataFrame(list) is a Python-RDD scan)
-        nm = sorted(oracle_name_map(head).items())
-        return names.sparkSession.createDataFrame(
-            pd.DataFrame(nm, columns=["name", "canonical"]),
-            schema="name string, canonical string",
-        )
-    return build_name_map_distributed(names)
+    # a pandas frame plans as LocalTableScan: no Python task on any scan
+    # of the map (createDataFrame(list) is a Python-RDD scan)
+    nm = sorted(oracle_name_map(head["name"].tolist()).items())
+    return names.sparkSession.createDataFrame(
+        pd.DataFrame(nm, columns=["name", "canonical"]),
+        schema="name string, canonical string",
+    )
 
 
 def build_name_map_distributed(names: DataFrame) -> DataFrame:
@@ -416,30 +409,26 @@ def build_name_map_distributed(names: DataFrame) -> DataFrame:
 
 
 # Above this many map entries the broadcast would strain executor memory
-# (~100 bytes/entry -> ~2 GB at the threshold); the salted shuffle join takes
-# over. The two paths are value-identical (test_remap_salted_path_equals_broadcast).
+# (~100 bytes/entry -> ~2 GB at the bound); the salted shuffle join takes
+# over. Read at call time. The two paths are value-identical
+# (test_remap_salted_path_equals_broadcast).
 REMAP_BROADCAST_MAX = 20_000_000
 
 
-def remap(
-    df: DataFrame,
-    name_map: DataFrame,
-    *cols: str,
-    broadcast_threshold: int = REMAP_BROADCAST_MAX,
-) -> DataFrame:
+def remap(df: DataFrame, name_map: DataFrame, *cols: str) -> DataFrame:
     """Replace each of *cols by its canonical.
 
     The name_map is a dictionary of distinct names — broadcast kills the
     head-entity key skew that a shuffle join on `name` would suffer (the
     Zipf head appears in a large fraction of mentions). When the map
-    outgrows `broadcast_threshold` (open-vocabulary dictionaries at corpus
+    outgrows REMAP_BROADCAST_MAX (open-vocabulary dictionaries at corpus
     scale), the join switches AUTOMATICALLY to the salted shuffle-hash join
     (skew.salted_join_big_small): the salt re-splits the hot key across
     reducers, which the plain shuffle join would concentrate. The size
-    probe is a LIMIT count — O(threshold) rows scanned once, no full count.
+    probe is a LIMIT count — O(bound) rows scanned once, no full count.
     """
     use_broadcast = (
-        name_map.limit(broadcast_threshold + 1).count() <= broadcast_threshold
+        name_map.limit(REMAP_BROADCAST_MAX + 1).count() <= REMAP_BROADCAST_MAX
     )
     out = df
     for c in cols:
@@ -456,7 +445,6 @@ def remap(
                 nm,
                 f"__k_{c}",
                 how="left",
-                force_shuffle=True,
             )
         out = out.withColumn(c, F.coalesce(f"__v_{c}", c)).drop(
             f"__k_{c}", f"__v_{c}"

@@ -107,31 +107,26 @@ def topk_per_group(
 
 
 def salted_join_big_small(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    salts: int = DEFAULT_SALTS,
-    how: str = "left",
-    force_shuffle: bool = False,
+    big: DataFrame, small: DataFrame, key: str, how: str = "left"
 ) -> DataFrame:
-    """Skew-safe shuffle join: replicate the small side across S salts and
-    join on (key, salt). Used when the small side is too large to broadcast
-    but the big side's key is skewed. (At local test scale `remap` broadcasts
-    instead; this is the cluster-scale fallback.)
+    """Skew-safe shuffle join: replicate the small side across DEFAULT_SALTS
+    salts and join on (key, salt). Used when the small side is too large to
+    broadcast but the big side's key is skewed (remap above
+    REMAP_BROADCAST_MAX).
 
-    force_shuffle=True pins the SHUFFLE_HASH strategy via hint — at local
-    test scale the replicated small side still fits the broadcast threshold,
-    which would silently measure the wrong (broadcast) plan; the hint makes
-    the measured plan the one that runs when the map genuinely can't
-    broadcast."""
-    salted_big = big.withColumn("__salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salts)))
-    replicated = small.withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(salts - 1)))).withColumn(
-        "__salt", F.col("__salt").cast("long")
+    The SHUFFLE_HASH hint is unconditional: the join exists for a small
+    side that cannot broadcast, and at test scale the replicated small side
+    would still fit the broadcast threshold, so without the hint the
+    measured plan would silently be the wrong (broadcast) one."""
+    salted_big = big.withColumn(
+        "__salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(DEFAULT_SALTS))
     )
-    if force_shuffle:
-        replicated = replicated.hint("shuffle_hash")
-    out = salted_big.join(replicated, [key, "__salt"], how)
-    return out.drop("__salt")
+    replicated = (
+        small.withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(DEFAULT_SALTS - 1))))
+        .withColumn("__salt", F.col("__salt").cast("long"))
+        .hint("shuffle_hash")
+    )
+    return salted_big.join(replicated, [key, "__salt"], how).drop("__salt")
 
 
 def global_rank_bucketed(

@@ -93,7 +93,6 @@ def run_pipeline(
     lang_filter: str | None = None,
     url_groups: int = 1,
     open_vocab: bool = False,
-    resolve_driver_threshold: int = 500_000,
     bucket_by_url: int = 0,
     normalize_urls: bool = False,
     embed_backend: str = "hash",
@@ -108,7 +107,7 @@ def run_pipeline(
     gazetteer extractor — the reference's LLM extractor is open-vocabulary
     (extractor.py:138-180), so on a real web corpus the name dictionary
     grows with the input and resolution runs its fully distributed LSH+CC
-    path once it crosses resolve_driver_threshold distinct names.
+    path once it crosses session.DRIVER_MAX_ROWS distinct names.
 
     bucket_by_url > 0 writes the chunk-family tables as url-hash bucketed
     tables with that many buckets (Iceberg bucket(N, url) analogue, SURVEY
@@ -238,10 +237,7 @@ def run_pipeline(
         # triples' subj/obj are mention names by construction (extract_chunk
         # pairs the chunk's mentions), so mentions_raw alone covers the
         # distinct-name dictionary — no need to scan triples_raw.
-        return build_name_map(
-            mentions_raw.select("name").distinct(),
-            driver_threshold=resolve_driver_threshold,
-        )
+        return build_name_map(mentions_raw.select("name").distinct())
 
     _run_stage(wh, spark, "name_map", make_name_map, resume, bucket_by_url=bucket_by_url)
     name_map = wh.read(spark, "name_map")

@@ -43,12 +43,6 @@ def main() -> None:
         help="add the capitalized-span NER channel to the gazetteer extractor",
     )
     ap.add_argument(
-        "--resolve-driver-threshold",
-        type=int,
-        default=500_000,
-        help="distinct-name count above which resolution runs fully distributed",
-    )
-    ap.add_argument(
         "--bucket-by-url",
         type=int,
         default=0,
@@ -91,7 +85,6 @@ def main() -> None:
         lang_filter=args.lang,
         url_groups=args.url_groups,
         open_vocab=args.open_vocab,
-        resolve_driver_threshold=args.resolve_driver_threshold,
         bucket_by_url=args.bucket_by_url,
         normalize_urls=args.normalize_urls,
         embed_backend=args.embed_backend,

@@ -198,31 +198,40 @@ def _random_graph(spark, n_nodes=24, n_edges=60, seed=7):
     return spark.createDataFrame(rows, "src string, dst string, rel_type string")
 
 
+def _distributed(monkeypatch):
+    """Lower the driver fetch bound to 0 rows: every non-empty input takes
+    the distributed path."""
+    from medical_doc_knowledge_graph_system_spark import session
+
+    monkeypatch.setattr(session, "DRIVER_MAX_ROWS", 0)
+
+
 @pytest.mark.parametrize("seed", [7, 23])
-def test_shortest_path_driver_equals_distributed(spark, seed):
+def test_shortest_path_driver_equals_distributed(spark, monkeypatch, seed):
     """The sub-threshold in-memory BFS (corelib/graphalgs.py) must return
     exactly what the distributed frontier loop returns — hops, path, rels —
     across many (src, dst) pairs of random multigraphs, including
     unreachable pairs."""
     g = _random_graph(spark, seed=seed)
     pairs = [("n00", "n13"), ("n05", "n20"), ("n01", "n02"), ("n03", "n99")]
-    for src, dst in pairs:
-        local = shortest_path(g, src, dst, max_hops=4).collect()
-        dist = shortest_path(g, src, dst, max_hops=4, force_distributed=True).collect()
-        assert [tuple(r) for r in local] == [tuple(r) for r in dist], (src, dst, seed)
+    local = [shortest_path(g, s, t, max_hops=4).collect() for s, t in pairs]
+    _distributed(monkeypatch)
+    for (src, dst), loc in zip(pairs, local):
+        dist = shortest_path(g, src, dst, max_hops=4).collect()
+        assert [tuple(r) for r in loc] == [tuple(r) for r in dist], (src, dst, seed)
 
 
-def test_all_paths_driver_equals_distributed(spark):
+def test_all_paths_driver_equals_distributed(spark, monkeypatch):
     g = _random_graph(spark)
-    for src, dst in [("n00", "n13"), ("n05", "n20"), ("n03", "n99")]:
-        local = all_paths(g, src, dst, max_hops=3, max_paths=7).collect()
-        dist = all_paths(
-            g, src, dst, max_hops=3, max_paths=7, force_distributed=True
-        ).collect()
-        assert [tuple(r) for r in local] == [tuple(r) for r in dist], (src, dst)
+    pairs = [("n00", "n13"), ("n05", "n20"), ("n03", "n99")]
+    local = [all_paths(g, s, t, max_hops=3, max_paths=7).collect() for s, t in pairs]
+    _distributed(monkeypatch)
+    for (src, dst), loc in zip(pairs, local):
+        dist = all_paths(g, src, dst, max_hops=3, max_paths=7).collect()
+        assert [tuple(r) for r in loc] == [tuple(r) for r in dist], (src, dst)
 
 
-def test_multi_source_driver_equals_distributed(spark):
+def test_multi_source_driver_equals_distributed(spark, monkeypatch):
     from medical_doc_knowledge_graph_system_spark.operators.graph_queries import (
         multi_source_shortest_paths,
     )
@@ -231,10 +240,6 @@ def test_multi_source_driver_equals_distributed(spark):
     seeds, targets = ["n00", "n05", "n11"], ["n13", "n20", "n05"]
     key = lambda r: (r.seed_id, r.target_id)
     local = sorted(multi_source_shortest_paths(g, seeds, targets, 4).collect(), key=key)
-    dist = sorted(
-        multi_source_shortest_paths(
-            g, seeds, targets, 4, force_distributed=True
-        ).collect(),
-        key=key,
-    )
+    _distributed(monkeypatch)
+    dist = sorted(multi_source_shortest_paths(g, seeds, targets, 4).collect(), key=key)
     assert [tuple(r) for r in local] == [tuple(r) for r in dist]

@@ -113,6 +113,7 @@ def ov_warehouse(spark, ov_pages, tmp_path_factory):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from medical_doc_knowledge_graph_system_spark import session
     from medical_doc_knowledge_graph_system_spark.pipeline import run_pipeline
 
     p = tmp_path_factory.mktemp("ov_pages") / "pages.parquet"
@@ -129,15 +130,11 @@ def ov_warehouse(spark, ov_pages, tmp_path_factory):
         str(p),
     )
     root = str(tmp_path_factory.mktemp("ov_wh"))
-    # resolve_driver_threshold=0 disables the driver shortcut: the name map
-    # is built by the fully distributed LSH + CC path, as it would be at scale
-    stats = run_pipeline(
-        spark,
-        spark.read.parquet(str(p)),
-        root,
-        open_vocab=True,
-        resolve_driver_threshold=0,
-    )
+    # DRIVER_MAX_ROWS = 0 disables the driver shortcut: the name map is
+    # built by the fully distributed LSH + CC path, as it would be at scale
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(session, "DRIVER_MAX_ROWS", 0)
+        stats = run_pipeline(spark, spark.read.parquet(str(p)), root, open_vocab=True)
     return root, stats
 
 

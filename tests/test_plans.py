@@ -78,7 +78,7 @@ def test_salted_join_plans_shuffle_hash_on_salted_key(spark):
 
     big = spark.createDataFrame([("a", 1), ("a", 2), ("b", 3)], "k string, x int")
     small = spark.createDataFrame([("a", "ca"), ("b", "cb")], "k string, c string")
-    df = salted_join_big_small(big, small, "k", salts=4, force_shuffle=True)
+    df = salted_join_big_small(big, small, "k")
     p = physical_plan_string(df)
     assert "ShuffledHashJoin" in p and "__salt" in p, p
     assert "BroadcastHashJoin" not in p, p
@@ -1029,10 +1029,11 @@ _NAMES = [
 ]
 
 
-def test_build_name_map_same_on_both_sides_of_driver_threshold(spark):
-    """driver_threshold = n runs the driver path, n - 1 the distributed
+def test_build_name_map_same_on_both_sides_of_driver_threshold(spark, monkeypatch):
+    """DRIVER_MAX_ROWS = n runs the driver path, n - 1 the distributed
     path: same map. The driver-path result is a LocalTableScan, so scans of
     it start no Python task (createDataFrame(list) planned ExistingRDD)."""
+    from medical_doc_knowledge_graph_system_spark import session
     from medical_doc_knowledge_graph_system_spark.operators.resolve import build_name_map
     from medical_doc_knowledge_graph_system_spark.plans.checks import (
         physical_plan_string,
@@ -1042,14 +1043,63 @@ def test_build_name_map_same_on_both_sides_of_driver_threshold(spark):
         F.element_at(F.array(*map(F.lit, _NAMES)), F.col("id").cast("int") + 1).alias("name")
     )
     n = len(_NAMES)
-    driver = build_name_map(names, driver_threshold=n)
+    monkeypatch.setattr(session, "DRIVER_MAX_ROWS", n)
+    driver = build_name_map(names)
     p = physical_plan_string(driver)
     assert "LocalTableScan" in p and "ExistingRDD" not in p, p
     got = {r.name: r.canonical for r in driver.collect()}
-    assert got == {
-        r.name: r.canonical for r in build_name_map(names, driver_threshold=n - 1).collect()
-    }
+    monkeypatch.setattr(session, "DRIVER_MAX_ROWS", n - 1)
+    assert got == {r.name: r.canonical for r in build_name_map(names).collect()}
     assert set(got) == set(_NAMES) and len(set(got.values())) < n
+
+
+@pytest.mark.parametrize("bound", ["DRIVER_MAX_ROWS", "CC_DRIVER_MAX_EDGES"])
+def test_cc_same_on_both_sides_of_driver_threshold(spark, monkeypatch, bound):
+    """Either bound at n_edges runs connected_components on the driver, at
+    n_edges - 1 it runs _cc_iterative: same components. The driver result
+    is a LocalTableScan."""
+    from medical_doc_knowledge_graph_system_spark import session
+    from medical_doc_knowledge_graph_system_spark.operators.resolve import (
+        connected_components,
+    )
+    from medical_doc_knowledge_graph_system_spark.plans.checks import (
+        physical_plan_string,
+    )
+
+    nodes, edges = _cc_test_graph(spark)
+    n_edges = edges.count()
+    monkeypatch.setattr(session, bound, n_edges)
+    driver = connected_components(nodes, edges)
+    p = physical_plan_string(driver)
+    assert "LocalTableScan" in p and "ExistingRDD" not in p, p
+    got = sorted(map(tuple, driver.collect()))
+    monkeypatch.setattr(session, bound, n_edges - 1)
+    dist = connected_components(nodes, edges)
+    assert "LocalTableScan" not in physical_plan_string(dist)
+    assert got == sorted(map(tuple, dist.collect()))
+    assert len(got) == 40 and 1 < len({c for _, c in got}) < 40
+
+
+def test_cc_driver_path_evaluates_edges_once(spark):
+    """The driver path of connected_components evaluates the edge lineage
+    once: one fetch decides the path and is the edge list. The edges are a
+    single-partition mapInPandas that counts its own runs."""
+    from medical_doc_knowledge_graph_system_spark.operators.resolve import (
+        connected_components,
+    )
+
+    runs = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        runs.add(1)
+        for b in batches:
+            yield b.assign(a=b["id"] % 7, b=(b["id"] * 3) % 7)[["a", "b"]]
+
+    edges = spark.range(0, 20, 1, numPartitions=1).mapInPandas(counted, "a long, b long")
+    nodes = spark.range(0, 10).select(F.col("id").alias("name"))
+    got = {r.name: r.comp for r in connected_components(nodes, edges).collect()}
+    assert runs.value == 1, runs.value
+    assert got == {0: 0, **{i: 1 for i in range(1, 7)}, 7: 7, 8: 8, 9: 9}
 
 
 def _jaccard_token_sets(spark):
@@ -1129,3 +1179,55 @@ def test_kg_mention_sets_aggregate_before_fanout(spark, monkeypatch):
     fanout = [p for p in plans if "explode(ms#" in p]
     assert fanout, plans
     assert all("Scan parquet" not in p for p in fanout), fanout
+
+
+@pytest.mark.parametrize("op", ["triangle_stats", "count_4cliques"])
+def test_triangle_wedge_join_runs_once(spark, monkeypatch, op):
+    """_triangles pins its frame, so the wedge self-join on src runs once
+    per call: it is in one recorded pin and not in the final plan. Spark
+    reuses no exchange across branches, so without the pin the per-node
+    u/v/w union of triangle_stats ran it 3 times and count_4cliques'
+    n_triangles and apex branches 2 times."""
+    import re
+
+    from medical_doc_knowledge_graph_system_spark.operators import graph_analytics
+    from medical_doc_knowledge_graph_system_spark.plans.checks import (
+        physical_plan_string,
+    )
+
+    pairs = [
+        (f"n{i:02d}", f"n{j:02d}") for i in range(10) for j in range(i + 1, 10) if i * j % 4 != 1
+    ]
+    edges = spark.createDataFrame(pairs, "a string, b string")
+    out = []
+    plans, _ = _pinned_plans(
+        spark, monkeypatch, lambda: out.append(getattr(graph_analytics, op)(edges))
+    )
+    wedge = re.compile(r"Join \[src#\w+\], \[src#\w+\]")
+    final = physical_plan_string(out[0])
+    assert not wedge.search(final), final
+    assert sum(len(wedge.findall(p)) for p in plans) == 1, plans
+
+
+def test_no_parameter_forces_a_plan_path():
+    """Driver-vs-distributed and broadcast-vs-shuffle choices follow the
+    input size alone (session.driver_rows, resolve.REMAP_BROADCAST_MAX);
+    tests move the bound with monkeypatch. No function in the package takes
+    a parameter that forces one path."""
+    import ast
+    import pathlib
+
+    import medical_doc_knowledge_graph_system_spark as pkg
+
+    forcing = {
+        "force_distributed", "driver_threshold", "resolve_driver_threshold",
+        "broadcast_threshold", "force_shuffle",
+    }
+    hits = []
+    for path in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                names = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+                hits += [f"{path.name}:{node.lineno} {node.name}({n})" for n in names & forcing]
+    assert not hits, hits

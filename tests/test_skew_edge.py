@@ -83,10 +83,11 @@ def test_pipeline_head_entity_skew_counts(spark, warehouse50, oracle50):
     assert head[0][1] == "Hypertension"
 
 
-def test_remap_salted_path_equals_broadcast(spark):
-    """remap's automatic salted fallback (map exceeds broadcast_threshold)
+def test_remap_salted_path_equals_broadcast(spark, monkeypatch):
+    """remap's automatic salted fallback (map exceeds REMAP_BROADCAST_MAX)
     must produce exactly what the broadcast path produces — including
     unmapped names passing through and multi-column remaps."""
+    from medical_doc_knowledge_graph_system_spark.operators import resolve
     from medical_doc_knowledge_graph_system_spark.operators.resolve import remap
 
     df = spark.createDataFrame(
@@ -97,9 +98,8 @@ def test_remap_salted_path_equals_broadcast(spark):
         [("a", "A"), ("b", "B")], "name string, canonical string"
     )
     want = sorted(map(tuple, remap(df, nm, "subj", "obj").collect()))
-    got = sorted(
-        map(tuple, remap(df, nm, "subj", "obj", broadcast_threshold=1).collect())
-    )
+    monkeypatch.setattr(resolve, "REMAP_BROADCAST_MAX", 1)
+    got = sorted(map(tuple, remap(df, nm, "subj", "obj").collect()))
     assert got == want == [("A", "B", 1), ("B", "zz", 2), ("zz", "A", 3)]
 
 
