@@ -53,9 +53,7 @@ def _make_chunk_batches(strategy: str):
     return _chunk_batches
 
 
-def chunk_pages(
-    pages: DataFrame, num_partitions: int | None = None, strategy: str = "web"
-) -> DataFrame:
+def chunk_pages(pages: DataFrame, strategy: str = "web") -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> chunks DataFrame.
 
     Repartitions on url-hash first (north_rule: explicit repartitioning on
@@ -73,7 +71,7 @@ def chunk_pages(
     # probe-free repartition target: the cluster-tuned shuffle width (pages
     # may carry exchanges — the re-crawl dedup window — and an .rdd partition
     # probe under AQE would execute those stages twice)
-    n = num_partitions or shuffle_width(pages.sparkSession, factor=2)
+    n = shuffle_width(pages.sparkSession, factor=2)
     return (
         selected
         .repartition(n, F.xxhash64("url"))

@@ -35,16 +35,38 @@ bipartite incidence frame). Each pins the
 (tiny, vocabulary-sized) edge frame before fanning it out: Catalyst reuses
 nothing across union/self-join branches (CLAUDE.md late-r2), so an
 unpinned corpus-derived lineage would re-run per reference.
+
+Pin rule. A loop makes two decisions at a pin, and each has one home:
+
+- width: a pin keyed for a later join or aggregate goes through ``_pin``,
+  which spreads it over ``PIN_PARTITIONS`` hash partitions first. On
+  Spark 4.1 the pin drops the hash partitioning itself, but the width
+  stays: it is the task count of every stage that reads the pin;
+- row count: a loop that needs its node or frontier count reads it from
+  the pin's own job (``session.pin_rows``, an Observation), never from a
+  separate count or take probe job.
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import literal_frame, pin_rows
+
 PAGERANK_DAMPING = 0.85
+
+# Partition count of every keyed pin (``_pin``), read at call time. A fixed
+# 8, not skew.shuffle_width: at local[16] with 32 shuffle partitions the
+# derived width (32) was slower on all three loops measured (sf0.1,
+# bench_extra-style noop sink, 4 alternating reps per side, warm minimum,
+# 4-core host): kg_closeness 10.30 s at 8 vs 10.93 s at 32, kg_lpa 3.86 vs
+# 3.98 s, kg_hits 5.41 vs 5.82 s. The pinned frames are node- or
+# frontier-sized, so more partitions add tasks, not parallel work.
+PIN_PARTITIONS = 8
 
 # r6: iterative loops checkpoint every PIN_EVERY rounds instead of every
 # round (each localCheckpoint is a job barrier; the lineage between pins is
@@ -62,26 +84,35 @@ def _mirrored(e0: DataFrame) -> DataFrame:
     )
 
 
-def _degrees(e0: DataFrame, num_partitions: int = 8) -> DataFrame:
+def _pin(df: DataFrame, *keys: str, rows: bool = False) -> DataFrame | tuple[DataFrame, int]:
+    """``df`` hash-spread by ``keys`` over PIN_PARTITIONS partitions and
+    pinned — the one width rule of this module. With ``rows=True`` it
+    returns (pinned, row count), the count read from the pin's own job."""
+    spread = df.repartition(PIN_PARTITIONS, *keys)
+    return pin_rows(spread) if rows else spread.localCheckpoint()
+
+
+def _union_all(frames: list[DataFrame]) -> DataFrame:
+    """Left-deep positional union of same-shape frames."""
+    return reduce(DataFrame.unionAll, frames)
+
+
+def _degrees(e0: DataFrame) -> DataFrame:
     """Pinned (name, deg) frame of the pinned a<b edge list — also its node
-    list. The pre-pin repartition sets the pinned frame's partition count."""
-    return (
-        _mirrored(e0)
-        .groupBy(F.col("x").alias("name"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .repartition(num_partitions, "name")
-        .localCheckpoint()
+    list."""
+    return _pin(
+        _mirrored(e0).groupBy(F.col("x").alias("name")).agg(F.count(F.lit(1)).alias("deg")),
+        "name",
     )
 
 
-def _adjacency(edges: DataFrame, num_partitions: int) -> DataFrame:
+def _adjacency(edges: DataFrame) -> DataFrame:
     """Pinned mirrored (x, y) adjacency of the undirected (a, b) edge list,
-    spread over ``num_partitions`` by x before the pin. Without that width
-    the pin keeps the union's partition count and the first BFS frontier
-    starts on one partition (measured 14-27% slower on the BFS family at
-    sf0.1)."""
+    keyed by x. Without the pin width the pin keeps the union's partition
+    count and the first BFS frontier starts on one partition (measured
+    14-27% slower on the BFS family at sf0.1)."""
     e0 = edges.select("a", "b").localCheckpoint()
-    return _mirrored(e0).repartition(num_partitions, "x").localCheckpoint()
+    return _pin(_mirrored(e0), "x")
 
 
 def _origins(
@@ -102,7 +133,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 8,
     damping: float = PAGERANK_DAMPING,
-    num_partitions: int = 8,
     seeds: DataFrame | None = None,
     weight_col: str | None = None,
 ) -> DataFrame:
@@ -131,7 +161,8 @@ def pagerank(
     whose map-side partial sum caps a head entity's reducer input at one
     row per map task), constant-width lineage via localCheckpoint, no
     driver data path at all (the loop is count-free: a fixed iteration
-    budget is the power-method contract).
+    budget is the power-method contract; N and the seed count come from
+    their pins).
     """
     cols = ["a", "b"] + ([weight_col] if weight_col else [])
     e0 = edges.select(*cols).localCheckpoint()
@@ -149,21 +180,12 @@ def pagerank(
         deg_agg = F.sum("wt").alias("deg")
     # deg is also the node list; rank/deg is pre-divided once per round so
     # the per-edge join carries a single double.
-    deg = (
-        mirror
-        .groupBy(F.col("x").alias("name"))
-        .agg(deg_agg)
-        .repartition(num_partitions, "name")
-        .localCheckpoint()
+    deg, n_nodes = _pin(
+        mirror.groupBy(F.col("x").alias("name")).agg(deg_agg), "name", rows=True
     )
-    n_nodes = deg.count()
     if n_nodes == 0:
         return deg.select("name", F.lit(0.0).alias("rank_norm"))
-    adj = (
-        mirror
-        .repartition(num_partitions, "x")
-        .localCheckpoint()
-    )
+    adj = _pin(mirror, "x")
     if seeds is None:
         # uniform restart: p(v) = 1/N, a plan-time constant
         base_col = F.lit((1.0 - damping) / float(n_nodes))
@@ -174,8 +196,7 @@ def pagerank(
         # driver-side (query entities — a handful); the membership join
         # broadcasts. Non-seed nodes restart with 0 mass and are ranked
         # purely by proximity to the seeds.
-        seed_set = seeds.select(F.col("name").alias("__sn")).distinct().localCheckpoint()
-        n_seeds = seed_set.count()
+        seed_set, n_seeds = pin_rows(seeds.select(F.col("name").alias("__sn")).distinct())
         if n_seeds == 0:
             raise ValueError("personalized pagerank requires a non-empty seed set")
         p_val = 1.0 / float(n_seeds)
@@ -291,7 +312,7 @@ def _triangles(oriented: DataFrame) -> DataFrame:
     ).localCheckpoint()
 
 
-def triangle_stats(edges: DataFrame, num_partitions: int = 8) -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Per-node triangle count + local clustering coefficient.
 
     Triangle enumeration via ``_triangles`` (degree-ordered orientation);
@@ -303,7 +324,7 @@ def triangle_stats(edges: DataFrame, num_partitions: int = 8) -> DataFrame:
     standard MR triangle enumeration.
     """
     e0 = edges.select("a", "b").localCheckpoint()
-    deg = _degrees(e0, num_partitions)
+    deg = _degrees(e0)
     tris = _triangles(_oriented(e0, deg))
     per_node = (
         tris.select(F.col("u").alias("name"))
@@ -332,11 +353,7 @@ def triangle_stats(edges: DataFrame, num_partitions: int = 8) -> DataFrame:
     )
 
 
-def link_prediction(
-    edges: DataFrame,
-    num_partitions: int = 8,
-    max_center_deg: int | None = None,
-) -> DataFrame:
+def link_prediction(edges: DataFrame, max_center_deg: int | None = None) -> DataFrame:
     """Common-neighbor link prediction over the undirected (a, b) edge list.
 
     For every NON-adjacent pair (u, v) with at least one common neighbor:
@@ -359,13 +376,13 @@ def link_prediction(
     have deg >= 2 by construction so ln(deg) > 0 always.
     """
     e0 = edges.select("a", "b").localCheckpoint()
-    deg = _degrees(e0, num_partitions)
+    deg = _degrees(e0)
     ctr = _mirrored(e0).join(deg, F.col("x") == F.col("name")).select(
         "x", "y", F.col("deg").alias("wdeg")
     )
     if max_center_deg is not None:
         ctr = ctr.where(F.col("wdeg") <= max_center_deg)
-    ctr = ctr.repartition(num_partitions, "x").localCheckpoint()
+    ctr = _pin(ctr, "x")
     c1, c2 = ctr.alias("c1"), ctr.alias("c2")
     wedges = c1.join(
         c2, (F.col("c1.x") == F.col("c2.x")) & (F.col("c1.y") < F.col("c2.y"))
@@ -395,9 +412,7 @@ def link_prediction(
     )
 
 
-def greedy_coloring(
-    edges: DataFrame, rounds: int = 4, num_partitions: int = 8
-) -> DataFrame:
+def greedy_coloring(edges: DataFrame, rounds: int = 4) -> DataFrame:
     """Deterministic distributed greedy coloring (Jones–Plassmann 1993
     with node ids as priorities): round r colors every still-uncolored
     node whose id exceeds ALL its uncolored neighbors' ids (or that has
@@ -422,13 +437,7 @@ def greedy_coloring(
     color in [1, rounds].
     """
     e = edges.select("a", "b").localCheckpoint()
-    nodes = (
-        _mirrored(e)
-        .select(F.col("x").alias("v"))
-        .distinct()
-        .repartition(num_partitions, "v")
-        .localCheckpoint()
-    )
+    nodes = _pin(_mirrored(e).select(F.col("x").alias("v")).distinct(), "v")
     out = None
     for r in range(1, int(rounds) + 1):
         nbmax = (
@@ -454,19 +463,20 @@ def greedy_coloring(
 def _peel(
     e: DataFrame, peel_round: Callable[[DataFrame], DataFrame], rounds: int | None
 ) -> DataFrame:
-    """Apply ``peel_round`` to the pinned edge frame ``rounds`` times, or
-    with rounds=None until a round keeps the edge count (one count probe
-    per round) — the shared loop of ``kcore`` and ``ktruss``."""
-    budget = rounds if rounds is not None else 1 << 30
+    """Apply ``peel_round`` to the pinned edge frame and pin its result,
+    ``rounds`` times, or with rounds=None until a round keeps the edge
+    count (read from each round's pin) — the shared loop of ``kcore`` and
+    ``ktruss``."""
+    if rounds is not None:
+        for _ in range(rounds):
+            e = peel_round(e).localCheckpoint()
+        return e
     prev_edges = -1
-    for _ in range(budget):
-        e = peel_round(e)
-        if rounds is None:
-            n = e.count()
-            if n == prev_edges:
-                break
-            prev_edges = n
-    return e
+    while True:
+        e, n = pin_rows(peel_round(e))
+        if n == prev_edges:
+            return e
+        prev_edges = n
 
 
 def kcore(edges: DataFrame, k: int = 2, rounds: int | None = 8) -> DataFrame:
@@ -476,10 +486,11 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int | None = 8) -> DataFrame:
     the fixpoint is the classic k-core subgraph. ``rounds`` fixes the peel
     budget (count-free loop, exactly oracle-able by unrolling — the same
     fixed-iteration convention as ``pagerank``); ``rounds=None`` peels to
-    convergence with one count probe per round (the production mode —
-    peel depth is bounded by the graph's degeneracy ordering length, in
-    practice tens of rounds on web graphs). Returns (name, deg): the
-    surviving nodes with their degree in the peeled subgraph.
+    convergence, reading each round's edge count from its pin (the
+    production mode — peel depth is bounded by the graph's degeneracy
+    ordering length, in practice tens of rounds on web graphs). Returns
+    (name, deg): the surviving nodes with their degree in the peeled
+    subgraph.
 
     Scale shape: per round, one degree aggregate (algebraic min/count —
     map-side partials absorb hub skew) and two semi-join filters on the
@@ -496,7 +507,7 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int | None = 8) -> DataFrame:
         keep = deg.where(F.col("deg") >= k).select("name").localCheckpoint()
         ka = keep.select(F.col("name").alias("a"))
         kb = keep.select(F.col("name").alias("b"))
-        return e.join(ka, "a").join(kb, "b").select("a", "b").localCheckpoint()
+        return e.join(ka, "a").join(kb, "b").select("a", "b")
 
     e = _peel(edges.select("a", "b").localCheckpoint(), peel_round, rounds)
     return (
@@ -506,12 +517,12 @@ def kcore(edges: DataFrame, k: int = 2, rounds: int | None = 8) -> DataFrame:
     )
 
 
-def _edge_support(e: DataFrame, num_partitions: int = 8) -> DataFrame:
+def _edge_support(e: DataFrame) -> DataFrame:
     """Per-edge triangle support of the pinned a<b edge list: (a, b, supp)
     for every edge in >= 1 triangle. Each enumerated triangle credits its
     three edges; pairs are re-normalized with least/greatest because
     ``_triangles`` orders vertices by (deg, name) rank, not name."""
-    tris = _triangles(_oriented(e, _degrees(e, num_partitions)))
+    tris = _triangles(_oriented(e, _degrees(e)))
     pairs = (
         tris.select(F.col("u").alias("p"), F.col("v").alias("q"))
         .union(tris.select(F.col("u").alias("p"), F.col("w").alias("q")))
@@ -524,9 +535,7 @@ def _edge_support(e: DataFrame, num_partitions: int = 8) -> DataFrame:
     )
 
 
-def ktruss(
-    edges: DataFrame, k: int = 4, rounds: int | None = 4, num_partitions: int = 8
-) -> DataFrame:
+def ktruss(edges: DataFrame, k: int = 4, rounds: int | None = 4) -> DataFrame:
     """k-truss peeling over the undirected (a, b) edge list.
 
     Each round recomputes per-EDGE triangle support and drops every edge in
@@ -535,7 +544,7 @@ def ktruss(
     endpoints share >= k-2 common surviving neighbors, so trusses are
     locally dense where cores can be stars of stars). ``rounds`` fixes the
     peel budget (count-free loop, exactly oracle-able by unrolling);
-    ``rounds=None`` peels to convergence with one count probe per round.
+    ``rounds=None`` peels to convergence (edge count read from each pin).
     Returns (a, b, supp): surviving edges with their support in the final
     subgraph.
 
@@ -565,11 +574,11 @@ def ktruss(
         # supp only contains edges in >= 1 triangle, and k - 2 >= 1, so
         # semi-joining on the pre-filtered support keys == the left-join +
         # coalesce(supp, 0) >= k - 2 filter.
-        keep = _edge_support(e, num_partitions).where(F.col("supp") >= k - 2)
-        return e.join(keep, ["a", "b"], "semi").localCheckpoint()
+        keep = _edge_support(e).where(F.col("supp") >= k - 2)
+        return e.join(keep, ["a", "b"], "semi")
 
     e = _peel(edges.select("a", "b").localCheckpoint(), peel_round, rounds)
-    supp = _edge_support(e, num_partitions)
+    supp = _edge_support(e)
     return (
         e.join(supp, ["a", "b"], "left")
         .select("a", "b", F.coalesce("supp", F.lit(0)).cast("long").alias("supp"))
@@ -581,7 +590,6 @@ def sssp(
     source: str,
     weight_col: str | None = None,
     rounds: int = 8,
-    num_partitions: int = 8,
 ) -> DataFrame:
     """Single-source shortest path by fixed-round Bellman-Ford relaxation
     over the undirected (a, b[, weight]) edge list; integer weights ONLY,
@@ -604,15 +612,13 @@ def sssp(
     """
     w = (F.col(weight_col) if weight_col else F.lit(1)).cast("long").alias("w")
     e0 = edges.select("a", "b", w).localCheckpoint()
-    und = (
-        e0.select(F.col("a").alias("x"), F.col("b").alias("y"), "w")
-        .union(e0.select(F.col("b").alias("x"), F.col("a").alias("y"), "w"))
-        .repartition(num_partitions, "x")
-        .localCheckpoint()
+    und = _pin(
+        e0.select(F.col("a").alias("x"), F.col("b").alias("y"), "w").union(
+            e0.select(F.col("b").alias("x"), F.col("a").alias("y"), "w")
+        ),
+        "x",
     )
-    dist = edges.sparkSession.createDataFrame(
-        [(source, 0)], "name string, dist bigint"
-    )
+    dist = literal_frame(edges.sparkSession, [(source, 0)], "name string, dist bigint")
     for _ in range(rounds):
         relax = dist.join(und, dist["name"] == und["x"]).select(
             F.col("y").alias("name"), (F.col("dist") + F.col("w")).alias("dist")
@@ -626,7 +632,7 @@ def sssp(
     return dist
 
 
-def hits(edges: DataFrame, iterations: int = 8, num_partitions: int = 8) -> DataFrame:
+def hits(edges: DataFrame, iterations: int = 8) -> DataFrame:
     """HITS hubs/authorities over the DIRECTED (src, dst) edge list.
 
     Classic Kleinberg recurrence with a fixed iteration budget:
@@ -639,26 +645,26 @@ def hits(edges: DataFrame, iterations: int = 8, num_partitions: int = 8) -> Data
     Scale shape mirrors pagerank: two shuffles per round (gather into
     authorities, scatter back into hubs), each one groupBy sum whose
     map-side partial aggregate caps a Zipf hub's reducer input at one row
-    per map task, localCheckpoint every PIN_EVERY rounds, count-free loop.
+    per map task, localCheckpoint every PIN_EVERY rounds, count-free loop
+    (N comes from the node list's pin).
     Frames stay SPARSE inside the loop (a node missing from h/a contributes
     exactly 0 through the inner joins); the full node set is reattached
     once at the end.
     """
     e0 = edges.select("src", "dst").localCheckpoint()
-    nodes = (
+    nodes, n_nodes = _pin(
         e0.select(F.col("src").alias("name"))
         .union(e0.select(F.col("dst").alias("name")))
-        .distinct()
-        .repartition(num_partitions, "name")
-        .localCheckpoint()
+        .distinct(),
+        "name",
+        rows=True,
     )
-    n_nodes = nodes.count()
     if n_nodes == 0:
         return nodes.select(
             "name", F.lit(0.0).alias("hub_norm"), F.lit(0.0).alias("auth_norm")
         )
-    e_src = e0.repartition(num_partitions, "src").localCheckpoint()
-    e_dst = e0.repartition(num_partitions, "dst").localCheckpoint()
+    e_src = _pin(e0, "src")
+    e_dst = _pin(e0, "dst")
 
     h = nodes.select("name", F.lit(1.0).alias("h"))
     a = None
@@ -705,9 +711,7 @@ def hits(edges: DataFrame, iterations: int = 8, num_partitions: int = 8) -> Data
     )
 
 
-def label_propagation(
-    edges: DataFrame, rounds: int = 4, num_partitions: int = 8
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     """Synchronous label-propagation communities over the undirected (a, b)
     edge list — the classic near-linear community detector (Raghavan et
     al.), made fully deterministic: every node starts as its own label and
@@ -725,13 +729,9 @@ def label_propagation(
     count aggregate, one per-node top-1 window (partitioned by node — never
     global); lineage flattened per round via localCheckpoint.
     """
-    adj = _adjacency(edges, num_partitions)
+    adj = _adjacency(edges)
     nodes, _ = _origins(adj, None)
-    labels = (
-        nodes.withColumn("label", F.col("name"))
-        .repartition(num_partitions, "name")
-        .localCheckpoint()
-    )
+    labels = _pin(nodes.withColumn("label", F.col("name")), "name")
     w_top = Window.partitionBy("name").orderBy(
         F.col("c").desc(), F.col("label").asc()
     )
@@ -757,10 +757,7 @@ def label_propagation(
 
 
 def _ms_bfs_dists(
-    edges: DataFrame,
-    rounds: int,
-    sources: DataFrame | None,
-    num_partitions: int,
+    edges: DataFrame, rounds: int, sources: DataFrame | None
 ) -> DataFrame:
     """Multi-source BFS distance frame (src, node, d) over the undirected
     (a, b) edge list — the shared engine under `closeness`, `harmonic` and
@@ -771,48 +768,38 @@ def _ms_bfs_dists(
     the left side — the r5 stats-explosion rule); frontiers are disjoint
     by construction so `visited` is a plain union of checkpointed
     frontiers, never re-joined with itself."""
-    adj = _adjacency(edges, num_partitions)
+    adj = _adjacency(edges)
     _, origins = _origins(adj, sources)
-    frontier = (
+    frontier = _pin(
         origins.select(
             F.col("name").alias("src"),
             F.col("name").alias("node"),
             F.lit(0).cast("int").alias("d"),
-        )
-        .repartition(num_partitions, "src", "node")
-        .localCheckpoint()
+        ),
+        "src",
+        "node",
     )
     layers = [frontier]
     for r in range(rounds):
-        visited = layers[0]
-        for extra in layers[1:]:
-            visited = visited.unionAll(extra)
-        nxt = (
+        frontier, n = pin_rows(
             frontier.join(adj, frontier.node == adj.x)
             .select("src", F.col("y").alias("node"))
             .distinct()
-            .join(visited.select("src", "node"), ["src", "node"], "left_anti")
+            .join(_union_all(layers).select("src", "node"), ["src", "node"], "left_anti")
             .select("src", "node", F.lit(r + 1).cast("int").alias("d"))
-            .localCheckpoint()
         )
-        frontier = nxt
-        layers.append(nxt)
+        layers.append(frontier)
         # empty frontier => every later round is empty too: exiting early
-        # is result-identical to the fixed budget (take(1) on the just-
-        # checkpointed frame is one cheap partition-local probe)
-        if not nxt.take(1):
+        # is result-identical to the fixed budget
+        if n == 0:
             break
-    dist = layers[0]
-    for extra in layers[1:]:
-        dist = dist.unionAll(extra)
-    return dist
+    return _union_all(layers)
 
 
 def closeness(
     edges: DataFrame,
     rounds: int = 8,
     sources: DataFrame | None = None,
-    num_partitions: int = 8,
 ) -> DataFrame:
     """Closeness centrality + eccentricity via multi-source BFS: one
     simultaneous frontier expansion carrying (src, node, d) state, exactly
@@ -838,7 +825,7 @@ def closeness(
     exact closeness is quadratic by definition — that cost lives in the
     explicitly-passed source sample, not hidden in the plan.
     """
-    dist = _ms_bfs_dists(edges, rounds, sources, num_partitions)
+    dist = _ms_bfs_dists(edges, rounds, sources)
     agg = dist.groupBy(F.col("src").alias("name")).agg(
         (F.count(F.lit(1)) - 1).cast("long").alias("n_reach"),
         F.sum("d").cast("long").alias("sum_d"),
@@ -862,7 +849,6 @@ def harmonic(
     rounds: int = 8,
     sources: DataFrame | None = None,
     scale: int = 10000,
-    num_partitions: int = 8,
 ) -> DataFrame:
     """Harmonic centrality over the undirected (a, b) edge list:
     H(u) = sum over reachable v != u of 1/d(u, v) — the centrality that,
@@ -882,7 +868,7 @@ def harmonic(
     but half-even by Python, and that ambiguity cannot arise when the
     quantity being rounded is already exact at 4dp.
     """
-    dist = _ms_bfs_dists(edges, rounds, sources, num_partitions)
+    dist = _ms_bfs_dists(edges, rounds, sources)
     agg = dist.groupBy(F.col("src").alias("name")).agg(
         (F.count(F.lit(1)) - 1).cast("long").alias("n_reach"),
         F.sum(
@@ -906,7 +892,6 @@ def effective_diameter(
     rounds: int = 8,
     sources: DataFrame | None = None,
     q_pct: int = 90,
-    num_partitions: int = 8,
 ) -> DataFrame:
     """Effective diameter (the Leskovec et al. graphs-over-time metric):
     the smallest distance d such that >= q_pct% of reachable (src, node)
@@ -926,7 +911,7 @@ def effective_diameter(
     frame — at most `rounds` rows, so the global window is a bounded
     single-task job, not a data-sized sort.
     """
-    dist = _ms_bfs_dists(edges, rounds, sources, num_partitions).where(
+    dist = _ms_bfs_dists(edges, rounds, sources).where(
         F.col("d") >= 1
     )
     byd = dist.groupBy("d").agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -963,7 +948,6 @@ def betweenness(
     rounds: int = 8,
     sources: DataFrame | None = None,
     scale: int = 10000,
-    num_partitions: int = 8,
 ) -> DataFrame:
     """Sampled Brandes betweenness centrality (Brandes 2001) over the
     undirected (a, b) edge list: for each source s, a level-synchronous
@@ -996,24 +980,22 @@ def betweenness(
     in the Catalyst size estimate (no self-join growth, the r5
     stats-explosion rule).
     """
-    adj = _adjacency(edges, num_partitions)
+    adj = _adjacency(edges)
     nodes, srcs = _origins(adj, sources)
-    frontier = (
+    frontier = _pin(
         srcs.select(
             F.col("name").alias("src"),
             F.col("name").alias("node"),
             F.lit(0).cast("int").alias("d"),
             F.lit(1).cast("long").alias("sigma"),
-        )
-        .repartition(num_partitions, "src", "node")
-        .localCheckpoint()
+        ),
+        "src",
+        "node",
     )
     layers = [frontier]
     for r in range(rounds):
-        visited = layers[0].select("src", "node")
-        for extra in layers[1:]:
-            visited = visited.unionAll(extra.select("src", "node"))
-        nxt = (
+        visited = _union_all([layer.select("src", "node") for layer in layers])
+        frontier, n = pin_rows(
             frontier.join(adj, frontier.node == adj.x)
             .select("src", F.col("y").alias("node"), "sigma")
             .join(visited, ["src", "node"], "left_anti")
@@ -1022,15 +1004,11 @@ def betweenness(
             .select(
                 "src", "node", F.lit(r + 1).cast("int").alias("d"), "sigma"
             )
-            .localCheckpoint()
         )
-        frontier = nxt
-        layers.append(nxt)
-        if not nxt.take(1):
+        layers.append(frontier)
+        if n == 0:
             break
-    dist = layers[0]
-    for extra in layers[1:]:
-        dist = dist.unionAll(extra)
+    dist = _union_all(layers)
     # shortest-path DAG successors: v (level d) -> w (level d+1), built
     # once and pinned; carries both endpoint sigmas for the backward pass
     dv = dist.select(
@@ -1045,14 +1023,14 @@ def betweenness(
         F.col("d").alias("dw"),
         F.col("sigma").alias("sw"),
     )
-    dag = (
+    dag = _pin(
         dv.join(adj, dv.v == adj.x)
         .select("src", "v", "dv", "sv", F.col("y").alias("w"))
         .join(dw, ["src", "w"])
         .where(F.col("dw") == F.col("dv") + 1)
-        .select("src", "v", "dv", "sv", "w", "sw")
-        .repartition(num_partitions, "src", "w")
-        .localCheckpoint()
+        .select("src", "v", "dv", "sv", "w", "sw"),
+        "src",
+        "w",
     )
     term = F.expr(f"(sv * ({int(scale)} + coalesce(dq, 0))) div sw")
     prev: DataFrame | None = None
@@ -1080,10 +1058,7 @@ def betweenness(
             F.lit(0).cast("long").alias("bc_q"),
             F.lit(0.0).alias("bc"),
         )
-    acc = contribs[0]
-    for extra in contribs[1:]:
-        acc = acc.unionAll(extra)
-    bc = acc.groupBy("node").agg(F.sum("dq").cast("long").alias("bc_q"))
+    bc = _union_all(contribs).groupBy("node").agg(F.sum("dq").cast("long").alias("bc_q"))
     return nodes.join(bc, nodes.name == bc.node, "left").select(
         "name",
         F.coalesce(F.col("bc_q"), F.lit(0)).cast("long").alias("bc_q"),
@@ -1097,7 +1072,6 @@ def deterministic_walks(
     edges: DataFrame,
     steps: int = 8,
     sources: DataFrame | None = None,
-    num_partitions: int = 8,
 ) -> DataFrame:
     """Deterministic graph-walk sampling: one walk per source over the
     undirected (a, b) edge list, where the walker at node u on step t
@@ -1120,13 +1094,9 @@ def deterministic_walks(
     per step with localCheckpoint; all joins are additive in the Catalyst
     size estimate.
     """
-    adj = _adjacency(edges, num_partitions)
+    adj = _adjacency(edges)
     _, srcs = _origins(adj, sources)
-    cur = (
-        srcs.select(F.col("name").alias("src"), F.col("name").alias("node"))
-        .repartition(num_partitions, "src")
-        .localCheckpoint()
-    )
+    cur = _pin(srcs.select(F.col("name").alias("src"), F.col("name").alias("node")), "src")
     layers = [cur.select("src", F.lit(0).cast("int").alias("step"), "node")]
     for t in range(steps):
         h = F.conv(
@@ -1159,10 +1129,7 @@ def deterministic_walks(
         layers.append(
             cur.select("src", F.lit(t + 1).cast("int").alias("step"), "node")
         )
-    out = layers[0]
-    for extra in layers[1:]:
-        out = out.unionAll(extra)
-    return out.select(F.col("src").alias("name"), "step", "node")
+    return _union_all(layers).select(F.col("src").alias("name"), "step", "node")
 
 
 def assortativity(edges: DataFrame) -> DataFrame:
@@ -1268,9 +1235,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def maximal_independent_set(
-    edges: DataFrame, rounds: int = 4, num_partitions: int = 8
-) -> DataFrame:
+def maximal_independent_set(edges: DataFrame, rounds: int = 4) -> DataFrame:
     """Deterministic Luby-style maximal independent set over the undirected
     (a, b) edge list: each round, every still-undecided node whose priority
     is a strict minimum among its undecided neighbors joins the MIS and
@@ -1290,13 +1255,12 @@ def maximal_independent_set(
     ktruss stats-explosion fix), lineage flattened per round.
     """
     e0 = edges.select("a", "b").localCheckpoint()
-    pri = (
+    pri = _pin(
         _mirrored(e0)
         .select(F.col("x").alias("name"))
         .distinct()
-        .withColumn("p", F.concat(F.md5("name"), F.col("name")))
-        .repartition(num_partitions, "name")
-        .localCheckpoint()
+        .withColumn("p", F.concat(F.md5("name"), F.col("name"))),
+        "name",
     )
     e = (
         _mirrored(e0)
@@ -1339,14 +1303,12 @@ def maximal_independent_set(
             .join(und.select(F.col("name").alias("y")), "y", "left_semi")
             .localCheckpoint()
         )
-    out = und.select(
+    undecided = und.select(
         "name",
         F.lit("undecided").alias("status"),
         F.lit(-1).cast("long").alias("mis_round"),
     )
-    for d in decided:
-        out = out.unionAll(d)
-    return out
+    return _union_all([undecided, *decided])
 
 
 def butterflies(

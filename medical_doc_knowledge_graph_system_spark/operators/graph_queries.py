@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..corelib import graphalgs
-from ..session import driver_rows
+from ..session import driver_rows, pin_rows
 
 
 def _try_collect_adjacency(adj: DataFrame) -> dict[str, list[tuple[str, str]]] | None:
@@ -82,15 +82,13 @@ def k_hop(
     broadcast_limit = 100_000
 
     try:
-        frontier = seeds.select(F.col("node_id").alias("y")).distinct().localCheckpoint()
-        frontier_n = frontier.count()
+        frontier, frontier_n = pin_rows(seeds.select(F.col("node_id").alias("y")).distinct())
         reached = frontier.select("y", F.lit(0).alias("hops"))
         for hop in range(1, max_hops + 1):
             f = frontier.hint("broadcast") if frontier_n <= broadcast_limit else frontier
             nxt = adj.join(f, adj.x == f.y).select(adj.y.alias("y")).distinct()
             # min-hop semantics: drop nodes already reached at a smaller hop
-            nxt = nxt.join(reached.select("y"), "y", "left_anti").localCheckpoint()
-            frontier_n = nxt.count()
+            nxt, frontier_n = pin_rows(nxt.join(reached.select("y"), "y", "left_anti"))
             if frontier_n == 0:
                 break
             reached = reached.union(nxt.select("y", F.lit(hop).alias("hops")))

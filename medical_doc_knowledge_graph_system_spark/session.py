@@ -9,7 +9,7 @@ from __future__ import annotations
 import os
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -123,3 +123,15 @@ def driver_rows(df: DataFrame, max_rows: int | None = None) -> pd.DataFrame | No
     bound = DRIVER_MAX_ROWS if max_rows is None else min(max_rows, DRIVER_MAX_ROWS)
     pdf = df.limit(bound + 1).toPandas()
     return None if len(pdf) > bound else pdf
+
+
+def pin_rows(df: DataFrame) -> tuple[DataFrame, int]:
+    """(``df`` pinned by an eager localCheckpoint, its row count).
+
+    The count is an Observation on the pin's own job, so an iterative
+    loop learns its frontier or node count without a separate count() or
+    take(1) job over the pinned frame. A frame that is empty, statically
+    or after a filter, counts 0."""
+    obs = Observation()
+    pinned = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    return pinned, obs.get["n"]

@@ -101,12 +101,12 @@ def _run_op(op: str, cores: int, docs_rows) -> float:
     from medical_doc_knowledge_graph_system_spark.functions.dedup import (
         neardup_clusters,
     )
-    from medical_doc_knowledge_graph_system_spark.operators.graph_analytics import (
-        hits,
-        label_propagation,
-    )
+    from medical_doc_knowledge_graph_system_spark.operators import graph_analytics as ga
 
     width = 8 * cores
+    # the graph operators spread their keyed pins over PIN_PARTITIONS; each
+    # side runs them at its own shuffle width
+    ga.PIN_PARTITIONS = width
     s = get_spark(
         app_name=f"scal_{op}_{cores}", cores=cores, shuffle_partitions=width
     )
@@ -125,13 +125,9 @@ def _run_op(op: str, cores: int, docs_rows) -> float:
             de = _spark_edges(s, N_EDGES, width).distinct().localCheckpoint()
             de.count()
             t = time.time()
-            hits(de, iterations=8, num_partitions=width).count()
+            ga.hits(de, iterations=8).count()
             return round(time.time() - t, 2)
         if op == "closeness":
-            from medical_doc_knowledge_graph_system_spark.operators.graph_analytics import (
-                closeness,
-            )
-
             und = (
                 _spark_edges(s, N_EDGES, width)
                 .select(
@@ -157,13 +153,9 @@ def _run_op(op: str, cores: int, docs_rows) -> float:
                 )
             )
             t = time.time()
-            closeness(und, rounds=3, sources=src, num_partitions=width).count()
+            ga.closeness(und, rounds=3, sources=src).count()
             return round(time.time() - t, 2)
         if op == "betweenness":
-            from medical_doc_knowledge_graph_system_spark.operators.graph_analytics import (
-                betweenness,
-            )
-
             und = (
                 _spark_edges(s, N_EDGES, width)
                 .select(
@@ -183,7 +175,7 @@ def _run_op(op: str, cores: int, docs_rows) -> float:
                 )
             )
             t = time.time()
-            betweenness(und, rounds=3, sources=src, num_partitions=width).count()
+            ga.betweenness(und, rounds=3, sources=src).count()
             return round(time.time() - t, 2)
         und = (
             _spark_edges(s, N_EDGES, width)
@@ -195,7 +187,7 @@ def _run_op(op: str, cores: int, docs_rows) -> float:
         )
         und.count()
         t = time.time()
-        label_propagation(und, rounds=4, num_partitions=width).count()
+        ga.label_propagation(und, rounds=4).count()
         return round(time.time() - t, 2)
     finally:
         s.stop()

@@ -1231,3 +1231,165 @@ def test_no_parameter_forces_a_plan_path():
                 names = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
                 hits += [f"{path.name}:{node.lineno} {node.name}({n})" for n in names & forcing]
     assert not hits, hits
+
+
+def test_no_graph_operator_takes_num_partitions():
+    """The graph loops spread their keyed pins over one width,
+    graph_analytics.PIN_PARTITIONS (read at call time), and chunk_pages
+    over the session's shuffle width. No def in either module takes a
+    per-call partition count."""
+    import ast
+    import pathlib
+
+    from medical_doc_knowledge_graph_system_spark.operators import chunk, graph_analytics
+
+    hits = []
+    for mod in (graph_analytics, chunk):
+        path = pathlib.Path(mod.__file__)
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                names = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+                if "num_partitions" in names:
+                    hits.append(f"{path.name}:{node.lineno} {node.name}")
+    assert not hits, hits
+
+
+def _seeded_graph(spark):
+    """Undirected (a, b) edge list, a < b, distinct, over 16 nodes: node i
+    links to a hash-chosen partner, so every name n00..n15 is an endpoint.
+    Built from spark.range, so no pinned plan scans a Python RDD."""
+    part = F.abs(F.xxhash64("id", F.lit(7))) % 16
+    pairs = spark.range(0, 40).select(
+        F.format_string("n%02d", F.col("id") % 16).alias("p"),
+        F.format_string("n%02d", part).alias("q"),
+    ).where(F.col("p") != F.col("q"))
+    return pairs.select(F.least("p", "q").alias("a"), F.greatest("p", "q").alias("b")).distinct()
+
+
+def _graph_operator_calls(spark):
+    """name -> zero-argument call of every graph operator whose pins go
+    through graph_analytics._pin, on the _seeded_graph."""
+    from medical_doc_knowledge_graph_system_spark.operators import graph_analytics as ga
+
+    und = _seeded_graph(spark)
+    directed = und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    seeds = spark.createDataFrame([("n01",), ("n05",)], "name string")
+    return {
+        "pagerank": lambda: ga.pagerank(und),
+        "pagerank_seeds": lambda: ga.pagerank(und, seeds=seeds),
+        "triangle_stats": lambda: ga.triangle_stats(und),
+        "link_prediction": lambda: ga.link_prediction(und),
+        "greedy_coloring": lambda: ga.greedy_coloring(und),
+        "ktruss": lambda: ga.ktruss(und, k=3),
+        "sssp": lambda: ga.sssp(und, "n00"),
+        "hits": lambda: ga.hits(directed),
+        "label_propagation": lambda: ga.label_propagation(und),
+        "closeness": lambda: ga.closeness(und),
+        "harmonic": lambda: ga.harmonic(und),
+        "effective_diameter": lambda: ga.effective_diameter(und),
+        "betweenness": lambda: ga.betweenness(und),
+        "deterministic_walks": lambda: ga.deterministic_walks(und),
+        "maximal_independent_set": lambda: ga.maximal_independent_set(und),
+    }
+
+
+GRAPH_OPERATORS = [
+    "pagerank", "pagerank_seeds", "triangle_stats", "link_prediction",
+    "greedy_coloring", "ktruss", "sssp", "hits", "label_propagation",
+    "closeness", "harmonic", "effective_diameter", "betweenness",
+    "deterministic_walks", "maximal_independent_set",
+]
+
+
+@pytest.mark.parametrize("op", GRAPH_OPERATORS)
+def test_graph_operator_pin_width_is_pin_partitions(spark, monkeypatch, op):
+    """The pin width is one module constant: at PIN_PARTITIONS = 3 every
+    hash repartition under a recorded pin has 3 partitions, and the rows
+    equal those at the default width."""
+    import re
+
+    from medical_doc_knowledge_graph_system_spark.operators import graph_analytics
+
+    call = _graph_operator_calls(spark)[op]
+    default = sorted(map(tuple, call().collect()))
+    monkeypatch.setattr(graph_analytics, "PIN_PARTITIONS", 3)
+    out = []
+    plans, _ = _pinned_plans(spark, monkeypatch, lambda: out.append(call()))
+    widths = [
+        int(w)
+        for p in plans
+        for w in re.findall(r"Exchange hashpartitioning\([^)]*, (\d+)\), REPARTITION_BY_NUM", p)
+    ]
+    assert widths and set(widths) == {3}, (widths, plans)
+    assert sorted(map(tuple, out[0].collect())) == default
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "closeness", "harmonic", "effective_diameter", "betweenness",
+        "pagerank", "pagerank_seeds", "hits", "kcore", "ktruss", "k_hop",
+    ],
+)
+def test_graph_loop_builds_without_probe_action(spark, monkeypatch, op):
+    """Node, seed, frontier and peel counts come from the pins
+    (session.pin_rows): the operator builds with count, take and isEmpty
+    raising, and its result then collects."""
+    from medical_doc_knowledge_graph_system_spark.operators import graph_analytics as ga
+    from medical_doc_knowledge_graph_system_spark.operators.graph_queries import k_hop
+
+    calls = _graph_operator_calls(spark)
+    und = _seeded_graph(spark)
+    calls["kcore"] = lambda: ga.kcore(und, k=3, rounds=None)
+    calls["ktruss"] = lambda: ga.ktruss(und, k=3, rounds=None)
+    calls["k_hop"] = lambda: k_hop(
+        und.select(F.col("a").alias("src"), F.col("b").alias("dst"), F.lit("r").alias("rel_type")),
+        spark.createDataFrame([("n03",)], "node_id string"),
+        max_hops=3,
+    )
+    df_cls = type(spark.range(1))
+
+    def probe(*_args, **_kwargs):
+        raise AssertionError("probe action in a graph loop")
+
+    with monkeypatch.context() as m:
+        for name in ("count", "take", "isEmpty"):
+            m.setattr(df_cls, name, probe)
+        out = calls[op]()
+    assert out.collect()
+
+
+@pytest.mark.parametrize(
+    "case,expected",
+    [("static_empty", 0), ("filtered_empty", 0), ("non_empty", 10)],
+)
+def test_pin_rows_counts_the_pinned_frame(spark, case, expected):
+    from medical_doc_knowledge_graph_system_spark.session import pin_rows
+
+    df = {
+        "static_empty": spark.range(0),
+        "filtered_empty": spark.range(10).where(F.col("id") > 100),
+        "non_empty": spark.range(10),
+    }[case]
+    pinned, n = pin_rows(df)
+    assert n == expected
+    assert sorted(r.id for r in pinned.collect()) == list(range(expected))
+
+
+def test_sssp_start_row_scans_no_python_rdd(spark, monkeypatch):
+    """sssp's one-row start frame is a session.literal_frame (a Range), so
+    no relax round starts a Python worker task. With one round the pins are
+    e0, the adjacency and the round; the round's only Scan ExistingRDD is
+    the pinned (x, y, w) adjacency. A createDataFrame start row would be a
+    second one."""
+    import re
+
+    from medical_doc_knowledge_graph_system_spark.operators.graph_analytics import sssp
+
+    und = _seeded_graph(spark)
+    plans, _ = _pinned_plans(spark, monkeypatch, lambda: sssp(und, "n00", rounds=1))
+    assert len(plans) == 3, plans
+    scans = re.findall(r"Scan ExistingRDD\[([^\]]*)\]", plans[-1])
+    assert [re.sub(r"#\w+", "", s) for s in scans] == ["x,y,w"], plans[-1]
+    assert "Range" in plans[-1], plans[-1]
