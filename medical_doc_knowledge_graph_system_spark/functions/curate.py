@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import minhash_band_pairs
+from .dedup import minhash_band_pairs, shingle_sets
 from .textfns import lang_argmax, lang_score_cols, quality_cols, tokens_col
 
 
@@ -593,9 +593,6 @@ def coverage_select(
     driver rounds, never a driver-side data structure beyond the picks).
     Output: (rank, doc_id, gain, cum_covered).
     """
-    from ..operators.skew import ensure_parallelism
-    from .dedup import shingles_col
-
     # r6 REDESIGN: keep shingles as one ARRAY per document (never explode —
     # the r5 plan materialized the corpus_shingles-row incidence and then
     # anti-joined + re-aggregated all of it per round). The covered set is
@@ -607,11 +604,7 @@ def coverage_select(
     # anti-join count produced, same argmax, same smallest-doc_id
     # tie-break, same termination (max gain 0 <=> every candidate fully
     # covered <=> the old cand frame was empty).
-    shs = (
-        ensure_parallelism(df.select("doc_id", F.col(text_col)))
-        .select("doc_id", shingles_col(text_col).alias("shs"))
-        .localCheckpoint(eager=True)
-    )
+    shs = shingle_sets(df, text_col)
     covered: set[str] = set()
     chosen: list[int] = []
     out: list[tuple[int, int, int, int]] = []

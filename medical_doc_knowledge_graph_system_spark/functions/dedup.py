@@ -11,6 +11,16 @@ Scale notes (100 TB design point):
     doc_id (already unique → no skew); band self-join shuffles on band key —
     bucket sizes bounded by band width, AQE splits stragglers.
   * jaccard verify runs ONLY on LSH candidate pairs, never all-pairs.
+
+Blocking rule. The rare-shingle family (ngram_jaccard_pairs,
+containment_pairs, shingle_overlap_edges and lcs_run_pairs on top of it,
+graph_analytics.butterflies) finds candidates only through shared RARE
+shingles, never all pairs: a shingle blocks when its document frequency
+lies in [2, MAX_SHINGLE_DF] (block purging, SparkER). A df-1 shingle forms
+no pair, and a frequent one would fan its bucket out quadratically. Each
+operator reads the doc-level shingle arrays from one pin (shingle_sets)
+and counts shared rare shingles per pair with one engine (rare_pairs);
+the window is a module constant read at call time, not a parameter.
 """
 
 from __future__ import annotations
@@ -18,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import pin_rows
 from .textfns import tokens_col
 
 MINHASH_SEEDS = 8
@@ -39,6 +50,11 @@ MAX_DEDUP_BUCKET = 100
 # so the general path takes over. 2^16 sets = 4.3e9 bit ops, well under a
 # second per core spread across the executors.
 DENSE_SETS_MAX = 1 << 16
+
+# Rare-shingle blocking window: a shingle joins the candidate self-join when
+# 2 <= df <= MAX_SHINGLE_DF, which caps every bucket at C(50, 2) pairs. The
+# oracles of the rare-shingle gates hard-code the same 50.
+MAX_SHINGLE_DF = 50
 
 
 def exact_dup_flags_expr(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -95,6 +111,64 @@ def doc_shingles(df: DataFrame, text_col: str = "text", n: int = SHINGLE_N) -> D
 
     df = ensure_parallelism(df.select("doc_id", text_col))
     return df.select("doc_id", F.explode(shingles_col(text_col, n)).alias("shingle"))
+
+
+def shingle_sets(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Pinned (doc_id, shs) frame: each document's distinct shingles as one
+    array. Pinning the arrays rather than the exploded incidence keeps the
+    same bytes in ~50x fewer row objects (materialization cost is per row);
+    consumers explode from the pin in-task and read |S(d)| as size(shs)."""
+    from ..operators.skew import ensure_parallelism
+
+    return (
+        ensure_parallelism(df.select("doc_id", F.col(text_col)))
+        .select("doc_id", shingles_col(text_col).alias("shs"))
+        .localCheckpoint()
+    )
+
+
+def rare_pairs(incid: DataFrame) -> DataFrame:
+    """(a, b, n) with a < b: document pairs of a (doc_id, shingle) incidence
+    and the number n >= 1 of rare shingles they share (the blocking rule in
+    the module docstring). The df aggregate and the filter join read
+    ``incid`` twice, so callers pass a pinned or cheaply derived frame; the
+    filtered side is pinned because it feeds both halves of the self-join.
+    """
+    rare = (
+        incid.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df_"))
+        .where(F.col("df_").between(2, MAX_SHINGLE_DF))
+        .select("shingle")
+    )
+    ir = incid.join(rare, "shingle").localCheckpoint()
+    l = ir.select(F.col("doc_id").alias("a"), "shingle")
+    r = ir.select(F.col("doc_id").alias("b"), "shingle")
+    return (
+        l.join(r, ["shingle"])
+        .where(F.col("a") < F.col("b"))
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+    )
+
+
+def _sized_overlaps(df: DataFrame, text_col: str) -> DataFrame:
+    """(doc_a, doc_b, n_inter, n_a, n_b): rare_pairs over the shingle sets
+    with both set sizes attached — the step the Jaccard and containment
+    verifiers share."""
+    arr = shingle_sets(df, text_col)
+    sizes = arr.select("doc_id", F.size("shs").cast("long").alias("n_sh"))
+    return (
+        rare_pairs(arr.select("doc_id", F.explode("shs").alias("shingle")))
+        .join(sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("n_a")), "a")
+        .join(sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("n_b")), "b")
+        .select(
+            F.col("a").alias("doc_a"),
+            F.col("b").alias("doc_b"),
+            F.col("n").alias("n_inter"),
+            "n_a",
+            "n_b",
+        )
+    )
 
 
 def minhash_signatures(
@@ -179,54 +253,19 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
     threshold: float = 0.8,
-    max_shingle_df: int = 50,
 ) -> DataFrame:
     """Near-duplicate pairs by exact n-gram Jaccard, blocked on shared rare
-    shingles (document frequency <= max_shingle_df caps bucket fan-out; the
-    frequent-shingle tail contributes candidates through its rarer
-    neighbors). Output: (doc_a, doc_b, jaccard rounded 4dp).
+    shingles (the blocking rule in the module docstring: the df cap bounds
+    bucket fan-out; the frequent-shingle tail contributes candidates
+    through its rarer neighbors). Output: (doc_a, doc_b, jaccard rounded
+    4dp).
     """
-    # r6: pin the doc-level shingle-ARRAY frame (same bytes, ~50x fewer
-    # row objects than the exploded incidence — the materialization cost is
-    # per-row); the explode consumers re-derive from the pin in-task and
-    # per-doc sizes become size(shs) — no aggregate at all.
-    from ..operators.skew import ensure_parallelism
-
-    arr = (
-        ensure_parallelism(df.select("doc_id", F.col(text_col)))
-        .select("doc_id", shingles_col(text_col).alias("shs"))
-        .localCheckpoint()
+    jac = F.round(
+        F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 4
     )
-    sh = arr.select("doc_id", F.explode("shs").alias("shingle"))
-    sizes = arr.select("doc_id", F.size("shs").cast("long").alias("n_sh"))
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df_"))
-        .where(F.col("df_") <= max_shingle_df)
-        .select("shingle")
-    )
-    # rare-filtered side feeds both halves of the candidate self-join
-    sh_r = sh.join(rare, "shingle").localCheckpoint()
-    l = sh_r.select(F.col("doc_id").alias("doc_a"), "shingle")
-    r = sh_r.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        l.join(r, ["shingle"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 4
-            ).alias("jaccard"),
-        )
+        _sized_overlaps(df, text_col)
+        .select("doc_a", "doc_b", jac.alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
 
@@ -235,7 +274,6 @@ def shingle_overlap_edges(
     df: DataFrame,
     text_col: str = "text",
     min_shared: int = 3,
-    max_shingle_df: int = 50,
 ) -> DataFrame:
     """Document-similarity graph: undirected edges (a, b) between doc pairs
     sharing >= min_shared rare shingles (a < b, one row per pair). This is
@@ -245,39 +283,13 @@ def shingle_overlap_edges(
     artifacts single-shingle LSH blocking produces).
 
     Scale shape: identical to the Jaccard verify path — map-side shingle
-    explode, one rare-shingle DF filter (bucket fan-out capped at
-    max_shingle_df), one blocked self-join, one algebraic pair count.
-    Never all-pairs.
+    explode, one rare-shingle df filter, one blocked self-join, one
+    algebraic pair count. Never all-pairs.
     """
-    # r6: pin the DOC-LEVEL shingle-array frame, not the exploded
-    # incidence — same bytes but ~50x fewer row objects, so the
-    # materialization (which dominated this operator's wall) is far
-    # cheaper; the two explode consumers re-derive from the pinned arrays
-    # in-task (guide §5: cache what is expensive to recompute, and an
-    # explode from pinned arrays is not)
-    from ..operators.skew import ensure_parallelism
-
-    arr = (
-        ensure_parallelism(df.select("doc_id", F.col(text_col)))
-        .select("doc_id", shingles_col(text_col, SHINGLE_N).alias("shs"))
-        .localCheckpoint()
-    )
-    sh = arr.select("doc_id", F.explode("shs").alias("shingle"))
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df_"))
-        .where(F.col("df_") <= max_shingle_df)
-        .select("shingle")
-    )
-    sh_r = sh.join(rare, "shingle").localCheckpoint()
-    l = sh_r.select(F.col("doc_id").alias("a"), "shingle")
-    r = sh_r.select(F.col("doc_id").alias("b"), "shingle")
+    arr = shingle_sets(df, text_col)
     return (
-        l.join(r, ["shingle"])
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
+        rare_pairs(arr.select("doc_id", F.explode("shs").alias("shingle")))
+        .where(F.col("n") >= min_shared)
         .select("a", "b")
     )
 
@@ -410,20 +422,14 @@ def neardup_clusters(
     from pyspark.sql import Window
 
     from ..operators.resolve import connected_components
-    from ..operators.skew import ensure_parallelism
 
-    # r6: pin the doc-level shingle-ARRAY frame (50x fewer row objects than
-    # the exploded incidence for the same bytes); the minhash stage derives
-    # its (doc_id, shingle) rows from it in-task, and the Jaccard verify
-    # becomes ONE array_intersect per candidate pair against this frame
-    # instead of two token-level joins + a re-aggregate (guide §2.3/§3.3).
-    # n_inter/n_a/n_b and the rounded-jaccard filter are the identical
-    # integers/expression, so the edge set is unchanged.
-    arr = (
-        ensure_parallelism(df.select("doc_id", F.col(text_col)))
-        .select("doc_id", shingles_col(text_col).alias("shs"))
-        .localCheckpoint()
-    )
+    # r6: the minhash stage derives its (doc_id, shingle) rows from the
+    # shingle-set pin in-task, and the Jaccard verify becomes ONE
+    # array_intersect per candidate pair against it instead of two
+    # token-level joins + a re-aggregate (guide §2.3/§3.3). n_inter/n_a/n_b
+    # and the rounded-jaccard filter are the identical integers/expression,
+    # so the edge set is unchanged.
+    arr = shingle_sets(df, text_col)
     sh = arr.select("doc_id", F.explode("shs").alias("shingle"))
     cand = minhash_band_pairs(
         df, text_col, k, band_rows, max_bucket, shingles=sh
@@ -470,7 +476,6 @@ def containment_pairs(
     df: DataFrame,
     text_col: str = "text",
     threshold: float = 0.9,
-    max_shingle_df: int = 50,
 ) -> DataFrame:
     """Asymmetric near-duplicate pairs by Broder CONTAINMENT:
     c(a in b) = |S(a) ∩ S(b)| / |S(a)|. A short doc wholly embedded in a
@@ -482,41 +487,11 @@ def containment_pairs(
     Output: (doc_a, doc_b, cont_a, cont_b) with doc_a < doc_b, both
     directions rounded 4dp, kept when either direction >= threshold.
     """
-    # r6: same doc-level array pin as ngram_jaccard_pairs
-    from ..operators.skew import ensure_parallelism
-
-    arr = (
-        ensure_parallelism(df.select("doc_id", F.col(text_col)))
-        .select("doc_id", shingles_col(text_col).alias("shs"))
-        .localCheckpoint()
-    )
-    sh = arr.select("doc_id", F.explode("shs").alias("shingle"))
-    sizes = arr.select("doc_id", F.size("shs").cast("long").alias("n_sh"))
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df_"))
-        .where(F.col("df_") <= max_shingle_df)
-        .select("shingle")
-    )
-    sh_r = sh.join(rare, "shingle").localCheckpoint()
-    l = sh_r.select(F.col("doc_id").alias("doc_a"), "shingle")
-    r = sh_r.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        l.join(r, ["shingle"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
     cont_a = F.round(F.col("n_inter") / F.col("n_a"), 4)
     cont_b = F.round(F.col("n_inter") / F.col("n_b"), 4)
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a", "doc_b", cont_a.alias("cont_a"), cont_b.alias("cont_b")
-        )
+        _sized_overlaps(df, text_col)
+        .select("doc_a", "doc_b", cont_a.alias("cont_a"), cont_b.alias("cont_b"))
         .where((F.col("cont_a") >= threshold) | (F.col("cont_b") >= threshold))
     )
 
@@ -593,21 +568,26 @@ def set_jaccard_pairs(
     ``toks`` is read as a SET: it is normalized to array_sort(array_distinct)
     at entry, so duplicated or unordered tokens cannot inflate n / n_inter
     or split one set into two.
+
+    Building the plan runs jobs: the pin of the distinct sets (which also
+    counts them) and ``dfreq.count()``, the vocabulary size. The dense vs
+    general choice is made from those two counts at that point, before the
+    returned frame is evaluated.
     """
     from pyspark.sql import Window
 
     tok_sets = tok_sets.select(
         "doc_id", F.array_sort(F.array_distinct("toks")).alias("toks")
     )
-    # sid = min doc_id of the set: unique per set, no hash-collision risk
-    sets = (
+    # sid = min doc_id of the set: unique per set, no hash-collision risk;
+    # the set count rides on the pin's own job
+    sets, n_sets = pin_rows(
         tok_sets.groupBy("toks")
         .agg(
             F.min("doc_id").alias("sid"),
             F.collect_list("doc_id").alias("dids"),
         )
         .select("sid", "toks", "dids", F.size("toks").cast("long").alias("n"))
-        .localCheckpoint()
     )
 
     # intra-set pairs: identical token sets, J = 1 by construction (the
@@ -644,7 +624,6 @@ def set_jaccard_pairs(
     # filter with AllPairs length + PPJoin positional filters.
     stoks = sets.select("sid", "n", F.explode("toks").alias("token"))
     dfreq = stoks.groupBy("token").agg(F.count(F.lit(1)).cast("long").alias("df_"))
-    n_sets = sets.count()
     n_vocab = dfreq.count()
     spark = tok_sets.sparkSession
     width = int(spark.conf.get("spark.sql.shuffle.partitions", "64"))
@@ -948,7 +927,6 @@ def lcs_run_pairs(
     text_col: str = "text",
     n: int = SHINGLE_N,
     min_shared: int = 3,
-    max_shingle_df: int = 50,
 ) -> DataFrame:
     """Longest common token SUBSTRING between every blocked candidate pair —
     the boilerplate-vs-true-duplicate discriminator: near-dup docs share a
@@ -967,7 +945,7 @@ def lcs_run_pairs(
     (pair, diagonal). Output: (a, b, lcs_tokens).
     """
     pairs = shingle_overlap_edges(
-        df, text_col, min_shared=min_shared, max_shingle_df=max_shingle_df
+        df, text_col, min_shared=min_shared
     ).localCheckpoint(eager=True)
     toks = tokens_col(text_col)
     idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))

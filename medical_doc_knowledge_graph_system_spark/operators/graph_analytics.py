@@ -31,7 +31,7 @@ Spark-native engine carries them as first-class distributed operators:
 Undirected operators take the same edge-list contract as the CC operators:
 ``edges`` with columns (a, b), a < b, distinct (``hits``, ``dyad_census``
 and ``scc_by_closure`` read a directed (src, dst) list, ``butterflies`` a
-bipartite incidence frame). Each pins the
+bipartite (doc_id, shingle) incidence frame). Each pins the
 (tiny, vocabulary-sized) edge frame before fanning it out: Catalyst reuses
 nothing across union/self-join branches (CLAUDE.md late-r2), so an
 unpinned corpus-derived lineage would re-run per reference.
@@ -55,6 +55,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.dedup import rare_pairs
 from ..session import literal_frame, pin_rows
 
 PAGERANK_DAMPING = 0.85
@@ -689,8 +690,14 @@ def hits(edges: DataFrame, iterations: int = 8) -> DataFrame:
         if (_i + 1) % PIN_EVERY == 0 or _i == iterations - 1:
             a = a.localCheckpoint()
             h = h.localCheckpoint()
-    s_h = h.agg(F.sum("h")).collect()[0][0] or 0.0
-    s_a = a.agg(F.sum("a")).collect()[0][0] or 0.0
+    # both L1 sums in one job: one aggregate over the union of the pins (a
+    # None sum, from an empty frame, reads as 0 below)
+    s_h, s_a = (
+        h.select("h")
+        .unionByName(a.select("a"), allowMissingColumns=True)
+        .agg(F.sum("h"), F.sum("a"))
+        .collect()[0]
+    )
     n_lit = F.lit(float(n_nodes))
     return (
         nodes.join(h, "name", "left")
@@ -1311,60 +1318,36 @@ def maximal_independent_set(edges: DataFrame, rounds: int = 4) -> DataFrame:
     return _union_all([undecided, *decided])
 
 
-def butterflies(
-    incid: DataFrame,
-    left_col: str = "doc_id",
-    right_col: str = "shingle",
-    min_df: int = 2,
-    max_df: int = 50,
-) -> DataFrame:
-    """Per-left-vertex butterfly (bipartite 4-cycle) counts over a distinct
-    incidence frame — the bipartite cousin of `triangle_stats`. A butterfly
-    (d1, d2, s1, s2) is two left vertices sharing two right vertices: the
-    cohesion motif of a doc<->shingle blocking graph (many butterflies
-    between two docs = robust near-duplicate evidence; the Sanei-Mehri
-    et al. 2018 vertex-priority counting identity: for each left pair with
-    c common right-neighbors, C(c, 2) butterflies).
+def butterflies(incid: DataFrame) -> DataFrame:
+    """Per-document butterfly (bipartite 4-cycle) counts over a distinct
+    (doc_id, shingle) incidence frame — the bipartite cousin of
+    `triangle_stats`. A butterfly (d1, d2, s1, s2) is two documents sharing
+    two shingles: the cohesion motif of a doc<->shingle blocking graph
+    (many butterflies between two docs = robust near-duplicate evidence;
+    the Sanei-Mehri et al. 2018 vertex-priority counting identity: for
+    each document pair with n common shingles, C(n, 2) butterflies).
 
-    Scale shape: wedges are enumerated from the RIGHT side (per-shingle doc
-    pairs), whose fan-out is hard-capped by the df window [min_df, max_df]
-    — the identical rare-blocking bound every dedup join here uses — so
-    the self-join is never all-pairs; the common-neighbor count c and
-    c*(c-1)/2 are pure BIGINT algebra (no floats anywhere). The filtered
-    incidence is pinned once ahead of its self-join. Output:
-    (doc_id, n_copair, n_bfly) for left vertices in >= 1 butterfly.
+    Scale shape: wedges are enumerated from the shingle side by
+    `dedup.rare_pairs`, so only shingles inside the dedup family's df
+    window (2 <= df <= dedup.MAX_SHINGLE_DF) pair documents and the
+    self-join is never all-pairs; the common-shingle count n and
+    n*(n-1)/2 are pure BIGINT algebra (no floats anywhere). Output:
+    (doc_id, n_copair, n_bfly) for documents in >= 1 butterfly.
     """
-    d, s = left_col, right_col
-    # pin the incidence before deriving rare + the filter join from it —
-    # unpinned, the df aggregate and the join branch each re-run the
-    # corpus scan/explode during ir's own materialization (the
-    # shingle_overlap_edges precedent)
-    incid = incid.select(d, s).localCheckpoint()
-    rare = (
-        incid.groupBy(s)
-        .agg(F.count(F.lit(1)).alias("df_"))
-        .where((F.col("df_") >= min_df) & (F.col("df_") <= max_df))
-        .select(s)
-    )
-    ir = incid.join(rare, s).localCheckpoint()
-    l = ir.select(F.col(d).alias("a"), s)
-    r = ir.select(F.col(d).alias("b"), s)
-    pairs = (
-        l.join(r, [s])
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
+    # pin the incidence before rare_pairs derives the df aggregate and the
+    # filter join from it — unpinned, each re-runs the corpus scan/explode
+    # during the filtered side's own materialization
+    pairs = rare_pairs(incid.select("doc_id", "shingle").localCheckpoint())
     bf = pairs.select(
         "a",
         "b",
-        F.expr("(c * (c - 1)) div 2").alias("bfly"),
-        F.when(F.col("c") >= 2, F.lit(1)).otherwise(F.lit(0)).alias("cop"),
+        F.expr("(n * (n - 1)) div 2").alias("bfly"),
+        F.when(F.col("n") >= 2, F.lit(1)).otherwise(F.lit(0)).alias("cop"),
     )
     per = (
-        bf.select(F.col("a").alias(d), "bfly", "cop")
-        .unionAll(bf.select(F.col("b").alias(d), "bfly", "cop"))
-        .groupBy(d)
+        bf.select(F.col("a").alias("doc_id"), "bfly", "cop")
+        .unionAll(bf.select(F.col("b").alias("doc_id"), "bfly", "cop"))
+        .groupBy("doc_id")
         .agg(
             F.sum("cop").cast("long").alias("n_copair"),
             F.sum("bfly").cast("long").alias("n_bfly"),

@@ -1,6 +1,7 @@
-"""The MinHash-LSH family against its DuckDB oracles: every leaf built on
-minhash_band_pairs must return the oracle's row count and value hash on
-the sf0.01 documents table."""
+"""The dedup families against their DuckDB oracles: every leaf built on
+minhash_band_pairs, and every leaf built on the rare-shingle blocking
+(dedup.rare_pairs / shingle_sets), must return the oracle's row count and
+value hash on the sf0.01 documents table."""
 
 from __future__ import annotations
 
@@ -17,6 +18,13 @@ MINHASH_LEAVES = [
     "dedup_cluster",
     "curate_docs",
 ]
+RARE_SHINGLE_LEAVES = [
+    "dedup_ngram_jaccard",
+    "dedup_containment",
+    "dedup_lcs_run",
+    "kg_butterflies",
+    "sample_coverage",
+]
 
 
 @pytest.fixture(scope="module")
@@ -32,6 +40,16 @@ def duck():
 @pytest.mark.skipif(not os.path.isdir(SF), reason="sf0.01 testdata missing")
 @pytest.mark.parametrize("leaf", MINHASH_LEAVES)
 def test_minhash_leaf_matches_oracle(spark, duck, leaf, monkeypatch):
+    _check_leaf(spark, duck, leaf, monkeypatch)
+
+
+@pytest.mark.skipif(not os.path.isdir(SF), reason="sf0.01 testdata missing")
+@pytest.mark.parametrize("leaf", RARE_SHINGLE_LEAVES)
+def test_rare_shingle_leaf_matches_oracle(spark, duck, leaf, monkeypatch):
+    _check_leaf(spark, duck, leaf, monkeypatch)
+
+
+def _check_leaf(spark, duck, leaf, monkeypatch):
     import __spark_entry__ as e
     from tools.check_oracle import value_hash
 

@@ -1237,8 +1237,8 @@ def _brute_butterflies(incid):
 
 def test_butterflies_known_answer_and_brute_force(spark):
     # K_{2,2} on (1,2)x(a,b) = exactly 1 butterfly; doc 3 shares only one
-    # shingle with each -> in no butterfly; shingle 'z' is df=1 (dropped
-    # by min_df); 'w' has df=4 but stays under max_df
+    # shingle with each -> in no butterfly; shingle 'z' is df=1 (below
+    # the window); 'w' has df=4 but stays under MAX_SHINGLE_DF
     incid = [
         (1, "a"), (1, "b"), (2, "a"), (2, "b"),
         (3, "a"), (3, "z"),
@@ -1254,12 +1254,17 @@ def test_butterflies_known_answer_and_brute_force(spark):
     assert got == [(1, 2, 4), (2, 2, 4), (3, 2, 2)]
 
 
-def test_butterflies_df_cap_drops_frequent_shingles(spark):
-    # with max_df=2 the df-3 shingle is excluded and no butterfly survives
+def test_butterflies_df_cap_drops_frequent_shingles(spark, monkeypatch):
+    # with the cap at 2 the df-3 shingles are excluded and no butterfly
+    # survives
+    from medical_doc_knowledge_graph_system_spark.functions import dedup
+
     incid = [(1, "a"), (2, "a"), (3, "a"), (1, "b"), (2, "b"), (3, "b")]
     df = spark.createDataFrame(incid, "doc_id bigint, shingle string")
-    assert butterflies(df, max_df=2).count() == 0
-    assert butterflies(df, max_df=3).count() == 3
+    monkeypatch.setattr(dedup, "MAX_SHINGLE_DF", 2)
+    assert butterflies(df).count() == 0
+    monkeypatch.setattr(dedup, "MAX_SHINGLE_DF", 3)
+    assert butterflies(df).count() == 3
 
 
 # ── greedy_coloring ──────────────────────────────────────────────────────────

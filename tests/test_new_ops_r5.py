@@ -1,91 +1,22 @@
-"""Late-r5 operators: prefix-filter set-similarity join (losslessness vs
-brute force), quantized Lloyd k-means (python-simulator equality,
+"""Late-r5 operators: quantized Lloyd k-means (python-simulator equality,
 partitioning invariance, known answer), daily gap fill (known answer,
 LOCF), deterministic hash split (partitioning invariance, census), and
-the CMS cells/probe refactor (composition identity)."""
+the CMS cells/probe refactor (composition identity). The prefix-filter
+tests live in test_dedup.py."""
 
 from __future__ import annotations
 
 import hashlib
-from itertools import combinations
 
 from pyspark.sql import functions as F
 
 from medical_doc_knowledge_graph_system_spark.functions.curate import hash_split
-from medical_doc_knowledge_graph_system_spark.functions.dedup import (
-    prefix_filter_pairs,
-)
 from medical_doc_knowledge_graph_system_spark.functions.simsearch import (
     kmeans_lloyd_quantized,
 )
 from medical_doc_knowledge_graph_system_spark.operators.timeseries import (
     gapfill_daily,
 )
-
-
-# ── prefix filter ───────────────────────────────────────────────────────────
-
-
-def _brute_jaccard_pairs(docs, t_num, t_den):
-    toks = {i: set(t.lower().strip().split(" ")) for i, t in docs}
-    out = set()
-    for a, b in combinations(sorted(toks), 2):
-        o = len(toks[a] & toks[b])
-        na, nb = len(toks[a]), len(toks[b])
-        if t_den * o >= t_num * (na + nb - o):
-            out.add((a, b, o, na, nb))
-    return out
-
-
-def test_prefix_filter_equals_brute_force(spark):
-    # near-dup cluster, an embedded overlap, and unrelated docs; repeated
-    # tokens exercise the distinct-token contract
-    docs = [
-        (1, "the cat sat on the mat"),
-        (2, "the cat sat on a mat"),
-        (3, "the cat sat on the mat today"),
-        (4, "completely different words entirely here"),
-        (5, "different words here"),
-        (6, "the the the cat cat mat sat on"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        (r.doc_a, r.doc_b, r.n_inter, r.n_a, r.n_b)
-        for r in prefix_filter_pairs(df, t_num=3, t_den=5).collect()
-    }
-    assert got == _brute_jaccard_pairs(docs, 3, 5)
-    assert got  # non-vacuous
-
-
-def test_prefix_filter_threshold_boundary_is_integer_exact(spark):
-    # J exactly t: o=3, na=nb=4 -> union=5, J=3/5 — must be KEPT (>=)
-    docs = [(1, "a b c d"), (2, "a b c e")]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    rows = prefix_filter_pairs(df, t_num=3, t_den=5).collect()
-    assert len(rows) == 1 and rows[0].jaccard == 0.6
-    # and J just below t with the next-smaller overlap is dropped
-    docs2 = [(1, "a b c d x"), (2, "a b c e y")]
-    df2 = spark.createDataFrame(docs2, "doc_id long, text string")
-    assert prefix_filter_pairs(df2, t_num=3, t_den=5).count() == 0
-
-
-def test_prefix_filter_partitioning_invariance(spark):
-    docs = [(i, f"tok{i % 4} common shared words w{i % 3}") for i in range(24)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    a = {tuple(r) for r in prefix_filter_pairs(df, t_num=1, t_den=3).collect()}
-    b = {
-        tuple(r)
-        for r in prefix_filter_pairs(df.repartition(7), t_num=1, t_den=3).collect()
-    }
-    assert a == b and a == _brute_jaccard_pairs_full(docs, 1, 3)
-
-
-def _brute_jaccard_pairs_full(docs, t_num, t_den):
-    base = _brute_jaccard_pairs(docs, t_num, t_den)
-    out = set()
-    for a, b, o, na, nb in base:
-        out.add((a, b, o, na, nb, round(o / (na + nb - o), 4)))
-    return out
 
 
 # ── quantized k-means ───────────────────────────────────────────────────────

@@ -1,66 +1,15 @@
-"""Ninth-session r5 operators: SymSpell edit-distance blocking
-(completeness vs brute-force levenshtein, verify soundness) and BM25 top-k
-(python-reference equality on the quantized scores). The butterfly-count
-tests live in test_graph_analytics.py."""
+"""Ninth-session r5 operators: BM25 top-k (python-reference equality on
+the quantized scores), OHLC, Welch, BPE merges and Wilson. The
+butterfly-count tests live in test_graph_analytics.py, the edit-distance
+and chunk-dedup tests in test_dedup.py."""
 
 from __future__ import annotations
 
 import math
-from itertools import combinations
 
 from pyspark.sql import functions as F
 
 from medical_doc_knowledge_graph_system_spark.functions.corpusstats import bm25_topk
-from medical_doc_knowledge_graph_system_spark.functions.dedup import editdist_pairs
-
-
-# ── edit distance ────────────────────────────────────────────────────────────
-
-
-def _lev(a: str, b: str) -> int:
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(
-                min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
-            )
-        prev = cur
-    return prev[-1]
-
-
-def test_editdist_pairs_complete_vs_brute_force(spark):
-    # substitutions, inserts, deletes, a shared-prefix serial-id family,
-    # and strings >1 apart — the blocking must find EXACTLY the <=1 set
-    names = [
-        "alpha", "alpho",            # substitution
-        "beta", "betas",             # insert at end
-        "gamma", "gama",             # delete
-        "id#001", "id#002", "id#011", "id#101",  # serial ids
-        "zeta", "omega",             # unrelated
-        "x", "y", "xy",              # short strings ('' variant bucket)
-    ]
-    df = spark.createDataFrame([(n,) for n in names], "name string")
-    got = sorted(
-        (r.name_a, r.name_b, r.dist)
-        for r in editdist_pairs(df, "name").collect()
-    )
-    want = sorted(
-        (a, b, _lev(a, b))
-        for a, b in combinations(sorted(names), 2)
-        if _lev(a, b) <= 1
-    )
-    assert got == want
-    # sanity: the brute-force set is non-trivial in every edit class
-    assert ("alpha", "alpho", 1) in want and ("x", "xy", 1) in want
-
-
-def test_editdist_pairs_dedups_multi_variant_candidates(spark):
-    # "aa"/"ab" share TWO deletion variants ('a' from each position on one
-    # side, plus themselves); the pair must still appear exactly once
-    df = spark.createDataFrame([("aa",), ("ab",)], "name string")
-    rows = editdist_pairs(df, "name").collect()
-    assert [(r.name_a, r.name_b, r.dist) for r in rows] == [("aa", "ab", 1)]
 
 
 # ── BM25 ────────────────────────────────────────────────────────────────────
@@ -196,46 +145,6 @@ def test_events_ab_welch_matches_numpy(spark, tmp_path):
     )
     assert (r.type_a, r.type_b, r.n_a, r.n_b) == ("A", "B", 200, 150)
     assert abs(r.t_welch - t) < 2e-4 and abs(r.df_welch - nu) < 2e-3
-
-
-# ── chunk dedup ─────────────────────────────────────────────────────────────
-
-
-def test_chunk_dedup_keeps_first_occurrence_and_reassembles(spark):
-    from medical_doc_knowledge_graph_system_spark.functions.dedup import (
-        chunk_dedup,
-    )
-
-    w = 4  # small width so the fixture stays readable
-    boiler = "b1 b2 b3 b4"          # the duplicated chunk
-    uniq0 = "a1 a2 a3 a4"
-    uniq2 = "c1 c2 c3"              # short tail chunk
-    docs = [
-        (0, f"{uniq0} {boiler}"),   # first occurrence of boiler (doc 0, idx 1)
-        (1, boiler),                # fully duplicated -> new_text ''
-        (2, f"{boiler} {uniq2}"),   # boiler dropped, tail kept
-    ]
-    df = spark.createDataFrame(docs, "doc_id bigint, text string")
-    got = {
-        r.doc_id: (r.new_text, r.n_kept, r.n_dropped)
-        for r in chunk_dedup(df, width=w).collect()
-    }
-    assert got[0] == (f"{uniq0} {boiler}", 2, 0)
-    assert got[1] == ("", 0, 1)
-    assert got[2] == (uniq2, 1, 1)
-
-
-def test_chunk_dedup_within_doc_repeat(spark):
-    from medical_doc_knowledge_graph_system_spark.functions.dedup import (
-        chunk_dedup,
-    )
-
-    # the same chunk twice INSIDE one doc: second occurrence dropped
-    df = spark.createDataFrame(
-        [(7, "x1 x2 x1 x2")], "doc_id bigint, text string"
-    )
-    [r] = chunk_dedup(df, width=2).collect()
-    assert (r.new_text, r.n_kept, r.n_dropped) == ("x1 x2", 1, 1)
 
 
 # ── BPE merges ──────────────────────────────────────────────────────────────

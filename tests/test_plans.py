@@ -1209,27 +1209,43 @@ def test_triangle_wedge_join_runs_once(spark, monkeypatch, op):
     assert sum(len(wedge.findall(p)) for p in plans) == 1, plans
 
 
-def test_no_parameter_forces_a_plan_path():
-    """Driver-vs-distributed and broadcast-vs-shuffle choices follow the
-    input size alone (session.driver_rows, resolve.REMAP_BROADCAST_MAX);
-    tests move the bound with monkeypatch. No function in the package takes
-    a parameter that forces one path."""
+def _package_defs_taking(params):
+    """'file:line def(param)' for every function in the package that takes
+    one of ``params``."""
     import ast
     import pathlib
 
     import medical_doc_knowledge_graph_system_spark as pkg
 
-    forcing = {
-        "force_distributed", "driver_threshold", "resolve_driver_threshold",
-        "broadcast_threshold", "force_shuffle",
-    }
     hits = []
     for path in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py")):
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 a = node.args
                 names = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
-                hits += [f"{path.name}:{node.lineno} {node.name}({n})" for n in names & forcing]
+                hits += [f"{path.name}:{node.lineno} {node.name}({n})" for n in names & params]
+    return hits
+
+
+def test_no_parameter_forces_a_plan_path():
+    """Driver-vs-distributed and broadcast-vs-shuffle choices follow the
+    input size alone (session.driver_rows, resolve.REMAP_BROADCAST_MAX);
+    tests move the bound with monkeypatch. No function in the package takes
+    a parameter that forces one path."""
+    forcing = {
+        "force_distributed", "driver_threshold", "resolve_driver_threshold",
+        "broadcast_threshold", "force_shuffle",
+    }
+    hits = _package_defs_taking(forcing)
+    assert not hits, hits
+
+
+def test_no_operator_takes_a_shingle_df_window():
+    """The rare-shingle blocking window is one module constant,
+    dedup.MAX_SHINGLE_DF, read at call time; butterflies reads a fixed
+    (doc_id, shingle) incidence. No function takes a per-call df bound or
+    incidence column names."""
+    hits = _package_defs_taking({"max_shingle_df", "min_df", "max_df", "left_col", "right_col"})
     assert not hits, hits
 
 
@@ -1357,6 +1373,33 @@ def test_graph_loop_builds_without_probe_action(spark, monkeypatch, op):
         for name in ("count", "take", "isEmpty"):
             m.setattr(df_cls, name, probe)
         out = calls[op]()
+    assert out.collect()
+
+
+def test_hits_reads_both_sums_in_one_action(spark, monkeypatch):
+    """hits takes the hub and authority L1 sums from one aggregate over
+    the last round's pins: building it runs at most one action."""
+    from medical_doc_knowledge_graph_system_spark.operators import graph_analytics as ga
+
+    und = _seeded_graph(spark)
+    directed = und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    df_cls = type(spark.range(1))
+    calls = []
+
+    def counted(name):
+        action = getattr(df_cls, name)
+
+        def run(self, *args, **kwargs):
+            calls.append(name)
+            return action(self, *args, **kwargs)
+
+        return run
+
+    with monkeypatch.context() as m:
+        for name in ("collect", "count", "take", "first", "head", "toPandas", "isEmpty"):
+            m.setattr(df_cls, name, counted(name))
+        out = ga.hits(directed)
+    assert len(calls) <= 1, calls
     assert out.collect()
 
 

@@ -165,92 +165,6 @@ def test_msttr_short_doc_absent(spark):
     assert rows[2]["msttr"] == 1 / 25  # one segment, one type
 
 
-# ── lcs_run_pairs ────────────────────────────────────────────────────────────
-
-
-def _lcs_tokens(a, b):
-    """Brute-force longest common token substring length."""
-    ta, tb = a.split(" "), b.split(" ")
-    best = 0
-    for i in range(len(ta)):
-        for j in range(len(tb)):
-            k = 0
-            while i + k < len(ta) and j + k < len(tb) and ta[i + k] == tb[j + k]:
-                k += 1
-            best = max(best, k)
-    return best
-
-
-def test_lcs_run_matches_bruteforce(spark):
-    from medical_doc_knowledge_graph_system_spark.functions.dedup import (
-        lcs_run_pairs,
-    )
-
-    shared = "the quick brown fox jumps over the lazy dog tonight"
-    d1 = "alpha beta " + shared + " gamma delta epsilon zeta"
-    d2 = "one two three " + shared + " four five six seven"
-    df = spark.createDataFrame(
-        [(1, d1), (2, d2)], "doc_id long, text string"
-    )
-    rows = lcs_run_pairs(df, min_shared=3, max_shingle_df=50).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["a"], r["b"]) == (1, 2)
-    assert r["lcs_tokens"] == _lcs_tokens(d1.lower(), d2.lower())
-
-
-def test_lcs_run_scattered_shingles_short_run(spark):
-    from medical_doc_knowledge_graph_system_spark.functions.dedup import (
-        lcs_run_pairs,
-    )
-
-    # share three DISBANDED 3-grams (template-ish), no 4-token run
-    d1 = "aa bb cc x1 dd ee ff x2 gg hh ii x3"
-    d2 = "aa bb cc y1 dd ee ff y2 gg hh ii y3"
-    df = spark.createDataFrame(
-        [(1, d1), (2, d2)], "doc_id long, text string"
-    )
-    r = lcs_run_pairs(df, min_shared=3, max_shingle_df=50).collect()[0]
-    assert r["lcs_tokens"] == 3  # runs never chain across the x/y breaks
-
-
-# ── cdc_chunk_dedup ──────────────────────────────────────────────────────────
-
-
-def test_cdc_finds_shared_segment_despite_head_edit(spark):
-    from medical_doc_knowledge_graph_system_spark.functions.dedup import (
-        cdc_chunk_dedup,
-    )
-
-    import random as _r
-
-    rng = _r.Random(41)
-    body = " ".join(rng.choice("abcdefghijklmnop") + str(i) for i in range(120))
-    # same body, one doc with a head insertion that shifts every fixed window
-    df = spark.createDataFrame(
-        [(1, body), (2, "inserted head tokens " + body)],
-        "doc_id long, text string",
-    )
-    rows = cdc_chunk_dedup(df, min_docs=2).collect()
-    # content-defined cut points inside the body are identical after the
-    # first post-edit boundary, so interior chunks still collide
-    assert len(rows) >= 1
-    assert all(r["n_docs"] == 2 for r in rows)
-
-
-def test_cdc_disjoint_docs_share_nothing(spark):
-    from medical_doc_knowledge_graph_system_spark.functions.dedup import (
-        cdc_chunk_dedup,
-    )
-
-    df = spark.createDataFrame(
-        [(1, " ".join(f"a{i}" for i in range(80))),
-         (2, " ".join(f"b{i}" for i in range(80)))],
-        "doc_id long, text string",
-    )
-    assert cdc_chunk_dedup(df, min_docs=2).count() == 0
-
-
 # ── ses_dyadic ───────────────────────────────────────────────────────────────
 
 
@@ -506,55 +420,6 @@ def test_mde_matches_formula(spark):
     assert abs(got["mde"] - 2.8 * math.sqrt(2 * var / (n // 2))) < 1e-9
 
 
-# ── simhash_hamming_pairs ────────────────────────────────────────────────────
-
-
-def test_simhash_pairs_match_bruteforce(spark):
-    from medical_doc_knowledge_graph_system_spark.functions.dedup import (
-        simhash64,
-        simhash_hamming_pairs,
-    )
-
-    rng = random.Random(67)
-    vocab = [f"w{i}" for i in range(200)]
-    docs = []
-    for i in range(30):
-        docs.append((i, " ".join(rng.choice(vocab) for _ in range(40))))
-    # plant two docs with the SAME distinct token set (simhash reads the
-    # distinct set, so their hamming is exactly 0) but different order and
-    # multiplicity — the canonical reordered-boilerplate near-dup
-    base_toks = [rng.choice(vocab) for _ in range(40)]
-    docs.append((100, " ".join(base_toks)))
-    docs.append((101, " ".join(reversed(base_toks)) + " " + base_toks[0]))
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    hashes = {r["doc_id"]: r["simhash"] for r in simhash64(df).collect()}
-    expect = sorted(
-        (a, b, bin(hashes[a] ^ hashes[b]).count("1"))
-        for a in hashes
-        for b in hashes
-        if a < b and bin(hashes[a] ^ hashes[b]).count("1") <= 3
-    )
-    got = sorted(
-        (r["a"], r["b"], r["hamming"])
-        for r in simhash_hamming_pairs(df, max_hamming=3).collect()
-    )
-    assert got == expect
-    assert (100, 101) in {(a, b) for a, b, _ in got}  # planted pair found
-
-
-def test_simhash_pairs_pigeonhole_guard(spark):
-    import pytest as _pytest
-
-    from medical_doc_knowledge_graph_system_spark.functions.dedup import (
-        simhash_hamming_pairs,
-    )
-
-    df_schema = "doc_id long, text string"
-    df = None  # never evaluated — the assert fires first
-    with _pytest.raises(AssertionError):
-        simhash_hamming_pairs(df, max_hamming=4, bands=4)
-
-
 # ── pettitt_test ─────────────────────────────────────────────────────────────
 
 
@@ -785,49 +650,3 @@ def test_detrended_acf_matches_bruteforce(spark):
     assert abs(got["r1"] - c1 / c0) < 1e-4
 
 
-# ── coverage_select ──────────────────────────────────────────────────────────
-
-
-def test_coverage_select_matches_greedy(spark):
-    from medical_doc_knowledge_graph_system_spark.functions.curate import (
-        coverage_select,
-    )
-
-    rng = random.Random(101)
-    vocab = [f"w{i}" for i in range(60)]
-    docs = [
-        (i, " ".join(rng.choice(vocab) for _ in range(30))) for i in range(12)
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = sorted(coverage_select(df, n_pick=4).collect(), key=lambda r: r["rank"])
-
-    def shingles(text):
-        t = text.lower().split(" ")
-        n = max(len(t) - 2, 1)
-        return {" ".join(t[i : i + 3]) for i in range(n)}
-
-    sets = {i: shingles(tx) for i, tx in docs}
-    covered = set()
-    chosen = []
-    for r in range(4):
-        best = max(
-            ((len(sets[i] - covered), -i) for i in sets if i not in chosen)
-        )
-        gain, i = best[0], -best[1]
-        chosen.append(i)
-        covered |= sets[i]
-        row = got[r]
-        assert (row["doc_id"], row["gain"]) == (i, gain)
-        assert row["cum_covered"] == len(covered)
-
-
-def test_coverage_gains_nonincreasing(spark):
-    from medical_doc_knowledge_graph_system_spark.functions.curate import (
-        coverage_select,
-    )
-
-    docs = [(i, " ".join(f"t{i}_{j}" for j in range(5 + i))) for i in range(8)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    rows = sorted(coverage_select(df, n_pick=5).collect(), key=lambda r: r["rank"])
-    gains = [r["gain"] for r in rows]
-    assert gains == sorted(gains, reverse=True)  # submodularity
