@@ -18,9 +18,10 @@ graph_analytics.butterflies) finds candidates only through shared RARE
 shingles, never all pairs: a shingle blocks when its document frequency
 lies in [2, MAX_SHINGLE_DF] (block purging, SparkER). A df-1 shingle forms
 no pair, and a frequent one would fan its bucket out quadratically. Each
-operator reads the doc-level shingle arrays from one pin (shingle_sets)
-and counts shared rare shingles per pair with one engine (rare_pairs);
-the window is a module constant read at call time, not a parameter.
+operator reads the doc-level shingle arrays from one pin (shingle_sets;
+lcs_run_pairs distincts them from its positional-gram pin) and counts
+shared rare shingles per pair with one engine (rare_pairs); the window is
+a module constant read at call time, not a parameter.
 """
 
 from __future__ import annotations
@@ -89,18 +90,23 @@ def shingles_col(text_col: str = "text", n: int = SHINGLE_N):
     textfns._ngrams_col is the ordered-multiset/full-window sibling — the
     policies differ on purpose, don't merge them."""
 
+    return F.array_distinct(grams_col(text_col, n))
+
+
+def grams_col(text_col: str = "text", n: int = SHINGLE_N):
+    """Every positional word n-gram as array<string>, in token order: gram i
+    starts at token i. A sub-n doc keeps its one partial gram."""
+
     # A lambda body re-evaluates every outer expression it references once
     # per element, so slicing tokens_col(...) inside it would re-split the
-    # text once per shingle. The one-element transform binds the split token
+    # text once per gram. The one-element transform binds the split token
     # array to `toks` once per doc: minhash_signatures on 3,000 docs went
     # 0.95 -> 0.60 s (4 cores), same shingles.
-    def shingles(toks):
+    def grams(toks):
         idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-        return F.array_distinct(
-            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-        )
+        return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
 
-    return F.transform(F.array(tokens_col(text_col)), shingles)[0]
+    return F.transform(F.array(tokens_col(text_col)), grams)[0]
 
 
 def doc_shingles(df: DataFrame, text_col: str = "text", n: int = SHINGLE_N) -> DataFrame:
@@ -932,31 +938,34 @@ def lcs_run_pairs(
     the boilerplate-vs-true-duplicate discriminator: near-dup docs share a
     long contiguous run, template docs share many scattered shingles.
 
-    Method: candidate pairs from shingle_overlap_edges (same rare-shingle
-    blocking as the Jaccard verify path — never all-pairs); for each pair,
-    the POSITIONAL n-gram matches (p in a, q in b with equal grams) lie on
+    Method: candidate pairs by the rare-shingle blocking of
+    shingle_overlap_edges, over the pair's n-gram sets; for each pair, the
+    POSITIONAL n-gram matches (p in a, q in b with equal grams) lie on
     diagonals d = p - q, and a maximal run of consecutive p on one diagonal
     of length L is a common substring of L + n - 1 tokens. Runs via
     gaps-and-islands (p - row_number per (pair, d)), max over the pair.
 
-    Scale shape: the positional-gram explode is one corpus scan; the match
-    join fans out only over blocked pairs x shared grams (bucket-capped by
-    the rare filter upstream). No global window — islands partition by
-    (pair, diagonal). Output: (a, b, lcs_tokens).
+    Scale shape: one corpus scan and one split, pinned as each document's
+    positional grams; the shingle sets (their array_distinct) and both
+    match-join legs (their posexplode) read that pin. The match join fans
+    out only over blocked pairs x shared grams (bucket-capped by the rare
+    filter). No global window — islands partition by (pair, diagonal).
+    Output: (a, b, lcs_tokens).
     """
-    pairs = shingle_overlap_edges(
-        df, text_col, min_shared=min_shared
-    ).localCheckpoint(eager=True)
-    toks = tokens_col(text_col)
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-    # both join legs (la, lb) read this frame — pin it or the corpus
-    # scan + gram explode runs twice (CLAUDE.md late-r2 ReusedExchange)
     from ..operators.skew import ensure_parallelism
 
-    pos = ensure_parallelism(df.select("doc_id", F.col(text_col))).select(
-        "doc_id", F.posexplode(grams).alias("p", "g")
-    ).localCheckpoint(eager=True)
+    grams = (
+        ensure_parallelism(df.select("doc_id", F.col(text_col)))
+        .select("doc_id", grams_col(text_col, n).alias("grams"))
+        .localCheckpoint()
+    )
+    pairs = (
+        rare_pairs(grams.select("doc_id", F.explode(F.array_distinct("grams")).alias("shingle")))
+        .where(F.col("n") >= min_shared)
+        .select("a", "b")
+        .localCheckpoint()
+    )
+    pos = grams.select("doc_id", F.posexplode("grams").alias("p", "g"))
     la = pos.select(F.col("doc_id").alias("a"), F.col("p").alias("pa"), "g")
     lb = pos.select(F.col("doc_id").alias("b"), F.col("p").alias("pb"), "g")
     # r6: no distinct — (a, b, pa, pb) rows are unique by construction

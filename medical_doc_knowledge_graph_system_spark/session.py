@@ -27,6 +27,27 @@ def _default_driver_mem() -> str:
     return f"{min(48 * 1024, phys_mb // 2)}m"
 
 
+# Entries of Spark's generated-class cache (spark.sql.codegen.cache.maxEntries,
+# default 100). A cache below a session's working set of distinct plans
+# recompiles most of them on every pass, and the JIT then warms each new
+# class from scratch. The cache evicts per segment (4 segments of
+# bound / 4), so it thrashes below its nominal size: the bound must sit
+# well above the working set. Measured on a 4-core host with
+# tools/jit_probe.py, codegen compiles per warm pass:
+#   perfbench tour (build + retrieve + graph + dedup, one session, ~332
+#   classes): 100 -> ~450, 250 -> 308, 500 / 1000 / 2000 -> 8. The 8 (remap's
+#   size probe and multi_source_shortest_paths) are new classes on every
+#   call whatever the bound.
+#   analytics (~111 classes): 100 -> 57-73, 250 / 500 / 2000 -> 0;
+#   build (~92 classes): 100 -> 38, 500 -> 4.
+# The memory cost does not show at 500: after all 294 __spark_entry__
+# gates in one session (tools/heap_probe.py --mode gates, sf0.01),
+# 100 -> 500 read Metaspace 205 -> 207 MB and CodeHeaps 129 -> 127 MB;
+# tier-1 suite peak driver RSS 4283 -> 4564 MB (one noisy run each); no
+# "CodeCache is full" in either.
+CODEGEN_CACHE_ENTRIES = 500
+
+
 def get_spark(
     app_name: str = "mdkgs_spark",
     cores: int | str | None = None,
@@ -54,6 +75,8 @@ def get_spark(
         # is the bucketing key itself, so per-partition skew is identical to
         # the bucket layout already chosen.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
+        # a static conf: it must be set before the session exists
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -1436,3 +1436,41 @@ def test_sssp_start_row_scans_no_python_rdd(spark, monkeypatch):
     scans = re.findall(r"Scan ExistingRDD\[([^\]]*)\]", plans[-1])
     assert [re.sub(r"#\w+", "", s) for s in scans] == ["x,y,w"], plans[-1]
     assert "Range" in plans[-1], plans[-1]
+
+
+def test_lcs_run_pairs_scans_the_corpus_once(spark, monkeypatch, docs):
+    """lcs_run_pairs pins each document's positional grams once: the
+    shingle sets of the candidate blocking and both legs of the match join
+    read that pin. Exactly one pin scans parquet and splits the text, and
+    the final plan does neither. Before, the shingle_sets pin and the
+    positional-gram pin each scanned and split the corpus."""
+    from medical_doc_knowledge_graph_system_spark.functions.dedup import lcs_run_pairs
+    from medical_doc_knowledge_graph_system_spark.plans.checks import (
+        physical_plan_string,
+    )
+
+    out = []
+    plans, _ = _pinned_plans(spark, monkeypatch, lambda: out.append(lcs_run_pairs(docs)))
+    assert sum("Scan parquet" in p for p in plans) == 1, plans
+    assert sum("split(" in p for p in plans) == 1, plans
+    final = physical_plan_string(out[0])
+    assert "Scan parquet" not in final and "split(" not in final, final
+
+
+def test_codegen_cache_holds_more_than_sparks_default(spark):
+    """get_spark sizes Spark's codegen cache (a static conf, fixed when the
+    session is built) to session.CODEGEN_CACHE_ENTRIES. 150 distinct small
+    plans, each collected twice: the second round compiles nothing. Under
+    Spark's default bound of 100 entries the first round evicts its own
+    classes and the second recompiles them."""
+    from medical_doc_knowledge_graph_system_spark.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    compiles = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    plans = [spark.range(10).select((F.col("id") + i).alias("v")) for i in range(150)]
+    for p in plans:
+        p.collect()
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
+    for p in plans:
+        p.collect()
+    assert compiles.METRIC_COMPILATION_TIME().getCount() - before == 0

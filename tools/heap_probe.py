@@ -1,9 +1,12 @@
-"""Driver JVM live heap across repeated KG dimension queries or pipeline passes.
+"""Driver JVM live heap and class memory across repeated queries or passes.
 
 At every checkpoint it prints one JSON line with the driver's live JVM
 heap: the smallest Runtime total-minus-free memory over 4 `System.gc()`
 calls. A heap that keeps growing with the query or pass count means
-something retains per-query state.
+something retains per-query state. Next to it go the used MB of the
+class-memory pools (Metaspace, Compressed Class Space and each CodeHeap),
+which grow with the distinct generated classes the session keeps:
+Spark's codegen cache holds up to spark.sql.codegen.cache.maxEntries.
 
 `--mode queries` (default) runs N queries, alternating `webkg.doc_mentions`
 and `webkg.doc_triples` over one `documents.parquet`. `--dims list` builds
@@ -12,10 +15,15 @@ the static dictionaries with `createDataFrame(list)` instead of
 
 `--mode pipeline` runs N `run_pipeline` passes over one seeded pages table
 (`--pages`, `--seed`), each into a fresh warehouse, after one cold pass
-that is not counted. Usage:
+that is not counted.
+
+`--mode gates` runs every `queries()` gate of `__spark_entry__` over SF_DIR
+once, in key order, in one session: the Spark side of a full
+`tools/check_oracle.py` run. Usage:
 
     python tools/heap_probe.py SF_DIR [--queries 120] [--every 20] [--dims literal|list]
     python tools/heap_probe.py --mode pipeline [--passes 8] [--every 2] [--pages 2000] [--seed 7]
+    python tools/heap_probe.py SF_DIR --mode gates [--every 50] [--cores 16]
 """
 
 from __future__ import annotations
@@ -52,6 +60,17 @@ def live_heap_mb(spark) -> float:
     return min(used) / 2**20
 
 
+def class_memory_mb(spark) -> dict[str, float]:
+    """Used MB of each non-heap memory pool: Metaspace, Compressed Class
+    Space and the CodeHeaps (JIT-compiled code)."""
+    jvm = spark.sparkContext._jvm
+    return {
+        pool.getName(): round(pool.getUsage().getUsed() / 2**20, 1)
+        for pool in jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans()
+        if str(pool.getType()) == "Non-heap memory"
+    }
+
+
 def query_steps(spark, args):
     """One step per query; the number of steps."""
     if args.sf_dir is None:
@@ -81,20 +100,31 @@ def pipeline_steps(spark, args, tmp: str):
     return step, args.passes
 
 
+def gate_steps(spark, args):
+    """One step per queries() gate, collected as check_oracle collects it;
+    the number of steps."""
+    import __spark_entry__
+
+    if args.sf_dir is None:
+        sys.exit("--mode gates needs SF_DIR")
+    gates = list(__spark_entry__.queries().values())
+    return (lambda i: gates[i - 1](spark, args.sf_dir).collect()), len(gates)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("sf_dir", nargs="?", help="directory holding documents.parquet (queries mode)")
-    ap.add_argument("--mode", choices=("queries", "pipeline"), default="queries")
+    ap.add_argument("--mode", choices=("queries", "pipeline", "gates"), default="queries")
     ap.add_argument("--queries", type=int, default=120)
     ap.add_argument("--dims", choices=("literal", "list"), default="literal")
     ap.add_argument("--passes", type=int, default=8)
     ap.add_argument("--pages", type=int, default=2000)
     ap.add_argument("--seed", type=int, default=7)
     ap.add_argument("--every", type=int, default=None,
-                    help="steps per checkpoint (default 20 queries / 2 passes)")
+                    help="steps per checkpoint (default 20 queries / 2 passes / 50 gates)")
     ap.add_argument("--cores", type=int, default=4)
     args = ap.parse_args()
-    every = args.every or (20 if args.mode == "queries" else 2)
+    every = args.every or {"queries": 20, "pipeline": 2, "gates": 50}[args.mode]
 
     spark = get_spark(cores=args.cores)
     tmp = tempfile.mkdtemp(prefix="heap_probe_")
@@ -102,12 +132,16 @@ def main() -> None:
         if args.mode == "queries":
             step, n = query_steps(spark, args)
             record = lambda i: {"dims": args.dims, "queries": i}
-        else:
+        elif args.mode == "pipeline":
             step, n = pipeline_steps(spark, args, tmp)
             record = lambda i: {"mode": "pipeline", "pages": args.pages, "passes": i}
+        else:
+            step, n = gate_steps(spark, args)
+            record = lambda i: {"mode": "gates", "gates": i}
 
         def report(i: int) -> None:
-            print(json.dumps({**record(i), "heap_mb": round(live_heap_mb(spark), 1)}), flush=True)
+            heap = round(live_heap_mb(spark), 1)
+            print(json.dumps({**record(i), "heap_mb": heap, **class_memory_mb(spark)}), flush=True)
 
         report(0)
         for i in range(1, n + 1):
